@@ -1,9 +1,9 @@
 package graft.pipeline
 
-import java.time.LocalDate
+import java.time.{LocalDate, ZoneOffset}
 import java.time.format.DateTimeFormatter
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.UnitConversions
 
@@ -26,6 +26,14 @@ import graft.functions.UnitConversions
   *    safety); `false` is the 100 TB backfill path — one job writes every
   *    pending day (each day one partition), then the watermark advances
   *    once.
+  *
+  * A run reads only the pending days, never the history: like the
+  * reference's `WHERE dateTime BETWEEN ? AND ?` (aristoteles.py:303-306,
+  * :340-345), the [first pending day, yesterday] range is filtered before
+  * the station union is cached, so it pushes down into each station's
+  * scan (SQLite b-tree pruning, parquet row-group filters). One count of
+  * samples per (UTC day, station) over that slice then answers the gate,
+  * the empty-day skip (S16) and which days the backfill writes.
   */
 object ArchiveJob {
 
@@ -59,6 +67,17 @@ object ArchiveJob {
       samplesYesterday: Map[String, Long])
 
   private val DayFmt = DateTimeFormatter.BASIC_ISO_DATE
+  private val MonthFmt = DateTimeFormatter.ofPattern("yyyyMM")
+
+  /** Epoch-second bounds of the UTC days `from`..`to`: 00:00:00 of
+    * `from` through 23:59:59 of `to`, for an inclusive BETWEEN. */
+  private def dayBounds(from: LocalDate, to: LocalDate): (Long, Long) =
+    (from.atStartOfDay(ZoneOffset.UTC).toEpochSecond,
+     to.atStartOfDay(ZoneOffset.UTC).toEpochSecond + 86399)
+
+  /** The UTC epoch day a `dateTime` (epoch seconds) falls on: the one
+    * day key of the gate, the empty-day skip and the partition labels. */
+  private def epochDay(dateTime: Column): Column = floor(dateTime / 86400)
 
   /** One station's archive table in WviewSchema (S1). A wview SQLite
     * database (the reference's actual input, aristoteles.py:229-230 —
@@ -102,13 +121,18 @@ object ArchiveJob {
       (col("dateTime") +: col("usUnits") +: col("station") +: converted): _*)
   }
 
+  /** Sample counts per (UTC epoch day, station): columns `epochDay`,
+    * `station`, `n`, only for pairs present in the data. */
+  private def stationDayCounts(df: DataFrame): DataFrame =
+    df.groupBy(epochDay(col("dateTime")).as("epochDay"), col("station"))
+      .agg(count(lit(1)).as("n"))
+
   /** Per-station sample counts for one UTC day, inclusive bounds (S2/S5).
     * Returns counts only for stations present in the data. */
   def dayCounts(df: DataFrame, day: LocalDate): DataFrame = {
-    val start = day.atStartOfDay(java.time.ZoneOffset.UTC).toEpochSecond
-    val stop = start + 86399 // 23:59:59 — BETWEEN is inclusive-inclusive
-    df.filter(col("dateTime").between(start, stop))
-      .groupBy(col("station")).agg(count(lit(1)).as("n"))
+    val (start, stop) = dayBounds(day, day)
+    stationDayCounts(df.filter(col("dateTime").between(start, stop)))
+      .select(col("station"), col("n"))
   }
 
   /** S9/S17 — completeness gate: every configured station must have
@@ -121,7 +145,7 @@ object ArchiveJob {
     df.agg(min(col("dateTime"))).collect()(0) match {
       case row if row.isNullAt(0) => None
       case row => Some(java.time.Instant.ofEpochSecond(row.getLong(0))
-        .atZone(java.time.ZoneOffset.UTC).toLocalDate)
+        .atZone(ZoneOffset.UTC).toLocalDate)
     }
 
   /** E2 — state initialization (aristoteles.py:246-265): min first day
@@ -140,12 +164,18 @@ object ArchiveJob {
   /** The day-partitioned conversion output for a set of days, ready for
     * the partitioned sink: adds month=YYYYMM / day=YYYYMMDD columns. */
   def outputFor(df: DataFrame, from: LocalDate, to: LocalDate): DataFrame = {
-    val start = from.atStartOfDay(java.time.ZoneOffset.UTC).toEpochSecond
-    val stop = to.atStartOfDay(java.time.ZoneOffset.UTC).toEpochSecond + 86399
-    convertUnits(df.filter(col("dateTime").between(start, stop)))
-      .withColumn("day", date_format(timestamp_seconds(col("dateTime")), "yyyyMMdd"))
-      .withColumn("month", substring(col("day"), 1, 6))
+    val (start, stop) = dayBounds(from, to)
+    withDayLabels(convertUnits(df.filter(col("dateTime").between(start, stop))))
   }
+
+  /** Adds the sink's partition labels day=YYYYMMDD and month=YYYYMM from
+    * each sample's UTC day. A label from the session time zone would
+    * disagree with the UTC day ranges, and a dynamic overwrite of one
+    * day would then replace part of its neighbour's partition. */
+  private[graft] def withDayLabels(df: DataFrame): DataFrame =
+    df.withColumn("day", date_format(
+        date_from_unix_date(epochDay(col("dateTime")).cast("int")), "yyyyMMdd"))
+      .withColumn("month", substring(col("day"), 1, 6))
 
   /** Write one or more days to the archive, one parquet partition (and
     * one file) per day — the columnar analog of one .h5 per day (S14).
@@ -175,8 +205,7 @@ object ArchiveJob {
     * is there). */
   private def writeDaysLog(spark: SparkSession, out: DataFrame,
       cfg: JobConfig, from: LocalDate, to: LocalDate): Boolean = {
-    val start = from.atStartOfDay(java.time.ZoneOffset.UTC).toEpochSecond
-    val stop = to.atStartOfDay(java.time.ZoneOffset.UTC).toEpochSecond + 86399
+    val (start, stop) = dayBounds(from, to)
     val batchId = from.format(DayFmt).toLong * 100000000L + to.format(DayFmt).toLong
     graft.operators.CommitLog.replaceRange(spark, cfg.archivePath,
       out.repartition(col("month"), col("day"))
@@ -193,20 +222,26 @@ object ArchiveJob {
       perDayCommit: Boolean = true): RunResult = {
 
     val yesterday = stopDay.getOrElse(today.minusDays(1))
-    val stateOpt = Watermark.read(cfg.statePath)
-    if (stateOpt.isEmpty) {
-      // The reference emits metrics on EVERY terminal path, including the
-      // bad-state abort (aristoteles/aristoteles.py:269-271 -> prom_and_exit
-      // :484-485): an operator watching aristoteles_status must see the 3.
-      publish(cfg, 3, 0, None, yesterday, Map.empty)
-      return RunResult(3, 0, None, yesterday, Map.empty)
+    val firstDay = Watermark.read(cfg.statePath) match {
+      case Some(d) => d
+      case None =>
+        // The reference emits metrics on EVERY terminal path, including the
+        // bad-state abort (aristoteles/aristoteles.py:269-271 -> prom_and_exit
+        // :484-485): an operator watching aristoteles_status must see the 3.
+        publish(cfg, 3, 0, None, yesterday, Map.empty)
+        return RunResult(3, 0, None, yesterday, Map.empty)
     }
-    val firstDay = stateOpt.get
 
-    val df = unionStations(spark, cfg).cache()
+    // only the pending days are read (see the object doc); with nothing
+    // pending the range is yesterday alone, for the gauges
+    val (lo, hi) = dayBounds(if (firstDay.isAfter(yesterday)) yesterday else firstDay, yesterday)
+    val df = unionStations(spark, cfg).filter(col("dateTime").between(lo, hi)).cache()
     try {
-      val yCounts = dayCounts(df, yesterday).collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      // the one control-plane read: samples per (UTC day, station)
+      val counts: Map[LocalDate, Map[String, Long]] = stationDayCounts(df).collect()
+        .groupBy(r => LocalDate.ofEpochDay(r.getLong(0)))
+        .map { case (d, rs) => d -> rs.map(r => r.getString(1) -> r.getLong(2)).toMap }
+      val yCounts = counts.getOrElse(yesterday, Map.empty[String, Long])
 
       if (firstDay.isAfter(yesterday)) {
         publish(cfg, 0, 0, Some(firstDay), yesterday, yCounts)
@@ -218,41 +253,32 @@ object ArchiveJob {
         return RunResult(2, 0, Some(firstDay), yesterday, yCounts)
       }
 
-      val days = Iterator.iterate(firstDay)(_.plusDays(1))
-        .takeWhile(!_.isAfter(yesterday)).toSeq
+      // S16: days without samples are skipped (no write, no state advance)
+      val daysPresent = Iterator.iterate(firstDay)(_.plusDays(1))
+        .takeWhile(!_.isAfter(yesterday)).filter(counts.contains).toSeq
 
-      var written = 0
-      val monthsTouched = scala.collection.mutable.LinkedHashSet.empty[String]
       if (perDayCommit) {
         // Reference ordering (:474-476): write day N, then advance state.
-        days.foreach { day =>
+        daysPresent.foreach { day =>
           val out = outputFor(df, day, day)
-          if (!out.isEmpty) { // S16: skip (no state advance) empty days
-            if (cfg.sinkFormat == "commitlog") writeDaysLog(spark, out, cfg, day, day)
-            else writeDays(out, cfg)
-            monthsTouched += day.format(DateTimeFormatter.ofPattern("yyyyMM"))
-            Watermark.advance(cfg.statePath, day)
-            written += 1
-          }
+          if (cfg.sinkFormat == "commitlog") writeDaysLog(spark, out, cfg, day, day)
+          else writeDays(out, cfg)
+          Watermark.advance(cfg.statePath, day)
         }
-      } else {
+      } else if (daysPresent.nonEmpty) {
         // Backfill path: one job for the whole range, then one advance.
         val out = outputFor(df, firstDay, yesterday)
-        // control-plane read: one row per day in the range, bounded small
-        val daysPresent = out.select(col("day")).distinct().collect().map(_.getString(0))
-        if (daysPresent.nonEmpty) {
-          if (cfg.sinkFormat == "commitlog")
-            writeDaysLog(spark, out, cfg, firstDay, yesterday)
-          else writeDays(out, cfg)
-          monthsTouched ++= daysPresent.map(_.substring(0, 6)).distinct
-          Watermark.advance(cfg.statePath, yesterday)
-          written = daysPresent.length
-        }
+        if (cfg.sinkFormat == "commitlog")
+          writeDaysLog(spark, out, cfg, firstDay, yesterday)
+        else writeDays(out, cfg)
+        Watermark.advance(cfg.statePath, yesterday)
       }
       // Acquisition attrs per monthly partition (aristoteles.py:393-402,
       // :443-458) — after data lands, before the run is declared done.
-      AcqMetadata.write(cfg, monthsTouched, spark.sessionState.newHadoopConf())
+      AcqMetadata.write(cfg, daysPresent.map(_.format(MonthFmt)).toSet,
+        spark.sessionState.newHadoopConf())
 
+      val written = daysPresent.length
       val status = if (written > 0) 1 else 0
       publish(cfg, status, written, Some(firstDay), yesterday, yCounts)
       RunResult(status, written, Some(firstDay), yesterday, yCounts)

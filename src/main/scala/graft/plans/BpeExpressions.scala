@@ -60,6 +60,10 @@ case class BpeMergeChain(syms: Expression, mergeA: Expression, mergeB: Expressio
       TypeCheckResult.TypeCheckFailure(
         "graft_bpe_apply merge lists must be literals")
     else {
+      // a NULL or empty merge side has no greedy-scan meaning: an empty
+      // b mints a token equal to a, breaking the fold equivalence above
+      def sidesValid(arr: ArrayData) = (0 until arr.numElements()).forall(i =>
+        !arr.isNullAt(i) && arr.getUTF8String(i).numBytes() > 0)
       val (as, bs) = (mergeA.eval(), mergeB.eval())
       if (as == null || bs == null)
         TypeCheckResult.TypeCheckFailure("graft_bpe_apply merge lists must be non-null")
@@ -67,6 +71,9 @@ case class BpeMergeChain(syms: Expression, mergeA: Expression, mergeB: Expressio
                bs.asInstanceOf[ArrayData].numElements())
         TypeCheckResult.TypeCheckFailure(
           "graft_bpe_apply merge lists must have equal length")
+      else if (!sidesValid(as.asInstanceOf[ArrayData]) || !sidesValid(bs.asInstanceOf[ArrayData]))
+        TypeCheckResult.TypeCheckFailure(
+          "graft_bpe_apply merge entries must be non-null, non-empty strings")
       else TypeCheckResult.TypeCheckSuccess
     }
   }
@@ -76,9 +83,7 @@ case class BpeMergeChain(syms: Expression, mergeA: Expression, mergeB: Expressio
   override def prettyName: String = "graft_bpe_apply"
 
   // the evaluated merge tables, shared by eval and the codegen'd call —
-  // built once per (deserialized) expression instance, not per row. A
-  // merged side may contain NULL entries only if the caller built a
-  // malformed literal; treat those as never-matching (null-strict ===).
+  // built once per (deserialized) expression instance, not per row
   @transient private lazy val tables: (Array[UTF8String], Array[UTF8String], Array[UTF8String]) =
     BpeMergeChain.tablesOf(
       mergeA.eval().asInstanceOf[ArrayData],
@@ -183,11 +188,9 @@ object BpeMergeChain {
     val m = new Array[UTF8String](n)
     var i = 0
     while (i < n) {
-      if (!as.isNullAt(i) && !bs.isNullAt(i)) {
-        a(i) = as.getUTF8String(i)
-        b(i) = bs.getUTF8String(i)
-        m(i) = UTF8String.concat(a(i), b(i))
-      }
+      a(i) = as.getUTF8String(i)
+      b(i) = bs.getUTF8String(i)
+      m(i) = UTF8String.concat(a(i), b(i))
       i += 1
     }
     (a, b, m)
@@ -211,21 +214,19 @@ object BpeMergeChain {
     var r = 0
     while (r < as.length && n > 1) {
       val a = as(r); val b = bs(r); val m = ms(r)
-      if (a != null) {
-        var in = 0
-        var out = 0
-        while (in < n) {
-          if (in + 1 < n && cur(in) != null && cur(in + 1) != null &&
-              a.equals(cur(in)) && b.equals(cur(in + 1))) {
-            next(out) = m; in += 2
-          } else {
-            next(out) = cur(in); in += 1
-          }
-          out += 1
+      var in = 0
+      var out = 0
+      while (in < n) {
+        if (in + 1 < n && cur(in) != null && cur(in + 1) != null &&
+            a.equals(cur(in)) && b.equals(cur(in + 1))) {
+          next(out) = m; in += 2
+        } else {
+          next(out) = cur(in); in += 1
         }
-        val t = cur; cur = next; next = t
-        n = out
+        out += 1
       }
+      val t = cur; cur = next; next = t
+      n = out
       r += 1
     }
     val outArr = new Array[Any](n)

@@ -104,10 +104,7 @@ object IncrementalIngest {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
-          val converted = ArchiveJob.convertUnits(batch)
-            .withColumn("day",
-              date_format(timestamp_seconds(col("dateTime")), "yyyyMMdd"))
-            .withColumn("month", substring(col("day"), 1, 6))
+          val converted = ArchiveJob.withDayLabels(ArchiveJob.convertUnits(batch))
             .withColumn("batch_id", lit(batchId))
           converted
             .repartition(col("month"), col("day"))

@@ -230,6 +230,70 @@ class ArchiveJobSpec extends SparkSpec {
     assert(math.abs(spot.getDouble(iBaro) - 33.863886) < 1e-12)
   }
 
+  test("day labels are UTC days under a non-UTC session time zone") {
+    val cfg = fixture()
+    ArchiveJob.resetState(spark, cfg, None, force = false)
+    val key = "spark.sql.session.timeZone"
+    val tz = spark.conf.get(key)
+    spark.conf.set(key, "America/Los_Angeles")
+    try {
+      // two ticks, one day each: a session-zone label would put the first
+      // 8 hours of each UTC day in the previous day's partition, and the
+      // second tick's dynamic overwrite would then replace most of d1
+      assert(ArchiveJob.run(spark, cfg, today = d2).daysWritten === 1)
+      assert(ArchiveJob.run(spark, cfg, today = d2.plusDays(1), force = true)
+        .daysWritten === 1)
+    } finally spark.conf.set(key, tz)
+    val out = spark.read.parquet(cfg.archivePath)
+    assert(out.select(col("day").cast("string")).collect().map(_.getString(0)).toSet ===
+      Set("20240301", "20240302"))
+    for ((d, rows) <- Seq(d1 -> 2 * 288L, d2 -> (288L + 287L))) {
+      val lo = d.atStartOfDay(java.time.ZoneOffset.UTC).toEpochSecond
+      val inDay = out.filter(col("day").cast("string") === d.format(
+        java.time.format.DateTimeFormatter.BASIC_ISO_DATE))
+      assert(inDay.count() === rows, s"partition of $d")
+      assert(inDay.filter(!col("dateTime").between(lo, lo + 86399)).count() === 0,
+        s"partition of $d holds samples of another UTC day")
+    }
+  }
+
+  test("S16: an empty day is skipped, with no partition and the same archive on every path") {
+    import graft.operators.CommitLog
+    val d3 = d2.plusDays(1)
+    val root = Files.createTempDirectory("graft-s16").toString
+    writeStation(s"$root/stA", dayRows(d1, 288, 1) ++ dayRows(d3, 288, 1))
+    writeStation(s"$root/stB", dayRows(d1, 288, 0) ++ dayRows(d3, 288, 0))
+    val archives = for (sink <- Seq("parquet", "commitlog"); perDay <- Seq(true, false)) yield {
+      val tag = s"${sink}_$perDay"
+      val cfg = ArchiveJob.JobConfig(
+        statePath = s"$root/state_$tag", archivePath = s"$root/archive_$tag",
+        instrument = "testinst",
+        stations = Seq(ArchiveJob.StationSource("stA", s"$root/stA"),
+          ArchiveJob.StationSource("stB", s"$root/stB")),
+        sinkFormat = sink)
+      Watermark.writeNext(cfg.statePath, d1)
+      val r = ArchiveJob.run(spark, cfg, today = d3.plusDays(1), perDayCommit = perDay)
+      assert(r.status === 1 && r.daysWritten === 2, tag)
+      assert(Watermark.read(cfg.statePath) === Some(d3.plusDays(1)), tag)
+      val out = if (sink == "commitlog") CommitLog.read(spark, cfg.archivePath)
+        else spark.read.parquet(cfg.archivePath)
+      if (sink == "parquet")
+        assert(!Files.exists(java.nio.file.Paths.get(
+          s"${cfg.archivePath}/month=202403/day=20240302")), tag)
+      val cols = out.columns.sorted.map(c => if (c == "day" || c == "month")
+        col(c).cast("string").as(c) else col(c))
+      val rows = out.select(cols: _*).orderBy(col("day"), col("station"), col("dateTime"))
+      assert(rows.select(col("day")).collect().map(_.getString(0)).toSet ===
+        Set("20240301", "20240303"), tag)
+      tag -> rows.collect().map(_.toString).toSeq
+    }
+    val (firstTag, first) = archives.head
+    assert(first.length === 4 * 288)
+    archives.tail.foreach { case (tag, rows) =>
+      assert(rows === first, s"$tag differs from $firstTag")
+    }
+  }
+
   test("ini config round-trip and validation") {
     val cfg = fixture()
     val root = Files.createTempDirectory("graft-ini").toString

@@ -176,6 +176,21 @@ class BpeSpec extends SparkSpec {
     }
   }
 
+  test("the native merge chain rejects NULL and empty merge entries at analysis") {
+    // an empty side mints a token equal to the other side, which the
+    // greedy scan and the fold would then treat differently
+    for ((as, bs) <- Seq(("array('a')", "array('')"), ("array('')", "array('b')"),
+        ("array(CAST(NULL AS STRING))", "array('b')"),
+        ("array('a', 'b')", "array('b', CAST(NULL AS STRING))"))) {
+      val e = intercept[org.apache.spark.sql.AnalysisException] {
+        spark.sql(s"SELECT graft_bpe_apply(array('a', 'b'), $as, $bs)").collect()
+      }
+      assert(e.getMessage.contains("non-null, non-empty"), s"($as, $bs): ${e.getMessage}")
+    }
+    assert(spark.sql("SELECT graft_bpe_apply(array('a', 'b'), array('a'), array('b'))")
+      .collect().head.getSeq[String](0) === Seq("ab"))
+  }
+
   test("the native adjacent-pair expression equals the zip_with-over-slices form") {
     import org.apache.spark.sql.functions.{col, explode, lit, size, slice, struct, zip_with}
     // the zip_with-over-slices reference REJECTS empty arrays (slice
