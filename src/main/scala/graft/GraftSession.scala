@@ -41,7 +41,7 @@ object GraftSession {
         sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "1m"))
       .config("spark.sql.files.openCostInBytes",
         sys.env.getOrElse("SPARK_GRAFT_OPEN_COST_BYTES", "65536"))
-      // graft_dot/graft_topk as session builtins + the nanos-range
+      // every graft_* function as a session builtin + the nanos-range
       // pushdown rule (plans.GraftExtensions / NanosRangeRewrite)
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.sql.session.timeZone", "UTC")

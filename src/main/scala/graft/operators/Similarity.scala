@@ -1313,7 +1313,12 @@ object Similarity {
     * At 100 TB the codes table is the stored representation (32x
     * smaller than the floats); here it is derived in-plan from the
     * memoized codebooks, and only shortlist rows ever read full
-    * precision. */
+    * precision.
+    *
+    * Building the frame is not lazy: it runs a `collect()` job for the
+    * 5 probe rows (and builds the codebooks if they are not memoized
+    * yet). The probes are snapshotted at build time, so a frame built
+    * and executed later does not see changes to the embeddings. */
   def knnPqAdc(spark: SparkSession, dir: String,
       k: Int = 5, coarseK: Int = 20): DataFrame = {
     val cb = pqCodebooks(spark, dir)

@@ -2,13 +2,12 @@ package graft.plans
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.TernaryLike
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -156,15 +155,9 @@ object BloomAggregate {
         s"unsupported bloom probe type: ${other.getClass.getSimpleName}")
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom", exprs => BloomBits(exprs(0), exprs(1), exprs(2)), "scala_udf")
-
-  /** Column-API form; registers on the active session on first use. */
-  def bloom(hash: Column, mBits: Int, k: Int): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_bloom", hash,
+  /** `graft_bloom(hash, mBits, k)` as an aggregate Column. */
+  def bloom(hash: Column, mBits: Int, k: Int): Column =
+    GraftFunctions("graft_bloom", hash,
       org.apache.spark.sql.functions.lit(mBits),
       org.apache.spark.sql.functions.lit(k))
-  }
 }

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
@@ -8,7 +8,6 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.trees.TernaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -169,13 +168,7 @@ object AdjacentSymPairs {
     new GenericArrayData(out)
   }
 
-  def apply(syms: Column): Column = {
-    SparkSession.getActiveSession.foreach { spark =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_adj_pairs", exprs => AdjacentSymPairs(exprs(0)), "scala_udf")
-    }
-    call_function("graft_adj_pairs", syms)
-  }
+  def apply(syms: Column): Column = GraftFunctions("graft_adj_pairs", syms)
 }
 
 object BpeMergeChain {
@@ -235,19 +228,14 @@ object BpeMergeChain {
     new GenericArrayData(outArr)
   }
 
-  /** Builder for the SQL registration (merge lists must be foldable;
+  /** Builder for the function table (merge lists must be foldable;
     * checkInputDataTypes refuses the rest). */
   def fromArgs(exprs: Seq[Expression]): BpeMergeChain =
     BpeMergeChain(exprs(0), exprs(1), exprs(2))
 
-  /** Column-API form; registration rides the session extensions, with
-    * the same temp-function fallback the other graft builtins use. */
+  /** Column-API form, built from [[GraftFunctions]]. */
   def apply(syms: Column, as: Seq[String], bs: Seq[String]): Column = {
-    SparkSession.getActiveSession.foreach { spark =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_bpe_apply", exprs => fromArgs(exprs), "scala_udf")
-    }
     import org.apache.spark.sql.functions.typedLit
-    call_function("graft_bpe_apply", syms, typedLit(as), typedLit(bs))
+    GraftFunctions("graft_bpe_apply", syms, typedLit(as), typedLit(bs))
   }
 }

@@ -2,14 +2,13 @@ package graft.plans
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{BinaryType, BooleanType, DataType, LongType}
 
 /** `graft_bitset(idx)` — aggregate a group's row indices into a dense
@@ -264,34 +263,14 @@ object DvLoad {
 
 object DeletionVector {
 
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bitset", exprs => BitsetAggregate(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dv_test", exprs => DvTest(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dv_load", exprs => DvLoad(exprs(0),
-        // resolution runs on the driver with a session active: snapshot
-        // ITS hadoop conf (incl. spark.hadoop.* runtime settings) into
-        // the expression the executors will deserialize
-        new SerializableHadoopConf(
-          SparkSession.active.sessionState.newHadoopConf())), "scala_udf")
-  }
+  /** Column forms, built from [[GraftFunctions]]. `dvLoad` snapshots the
+    * active session's Hadoop conf when the Column is built. */
+  def bitset(idx: Column): Column =
+    GraftFunctions("graft_bitset", idx)
 
-  /** Column forms; register on the active session on first use (same
-    * precondition as [[VectorExpressions]]). */
-  def bitset(idx: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_bitset", idx)
-  }
+  def dvTest(dv: Column, idx: Column): Column =
+    GraftFunctions("graft_dv_test", dv, idx)
 
-  def dvTest(dv: Column, idx: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_dv_test", dv, idx)
-  }
-
-  def dvLoad(path: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_dv_load", path)
-  }
+  def dvLoad(path: Column): Column =
+    GraftFunctions("graft_dv_load", path)
 }

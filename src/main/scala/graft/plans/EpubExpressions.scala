@@ -74,15 +74,7 @@ object EpubChapters {
     (null, -1)
   }
 
-  /** One `name="..."` attribute from a tag head, or null. */
-  private def attr(head: String, name: String): String = {
-    val k = s""" $name=""""
-    val i = head.indexOf(k)
-    if (i < 0) return null
-    val start = i + k.length
-    val end = head.indexOf('"', start)
-    if (end < 0) null else head.substring(start, end)
-  }
+  import ZipExtract.attr
 
   def parse(zip: Array[Byte]): GenericArrayData = {
     // 1. the OCF container names the package document

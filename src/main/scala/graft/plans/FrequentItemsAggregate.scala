@@ -5,14 +5,13 @@ import java.nio.charset.StandardCharsets
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -151,12 +150,7 @@ object FrequentItems {
 }
 
 object FrequentItemsAggregate {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_freq_items", exprs => FrequentItems(exprs(0), exprs(1)), "scala_udf")
-
-  def freqItems(item: Column, k: Int): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_freq_items", item, org.apache.spark.sql.functions.lit(k))
-  }
+  def freqItems(item: Column, k: Int): Column =
+    GraftFunctions("graft_freq_items", item,
+      org.apache.spark.sql.functions.lit(k))
 }

@@ -9,115 +9,16 @@ import org.apache.spark.sql.types.{LongType, TimestampType}
 /** Engine extensions, installed with
   * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`:
   *
-  *  - registers the native functions (graft_dot, graft_topk) as
-  *    session builtins;
+  *  - injects every native `graft_*` function of [[GraftFunctions]]
+  *    as a session builtin, behind the table's argument-count gate;
   *  - injects [[NanosRangeRewrite]], the optimizer rule that makes
   *    natural time-range filters pushdown-capable on nanos-backed
   *    tables.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  /** Arity gate for the injected builders: a wrong argument count must
-    * fail as a clear analysis-time error, not an
-    * IndexOutOfBoundsException from exprs(n) inside resolution. */
-  private def arity(name: String, n: Int)(
-      f: Seq[Expression] => Expression): Seq[Expression] => Expression =
-    exprs => {
-      if (exprs.length != n) throw new IllegalArgumentException(
-        s"$name expects $n argument(s), got ${exprs.length}")
-      f(exprs)
-    }
-
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => NanosRangeRewrite)
-    e.injectFunction(
-      (new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_dot"),
-       new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-       arity("graft_dot", 2)(exprs => DotProduct(exprs(0), exprs(1)))))
-    e.injectFunction(
-      (new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_cos"),
-       new ExpressionInfo(classOf[CosineSim].getName, "graft_cos"),
-       arity("graft_cos", 2)(exprs => CosineSim(exprs(0), exprs(1)))))
-    e.injectFunction(
-      (new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_isect_size"),
-       new ExpressionInfo(classOf[LongSetIntersectSize].getName, "graft_isect_size"),
-       arity("graft_isect_size", 2)(exprs => LongSetIntersectSize(exprs(0), exprs(1)))))
-    e.injectFunction(
-      (new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_vocab_words"),
-       new ExpressionInfo(classOf[VocabWordsMask].getName, "graft_vocab_words"),
-       arity("graft_vocab_words", 2)(exprs => VocabWordsMask(exprs(0), exprs(1)))))
-    e.injectFunction(
-      (new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_words_isect"),
-       new ExpressionInfo(classOf[WordMaskIsectSize].getName, "graft_words_isect"),
-       arity("graft_words_isect", 2)(exprs => WordMaskIsectSize(exprs(0), exprs(1)))))
-    e.injectFunction(
-      (new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_topk"),
-       new ExpressionInfo(classOf[TopKNeighbors].getName, "graft_topk"),
-       arity("graft_topk", 3)(exprs => TopKNeighbors(exprs(0), exprs(1), exprs(2)))))
-    e.injectFunction(
-      (new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_freq_items"),
-       new ExpressionInfo(classOf[FrequentItems].getName, "graft_freq_items"),
-       arity("graft_freq_items", 2)(exprs => FrequentItems(exprs(0), exprs(1)))))
-    e.injectFunction(
-      (new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_img_meta"),
-       new ExpressionInfo(classOf[ImageMeta].getName, "graft_img_meta"),
-       arity("graft_img_meta", 1)(exprs => ImageMeta(exprs(0)))))
-    e.injectFunction(
-      (new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_wav_meta"),
-       new ExpressionInfo(classOf[WavMeta].getName, "graft_wav_meta"),
-       arity("graft_wav_meta", 1)(exprs => WavMeta(exprs(0)))))
-    e.injectFunction(
-      (new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_bmp_stats"),
-       new ExpressionInfo(classOf[BmpStats].getName, "graft_bmp_stats"),
-       arity("graft_bmp_stats", 1)(exprs => BmpStats(exprs(0)))))
-    e.injectFunction(
-      (new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_minhash"),
-       new ExpressionInfo(classOf[MinhashSignature].getName, "graft_minhash"),
-       (exprs: Seq[Expression]) => MinhashSignature.fromArgs(exprs)))
-    e.injectFunction(
-      (new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_ngram_hashes"),
-       new ExpressionInfo(classOf[NgramHashes].getName, "graft_ngram_hashes"),
-       (exprs: Seq[Expression]) => NgramHashes.fromArgs(exprs)))
-    e.injectFunction(
-      (new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_first_agree"),
-       new ExpressionInfo(classOf[FirstAgree].getName, "graft_first_agree"),
-       arity("graft_first_agree", 2)(exprs => FirstAgree(exprs(0), exprs(1)))))
-    e.injectFunction(
-      (new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_html_text"),
-       new ExpressionInfo(classOf[HtmlText].getName, "graft_html_text"),
-       arity("graft_html_text", 1)(exprs => HtmlText(exprs(0)))))
-    e.injectFunction(
-      (new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_gif_meta"),
-       new ExpressionInfo(classOf[GifMeta].getName, "graft_gif_meta"),
-       arity("graft_gif_meta", 1)(exprs => GifMeta(exprs(0)))))
-    e.injectFunction(
-      (new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_png_stats"),
-       new ExpressionInfo(classOf[PngStats].getName, "graft_png_stats"),
-       arity("graft_png_stats", 1)(exprs => PngStats(exprs(0)))))
-    e.injectFunction(
-      (new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_png_encode"),
-       new ExpressionInfo(classOf[PngEncode].getName, "graft_png_encode"),
-       arity("graft_png_encode", 4)(exprs => PngEncode(exprs(0), exprs(1), exprs(2), exprs(3)))))
-    e.injectFunction(
-      (new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_gif_pixels"),
-       new ExpressionInfo(classOf[GifPixels].getName, "graft_gif_pixels"),
-       arity("graft_gif_pixels", 1)(exprs => GifPixels(exprs(0)))))
-    e.injectFunction(
-      (new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_gif_encode"),
-       new ExpressionInfo(classOf[GifEncode].getName, "graft_gif_encode"),
-       arity("graft_gif_encode", 3)(exprs => GifEncode(exprs(0), exprs(1), exprs(2)))))
-    e.injectFunction(
-      (new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_bpe_apply"),
-       new ExpressionInfo(classOf[BpeMergeChain].getName, "graft_bpe_apply"),
-       arity("graft_bpe_apply", 3)(exprs => BpeMergeChain.fromArgs(exprs))))
-    e.injectFunction(
-      (new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_adj_pairs"),
-       new ExpressionInfo(classOf[AdjacentSymPairs].getName, "graft_adj_pairs"),
-       arity("graft_adj_pairs", 1)(exprs => AdjacentSymPairs(exprs(0)))))
-    e.injectFunction(
-      (new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_bloom"),
-       new ExpressionInfo(classOf[BloomBits].getName, "graft_bloom"),
-       arity("graft_bloom", 3)(exprs => BloomBits(exprs(0), exprs(1), exprs(2)))))
+    GraftFunctions.all.foreach(f => e.injectFunction(f.injection))
   }
 }
 

@@ -66,7 +66,7 @@ case class MinhashSignature(child: Expression, numHashes: Int)
 }
 
 object MinhashSignature {
-  /** Builder shared by the SQL registrations: k must be a foldable
+  /** Builder for the function table: k must be a foldable
     * integer literal, rejected with a named error instead of an opaque
     * cast/eval crash. */
   def fromArgs(exprs: Seq[Expression]): MinhashSignature = {

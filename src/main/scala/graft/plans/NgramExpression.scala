@@ -53,7 +53,7 @@ case class NgramHashes(child: Expression, n: Int) extends UnaryExpression {
 object NgramHashes {
   private val Space = UTF8String.fromString(" ")
 
-  /** Builder for the SQL registrations: n must be a foldable INT
+  /** Builder for the function table: n must be a foldable INT
     * literal, rejected with a named error. */
   def fromArgs(exprs: Seq[Expression]): NgramHashes = {
     val nExpr = exprs(1)

@@ -80,14 +80,7 @@ object OdpSlides {
     true
   }
 
-  private def attr(head: String, name: String): String = {
-    val k = s""" $name=""""
-    val at = head.indexOf(k)
-    if (at < 0) return null
-    val start = at + k.length
-    val end = head.indexOf('"', start)
-    if (end < 0) null else head.substring(start, end)
-  }
+  import ZipExtract.attr
 
   def parse(zip: Array[Byte]): GenericArrayData = {
     val xmlBytes = ZipExtract.extract(zip, "content.xml")

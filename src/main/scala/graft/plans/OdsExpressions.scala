@@ -82,14 +82,7 @@ object OdsCells {
       c == '>' || c == '/' || c == ' ' || c == '\t' || c == '\n' || c == '\r'
     }
 
-  private def attr(head: String, name: String): String = {
-    val k = s""" $name=""""
-    val at = head.indexOf(k)
-    if (at < 0) return null
-    val start = at + k.length
-    val end = head.indexOf('"', start)
-    if (end < 0) null else head.substring(start, end)
-  }
+  import ZipExtract.attr
 
   /** The required-prefix guard: every occurrence of `ns` must be a
     * `xmlns:<prefix>=` binding. */

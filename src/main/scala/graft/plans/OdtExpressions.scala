@@ -72,15 +72,7 @@ object OdtText {
       c == '>' || c == '/' || c == ' ' || c == '\t' || c == '\n' || c == '\r'
     }
 
-  /** One attribute's value from a tag-head substring, or null. */
-  private def attr(head: String, name: String): String = {
-    val k = s""" $name=""""
-    val at = head.indexOf(k)
-    if (at < 0) return null
-    val start = at + k.length
-    val end = head.indexOf('"', start)
-    if (end < 0) null else head.substring(start, end)
-  }
+  import ZipExtract.attr
 
   def parse(zip: Array[Byte]): UTF8String = {
     val xmlBytes = ZipExtract.extract(zip, "content.xml")

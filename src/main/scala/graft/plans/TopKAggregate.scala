@@ -4,14 +4,13 @@ import java.nio.ByteBuffer
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.TernaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /** Bounded top-k as a partial-aggregable function — the scale-correct
@@ -138,16 +137,8 @@ object TopKNeighbors {
 }
 
 object TopKAggregate {
-  /** Idempotently register graft_topk(score, id, k) in the session's
-    * function registry; the analyzer wraps the TypedImperativeAggregate
-    * into an AggregateExpression at resolution. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_topk", exprs => TopKNeighbors(exprs(0), exprs(1), exprs(2)), "scala_udf")
-
-  /** Column-API form; registers on the active session on first use. */
-  def topk(score: Column, id: Column, k: Int): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_topk", score, id, org.apache.spark.sql.functions.lit(k))
-  }
+  /** `graft_topk(score, id, k)` as an aggregate Column. */
+  def topk(score: Column, id: Column, k: Int): Column =
+    GraftFunctions("graft_topk", score, id,
+      org.apache.spark.sql.functions.lit(k))
 }

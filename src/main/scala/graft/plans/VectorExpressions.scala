@@ -1,11 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Fused dot product as a native Catalyst expression (SURVEY §4: custom
@@ -366,1064 +365,465 @@ case class WordMaskIsectSize(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** Column helpers for the native `graft_*` functions: each one builds
+  * its expression from [[GraftFunctions]], so it works in any session. */
 object VectorExpressions {
-  /** Idempotently register graft_dot / graft_cos in the session's
-    * function registry (SQL-callable). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_isect_size", exprs => LongSetIntersectSize(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vocab_words", exprs => VocabWordsMask(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_words_isect", exprs => WordMaskIsectSize(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", exprs => DotProduct(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cos", exprs => CosineSim(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_img_meta", exprs => ImageMeta(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_wav_meta", exprs => WavMeta(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bmp_stats", exprs => BmpStats(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash", exprs => MinhashSignature.fromArgs(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_ngram_hashes", exprs => NgramHashes.fromArgs(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_first_agree", exprs => FirstAgree(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_html_text", exprs => HtmlText(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_gif_meta", exprs => GifMeta(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_png_stats", exprs => PngStats(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_png_encode",
-      exprs => PngEncode(exprs(0), exprs(1), exprs(2), exprs(3)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_gif_pixels", exprs => GifPixels(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_gif_encode",
-      exprs => GifEncode(exprs(0), exprs(1), exprs(2)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_gif_frames", exprs => GifFrames(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_png_frames", exprs => PngFrames(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_png_encode_apng",
-      exprs => graft.plans.SynthExpr(exprs, "graft_png_encode_apng",
-        Seq(org.apache.spark.sql.types.IntegerType,
-          org.apache.spark.sql.types.IntegerType,
-          org.apache.spark.sql.types.IntegerType,
-          org.apache.spark.sql.types.LongType),
-        vs => PngEncode.encodeApng(vs(0).asInstanceOf[Int],
-          vs(1).asInstanceOf[Int], vs(2).asInstanceOf[Int],
-          vs(3).asInstanceOf[Long])), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_gif_encode_ilc",
-      exprs => graft.plans.SynthExpr(exprs, "graft_gif_encode_ilc",
-        Seq(org.apache.spark.sql.types.IntegerType,
-          org.apache.spark.sql.types.IntegerType,
-          org.apache.spark.sql.types.LongType),
-        vs => GifEncode.encodeInterlaced(vs(0).asInstanceOf[Int],
-          vs(1).asInstanceOf[Int], vs(2).asInstanceOf[Long])), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_png_encode_adam7",
-      exprs => graft.plans.SynthExpr(exprs, "graft_png_encode_adam7",
-        Seq(org.apache.spark.sql.types.IntegerType,
-          org.apache.spark.sql.types.IntegerType,
-          org.apache.spark.sql.types.LongType,
-          org.apache.spark.sql.types.BooleanType),
-        vs => PngEncode.encodeAdam7(vs(0).asInstanceOf[Int],
-          vs(1).asInstanceOf[Int], vs(2).asInstanceOf[Long],
-          vs(3).asInstanceOf[Boolean])), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_gif_encode_anim", exprs => GifEncodeAnim(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_jpeg_pixels", exprs => JpegPixels(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_jpeg_encode",
-      exprs => JpegEncode(exprs(0), exprs(1), exprs(2), exprs(3)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bmp_resize",
-      exprs => BmpResize(exprs(0), exprs(1), exprs(2)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_jpeg_encode12",
-      exprs => graft.plans.SynthExpr(exprs, "graft_jpeg_encode12",
-        Seq(org.apache.spark.sql.types.IntegerType,
-          org.apache.spark.sql.types.IntegerType,
-          org.apache.spark.sql.types.LongType,
-          org.apache.spark.sql.types.BooleanType),
-        vs => JpegEncode.encodeBlocky12(vs(0).asInstanceOf[Int],
-          vs(1).asInstanceOf[Int], vs(2).asInstanceOf[Long],
-          vs(3).asInstanceOf[Boolean])), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_jpeg_encode_color",
-      exprs => JpegEncodeColor(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_jpeg_encode_progressive",
-      exprs => JpegEncodeProgressive(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_jpeg_encode_lossless",
-      exprs => graft.plans.SynthExpr(exprs, "graft_jpeg_encode_lossless",
-        Seq(org.apache.spark.sql.types.IntegerType,
-          org.apache.spark.sql.types.IntegerType,
-          org.apache.spark.sql.types.LongType,
-          org.apache.spark.sql.types.IntegerType,
-          org.apache.spark.sql.types.IntegerType,
-          org.apache.spark.sql.types.IntegerType),
-        vs => JpegEncode.encodeLossless(vs(0).asInstanceOf[Int],
-          vs(1).asInstanceOf[Int], vs(2).asInstanceOf[Long],
-          vs(3).asInstanceOf[Int], vs(4).asInstanceOf[Int],
-          vs(5).asInstanceOf[Int])), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_avi_meta", exprs => AviMeta(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_avi_frames", exprs => AviFrames(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_avi_encode", exprs => AviEncode(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_tiff_pixels", exprs => TiffPixels(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_tiff_encode", exprs => TiffEncode(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_webp_meta", exprs => WebpMeta(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_webp_encode", exprs => WebpEncode(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_gzip_meta", exprs => GzipMeta(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_gzip_encode", exprs => GzipEncode(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_pdf_meta", exprs => PdfMeta(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_pdf_encode", exprs => PdfEncode(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_pdf_page_texts", exprs => PdfPageTexts(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_pdf_text_encode", exprs => PdfTextEncode(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_warc_records", exprs => WarcRecords(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_warc_encode", exprs => WarcEncode(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_warc_response", exprs => WarcResponse(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_warc_wrap", exprs => WarcWrap(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_http_body", exprs => HttpBody(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_http_wrap", exprs => HttpWrap(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_http_text", exprs => HttpText(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_zip_entries", exprs => ZipEntries(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_zip_encode", exprs => ZipEncode(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_zip_extract", exprs => ZipExtract(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_docx_text", exprs => DocxText(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_docx_encode", exprs => DocxEncode(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_xlsx_cells", exprs => XlsxCells(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_xlsx_encode", exprs => XlsxEncode(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_pptx_slides", exprs => PptxSlides(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_pptx_encode", exprs => PptxEncode(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_epub_chapters", exprs => EpubChapters(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_epub_encode", exprs => EpubEncode(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_rtf_text", exprs => RtfText(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_rtf_encode", exprs => RtfEncode(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_odt_text", exprs => OdtText(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_odt_encode", exprs => OdtEncode(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_odp_slides", exprs => OdpSlides(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_odp_encode", exprs => OdpEncode(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_ods_cells", exprs => OdsCells(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_ods_encode", exprs => OdsEncode(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_pdf_encrypt_encode", exprs => PdfEncryptEncode(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_pdf_cmap_encode", exprs => PdfCMapEncode(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cfb_entries", exprs => CfbEntries(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cfb_kind", exprs => CfbKind(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_doc_text", exprs => DocText(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_doc_encode", exprs => DocEncode(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_ppt_text", exprs => PptText(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_ppt_encode", exprs => PptEncode(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_xls_cells", exprs => XlsCells(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_xls_encode", exprs => XlsEncode(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_tar_entries", exprs => TarEntries(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_plain_text", exprs => PlainText(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_tar_encode", exprs => TarEncode(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_zip_kind", exprs => ZipKind(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sitemap_urls", exprs => SitemapUrls(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_robots_rules", exprs => RobotsRules(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_robots_allowed", exprs => RobotsAllowed(exprs(0), exprs(1), exprs(2)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_avif_meta", exprs => AvifMeta(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_avif_encode", exprs => AvifEncode(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_mp4_meta", exprs => Mp4Meta(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_mp4_encode", exprs => Mp4Encode(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_wav_pcm", exprs => WavPcm(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_wav_encode",
-      exprs => WavEncode(exprs(0), exprs(1), exprs(2)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_wav_float", exprs => WavFloat(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_wav_encode_float",
-      exprs => graft.plans.SynthExpr(exprs, "graft_wav_encode_float",
-        Seq(org.apache.spark.sql.types.IntegerType,
-          org.apache.spark.sql.types.IntegerType,
-          org.apache.spark.sql.types.LongType),
-        vs => WavFloat.encode(vs(0).asInstanceOf[Int],
-          vs(1).asInstanceOf[Int], vs(2).asInstanceOf[Long])), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_wav_encode_g711",
-      exprs => graft.plans.SynthExpr(exprs, "graft_wav_encode_g711",
-        Seq(org.apache.spark.sql.types.IntegerType,
-          org.apache.spark.sql.types.IntegerType,
-          org.apache.spark.sql.types.LongType,
-          org.apache.spark.sql.types.BooleanType),
-        vs => WavEncode.encodeG711(vs(0).asInstanceOf[Int],
-          vs(1).asInstanceOf[Int], vs(2).asInstanceOf[Long],
-          vs(3).asInstanceOf[Boolean])), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_audio_tags", exprs => AudioTags(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_exif_meta", exprs => ExifMeta(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_exif_encode",
-      exprs => graft.plans.SynthExpr(exprs, "graft_exif_encode",
-        Seq(org.apache.spark.sql.types.LongType,
-          org.apache.spark.sql.types.BooleanType,
-          org.apache.spark.sql.types.BooleanType,
-          org.apache.spark.sql.types.IntegerType,
-          org.apache.spark.sql.types.StringType,
-          org.apache.spark.sql.types.StringType,
-          org.apache.spark.sql.types.StringType,
-          org.apache.spark.sql.types.IntegerType,
-          org.apache.spark.sql.types.IntegerType),
-        vs => ExifMeta.encode(vs(0).asInstanceOf[Long],
-          vs(1).asInstanceOf[Boolean], vs(2).asInstanceOf[Boolean],
-          vs(3).asInstanceOf[Int], vs(4).toString, vs(5).toString,
-          vs(6).toString, vs(7).asInstanceOf[Int],
-          vs(8).asInstanceOf[Int])), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_flac_meta", exprs => FlacMeta(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_mp3_meta", exprs => Mp3Meta(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_flac_encode",
-      exprs => graft.plans.SynthExpr(exprs, "graft_flac_encode",
-        Seq(org.apache.spark.sql.types.IntegerType,
-          org.apache.spark.sql.types.IntegerType,
-          org.apache.spark.sql.types.IntegerType,
-          org.apache.spark.sql.types.LongType,
-          org.apache.spark.sql.types.LongType,
-          org.apache.spark.sql.types.IntegerType),
-        vs => FlacMeta.encode(vs(0).asInstanceOf[Int],
-          vs(1).asInstanceOf[Int], vs(2).asInstanceOf[Int],
-          vs(3).asInstanceOf[Long], vs(4).asInstanceOf[Long],
-          vs(5).asInstanceOf[Int])), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_mp3_encode",
-      exprs => graft.plans.SynthExpr(exprs, "graft_mp3_encode",
-        Seq(org.apache.spark.sql.types.IntegerType,
-          org.apache.spark.sql.types.IntegerType,
-          org.apache.spark.sql.types.IntegerType,
-          org.apache.spark.sql.types.BooleanType,
-          org.apache.spark.sql.types.LongType,
-          org.apache.spark.sql.types.IntegerType,
-          org.apache.spark.sql.types.IntegerType,
-          org.apache.spark.sql.types.BooleanType),
-        vs => Mp3Meta.encode(vs(0).asInstanceOf[Int],
-          vs(1).asInstanceOf[Int], vs(2).asInstanceOf[Int],
-          vs(3).asInstanceOf[Boolean], vs(4).asInstanceOf[Long],
-          vs(5).asInstanceOf[Int], vs(6).asInstanceOf[Int],
-          vs(7).asInstanceOf[Boolean])), "scala_udf")
-  }
-
-  /** Column-API form; registers on the active session on first use.
-    * PRECONDITION (both forms): a SparkSession must be active when the
-    * Column is CONSTRUCTED, or the executing session must carry
-    * GraftExtensions (every graft.GraftSession does) — otherwise
-    * analysis fails with an unresolved graft_dot/graft_cos routine. */
-  def dot(a: Column, b: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_dot", a, b)
-  }
+  /** Fused dot product (plans.DotProduct). */
+  def dot(a: Column, b: Column): Column =
+    GraftFunctions("graft_dot", a, b)
 
   /** Distinct-intersection size of two long arrays (the sorted-array
-    * dedup tier), column form; same registration precondition. */
-  def isectSize(a: Column, b: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_isect_size", a, b)
-  }
+    * dedup tier). */
+  def isectSize(a: Column, b: Column): Column =
+    GraftFunctions("graft_isect_size", a, b)
 
   /** Multi-word vocabulary bitmap of a hashed-token set (the 512-symbol
     * dedup verify tier); the ascending vocabulary rides the plan as a
-    * literal. Column form; same registration precondition. */
-  def vocabWords(toks: Column, vocab: Array[Long]): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_vocab_words", toks, org.apache.spark.sql.functions.lit(vocab))
-  }
+    * literal. */
+  def vocabWords(toks: Column, vocab: Array[Long]): Column =
+    GraftFunctions("graft_vocab_words", toks,
+      org.apache.spark.sql.functions.lit(vocab))
 
-  /** Σ popcount(a[i] & b[i]) — word-array intersect size, column form;
-    * same registration precondition. */
-  def wordsIsect(a: Column, b: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_words_isect", a, b)
-  }
+  /** Σ popcount(a[i] & b[i]) — word-array intersect size. */
+  def wordsIsect(a: Column, b: Column): Column =
+    GraftFunctions("graft_words_isect", a, b)
 
-  /** Fused cosine, column form; same registration precondition. */
-  def cos(a: Column, b: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_cos", a, b)
-  }
+  /** Fused cosine (plans.CosineSim). */
+  def cos(a: Column, b: Column): Column =
+    GraftFunctions("graft_cos", a, b)
 
-  /** PNG/JPEG header metadata (plans.ImageMeta), column form; same
-    * registration precondition. */
-  def imgMeta(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_img_meta", c)
-  }
+  /** PNG/JPEG header metadata (plans.ImageMeta). */
+  def imgMeta(c: Column): Column =
+    GraftFunctions("graft_img_meta", c)
 
-  /** GIF header metadata (plans.GifMeta), column form; same
-    * registration precondition. */
-  def gifMeta(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_gif_meta", c)
-  }
+  /** GIF header metadata (plans.GifMeta). */
+  def gifMeta(c: Column): Column =
+    GraftFunctions("graft_gif_meta", c)
 
-  /** WebP triage (plans.WebpMeta), column form; same registration
-    * precondition. */
-  def webpMeta(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_webp_meta", c)
-  }
+  /** WebP triage (plans.WebpMeta). */
+  def webpMeta(c: Column): Column =
+    GraftFunctions("graft_webp_meta", c)
 
-  /** WebP fixture encoder (plans.WebpEncode), column form; same
-    * registration precondition. */
-  def webpEncode(w: Column, h: Column, seed: Column, variant: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_webp_encode", w, h, seed, variant)
-  }
+  /** WebP fixture encoder (plans.WebpEncode). */
+  def webpEncode(w: Column, h: Column, seed: Column, variant: Column): Column =
+    GraftFunctions("graft_webp_encode", w, h, seed, variant)
 
-  /** WARC record triage (plans.WarcRecords), column form; same
-    * registration precondition. */
-  def warcRecords(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_warc_records", c)
-  }
+  /** WARC record triage (plans.WarcRecords). */
+  def warcRecords(c: Column): Column =
+    GraftFunctions("graft_warc_records", c)
 
-  /** WARC fixture encoder (plans.WarcEncode), column form; same
-    * registration precondition. */
-  def warcEncode(seed: Column, compressed: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_warc_encode", seed, compressed)
-  }
+  /** WARC fixture encoder (plans.WarcEncode). */
+  def warcEncode(seed: Column, compressed: Column): Column =
+    GraftFunctions("graft_warc_encode", seed, compressed)
 
   /** First response record's (target_uri, payload) — the ingest hop
-    * (plans.WarcResponse), column form; same registration
-    * precondition. */
-  def warcResponse(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_warc_response", c)
-  }
+    * (plans.WarcResponse). */
+  def warcResponse(c: Column): Column =
+    GraftFunctions("graft_warc_response", c)
 
-  /** WARC fixture with an explicit response body (plans.WarcWrap),
-    * column form; same registration precondition. */
-  def warcWrap(seed: Column, compressed: Column, body: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_warc_wrap", seed, compressed, body)
-  }
+  /** WARC fixture with an explicit response body (plans.WarcWrap). */
+  def warcWrap(seed: Column, compressed: Column, body: Column): Column =
+    GraftFunctions("graft_warc_wrap", seed, compressed, body)
 
-  /** ZIP central-directory entries (plans.ZipEntries), column form;
-    * same registration precondition. */
-  def zipEntries(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_zip_entries", c)
-  }
+  /** ZIP central-directory entries (plans.ZipEntries). */
+  def zipEntries(c: Column): Column =
+    GraftFunctions("graft_zip_entries", c)
 
-  /** ZIP fixture encoder — the JDK ZipOutputStream behind an
-    * expression (plans.ZipEncode), column form; same registration
-    * precondition. */
-  def zipEncode(seed: Column, nEntries: Column, comment: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_zip_encode", seed, nEntries, comment)
-  }
+  /** ZIP fixture encoder — the JDK ZipOutputStream behind an expression
+    * (plans.ZipEncode). */
+  def zipEncode(seed: Column, nEntries: Column, comment: Column): Column =
+    GraftFunctions("graft_zip_encode", seed, nEntries, comment)
 
-  /** ZIP entry payload extraction (plans.ZipExtract), column form;
-    * same registration precondition. */
-  def zipExtract(zip: Column, name: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_zip_extract", zip, name)
-  }
+  /** ZIP entry payload extraction (plans.ZipExtract). */
+  def zipExtract(zip: Column, name: Column): Column =
+    GraftFunctions("graft_zip_extract", zip, name)
 
-  /** ODT text extraction (plans.OdtText), column form; same
-    * registration precondition. */
-  def odtText(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_odt_text", c)
-  }
+  /** ODT text extraction (plans.OdtText). */
+  def odtText(c: Column): Column =
+    GraftFunctions("graft_odt_text", c)
 
-  /** ODT fixture encoder (plans.OdtEncode), column form; same
-    * registration precondition. */
-  def odtEncode(seed: Column, nParas: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_odt_encode", seed, nParas)
-  }
+  /** ODT fixture encoder (plans.OdtEncode). */
+  def odtEncode(seed: Column, nParas: Column): Column =
+    GraftFunctions("graft_odt_encode", seed, nParas)
 
-  /** ODP slide extraction (plans.OdpSlides), column form; same
-    * registration precondition. */
-  def odpSlides(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_odp_slides", c)
-  }
+  /** ODP slide extraction (plans.OdpSlides). */
+  def odpSlides(c: Column): Column =
+    GraftFunctions("graft_odp_slides", c)
 
-  /** ODP fixture encoder (plans.OdpEncode), column form; same
-    * registration precondition. */
-  def odpEncode(seed: Column, nSlides: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_odp_encode", seed, nSlides)
-  }
+  /** ODP fixture encoder (plans.OdpEncode). */
+  def odpEncode(seed: Column, nSlides: Column): Column =
+    GraftFunctions("graft_odp_encode", seed, nSlides)
 
-  /** ODS cell extraction (plans.OdsCells), column form; same
-    * registration precondition. */
-  def odsCells(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_ods_cells", c)
-  }
+  /** ODS cell extraction (plans.OdsCells). */
+  def odsCells(c: Column): Column =
+    GraftFunctions("graft_ods_cells", c)
 
-  /** ODS fixture encoder (plans.OdsEncode), column form; same
-    * registration precondition. */
-  def odsEncode(seed: Column, nRows: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_ods_encode", seed, nRows)
-  }
+  /** ODS fixture encoder (plans.OdsEncode). */
+  def odsEncode(seed: Column, nRows: Column): Column =
+    GraftFunctions("graft_ods_encode", seed, nRows)
 
-  /** Encrypted-PDF fixture encoder (plans.PdfEncryptEncode), column
-    * form; same registration precondition. */
-  def pdfEncryptEncode(seed: Column, nPages: Column, mode: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_pdf_encrypt_encode", seed, nPages, mode)
-  }
+  /** Encrypted-PDF fixture encoder (plans.PdfEncryptEncode). */
+  def pdfEncryptEncode(seed: Column, nPages: Column, mode: Column): Column =
+    GraftFunctions("graft_pdf_encrypt_encode", seed, nPages, mode)
 
-  /** Embedded-CMap composite-font PDF encoder (plans.PdfCMapEncode),
-    * column form; same registration precondition. */
-  def pdfCMapEncode(seed: Column, nPages: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_pdf_cmap_encode", seed, nPages)
-  }
+  /** Embedded-CMap composite-font PDF encoder (plans.PdfCMapEncode). */
+  def pdfCMapEncode(seed: Column, nPages: Column): Column =
+    GraftFunctions("graft_pdf_cmap_encode", seed, nPages)
 
-  /** CFB directory census (plans.CfbEntries), column form; same
-    * registration precondition. */
-  def cfbEntries(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_cfb_entries", c)
-  }
+  /** CFB directory census (plans.CfbEntries). */
+  def cfbEntries(c: Column): Column =
+    GraftFunctions("graft_cfb_entries", c)
 
-  /** CFB stream-name classifier (plans.CfbKind), column form; same
-    * registration precondition. */
-  def cfbKind(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_cfb_kind", c)
-  }
+  /** CFB stream-name classifier (plans.CfbKind). */
+  def cfbKind(c: Column): Column =
+    GraftFunctions("graft_cfb_kind", c)
 
-  /** PowerPoint 97-2003 binary text extraction (plans.PptText),
-    * column form; same registration precondition. */
-  def pptText(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_ppt_text", c)
-  }
+  /** PowerPoint 97-2003 binary text extraction (plans.PptText). */
+  def pptText(c: Column): Column =
+    GraftFunctions("graft_ppt_text", c)
 
-  /** PowerPoint 97 binary fixture encoder (plans.PptEncode), column
-    * form; same registration precondition. */
-  def pptEncode(seed: Column, nSlides: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_ppt_encode", seed, nSlides)
-  }
+  /** PowerPoint 97 binary fixture encoder (plans.PptEncode). */
+  def pptEncode(seed: Column, nSlides: Column): Column =
+    GraftFunctions("graft_ppt_encode", seed, nSlides)
 
-  /** Excel 97-2003 binary cell extraction (plans.XlsCells), column
-    * form; same registration precondition. */
-  def xlsCells(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_xls_cells", c)
-  }
+  /** Excel 97-2003 binary cell extraction (plans.XlsCells). */
+  def xlsCells(c: Column): Column =
+    GraftFunctions("graft_xls_cells", c)
 
-  /** Excel 97 binary fixture encoder (plans.XlsEncode), column form;
-    * same registration precondition. */
-  def xlsEncode(seed: Column, nRows: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_xls_encode", seed, nRows)
-  }
+  /** Excel 97 binary fixture encoder (plans.XlsEncode). */
+  def xlsEncode(seed: Column, nRows: Column): Column =
+    GraftFunctions("graft_xls_encode", seed, nRows)
 
-  /** Word 97-2003 binary text extraction (plans.DocText), column
-    * form; same registration precondition. */
-  def docText(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_doc_text", c)
-  }
+  /** Word 97-2003 binary text extraction (plans.DocText). */
+  def docText(c: Column): Column =
+    GraftFunctions("graft_doc_text", c)
 
-  /** Word 97 binary fixture encoder (plans.DocEncode), column form;
-    * same registration precondition. */
-  def docEncode(seed: Column, nParas: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_doc_encode", seed, nParas)
-  }
+  /** Word 97 binary fixture encoder (plans.DocEncode). */
+  def docEncode(seed: Column, nParas: Column): Column =
+    GraftFunctions("graft_doc_encode", seed, nParas)
 
-  /** tar member census (plans.TarEntries), column form; same
-    * registration precondition. */
-  def tarEntries(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_tar_entries", c)
-  }
+  /** tar member census (plans.TarEntries). */
+  def tarEntries(c: Column): Column =
+    GraftFunctions("graft_tar_entries", c)
 
-  /** tar fixture encoder (plans.TarEncode), column form; same
-    * registration precondition. */
-  def tarEncode(seed: Column, nEntries: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_tar_encode", seed, nEntries)
-  }
+  /** tar fixture encoder (plans.TarEncode). */
+  def tarEncode(seed: Column, nEntries: Column): Column =
+    GraftFunctions("graft_tar_encode", seed, nEntries)
 
-  /** Plain-text payload decode (plans.PlainText), column form; same
-    * registration precondition. */
-  def plainText(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_plain_text", c)
-  }
+  /** Plain-text payload decode (plans.PlainText). */
+  def plainText(c: Column): Column =
+    GraftFunctions("graft_plain_text", c)
 
-  /** RTF text extraction (plans.RtfText), column form; same
-    * registration precondition. */
-  def rtfText(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_rtf_text", c)
-  }
+  /** RTF text extraction (plans.RtfText). */
+  def rtfText(c: Column): Column =
+    GraftFunctions("graft_rtf_text", c)
 
-  /** RTF fixture encoder (plans.RtfEncode), column form; same
-    * registration precondition. */
-  def rtfEncode(seed: Column, nParas: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_rtf_encode", seed, nParas)
-  }
+  /** RTF fixture encoder (plans.RtfEncode). */
+  def rtfEncode(seed: Column, nParas: Column): Column =
+    GraftFunctions("graft_rtf_encode", seed, nParas)
 
-  /** docx text extraction (plans.DocxText), column form; same
-    * registration precondition. */
-  def docxText(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_docx_text", c)
-  }
+  /** docx text extraction (plans.DocxText). */
+  def docxText(c: Column): Column =
+    GraftFunctions("graft_docx_text", c)
 
-  /** docx fixture encoder (plans.DocxEncode), column form; same
-    * registration precondition. */
-  def docxEncode(seed: Column, nParas: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_docx_encode", seed, nParas)
-  }
+  /** docx fixture encoder (plans.DocxEncode). */
+  def docxEncode(seed: Column, nParas: Column): Column =
+    GraftFunctions("graft_docx_encode", seed, nParas)
 
-  /** xlsx cell extraction (plans.XlsxCells), column form; same
-    * registration precondition. */
-  def xlsxCells(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_xlsx_cells", c)
-  }
+  /** xlsx cell extraction (plans.XlsxCells). */
+  def xlsxCells(c: Column): Column =
+    GraftFunctions("graft_xlsx_cells", c)
 
-  /** xlsx fixture encoder (plans.XlsxEncode), column form; same
-    * registration precondition. */
-  def xlsxEncode(seed: Column, nRows: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_xlsx_encode", seed, nRows)
-  }
+  /** xlsx fixture encoder (plans.XlsxEncode). */
+  def xlsxEncode(seed: Column, nRows: Column): Column =
+    GraftFunctions("graft_xlsx_encode", seed, nRows)
 
-  /** pptx slide texts (plans.PptxSlides), column form; same
-    * registration precondition. */
-  def pptxSlides(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_pptx_slides", c)
-  }
+  /** pptx slide texts (plans.PptxSlides). */
+  def pptxSlides(c: Column): Column =
+    GraftFunctions("graft_pptx_slides", c)
 
-  /** pptx fixture encoder (plans.PptxEncode), column form; same
-    * registration precondition. */
-  def pptxEncode(seed: Column, nSlides: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_pptx_encode", seed, nSlides)
-  }
+  /** pptx fixture encoder (plans.PptxEncode). */
+  def pptxEncode(seed: Column, nSlides: Column): Column =
+    GraftFunctions("graft_pptx_encode", seed, nSlides)
 
-  /** EPUB chapter texts (plans.EpubChapters), column form; same
-    * registration precondition. */
-  def epubChapters(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_epub_chapters", c)
-  }
+  /** EPUB chapter texts (plans.EpubChapters). */
+  def epubChapters(c: Column): Column =
+    GraftFunctions("graft_epub_chapters", c)
 
-  /** EPUB fixture encoder (plans.EpubEncode), column form; same
-    * registration precondition. */
-  def epubEncode(seed: Column, nChapters: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_epub_encode", seed, nChapters)
-  }
+  /** EPUB fixture encoder (plans.EpubEncode). */
+  def epubEncode(seed: Column, nChapters: Column): Column =
+    GraftFunctions("graft_epub_encode", seed, nChapters)
 
-  /** ZIP sub-format detection (plans.ZipKind), column form; same
-    * registration precondition. */
-  def zipKind(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_zip_kind", c)
-  }
+  /** ZIP sub-format detection (plans.ZipKind). */
+  def zipKind(c: Column): Column =
+    GraftFunctions("graft_zip_kind", c)
 
-  /** sitemap.xml entry list (plans.SitemapUrls), column form; same
-    * registration precondition. */
-  def sitemapUrls(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_sitemap_urls", c)
-  }
+  /** sitemap.xml entry list (plans.SitemapUrls). */
+  def sitemapUrls(c: Column): Column =
+    GraftFunctions("graft_sitemap_urls", c)
 
-  /** robots.txt directive list (plans.RobotsRules), column form; same
-    * registration precondition. */
-  def robotsRules(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_robots_rules", c)
-  }
+  /** robots.txt directive list (plans.RobotsRules). */
+  def robotsRules(c: Column): Column =
+    GraftFunctions("graft_robots_rules", c)
 
-  /** robots.txt access verdict (plans.RobotsAllowed), column form;
-    * same registration precondition. */
-  def robotsAllowed(txt: Column, agent: Column, path: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_robots_allowed", txt, agent, path)
-  }
+  /** robots.txt access verdict (plans.RobotsAllowed). */
+  def robotsAllowed(txt: Column, agent: Column, path: Column): Column =
+    GraftFunctions("graft_robots_allowed", txt, agent, path)
 
-  /** HTTP response-message triage (plans.HttpBody), column form; same
-    * registration precondition. */
-  def httpBody(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_http_body", c)
-  }
+  /** HTTP response-message triage (plans.HttpBody). */
+  def httpBody(c: Column): Column =
+    GraftFunctions("graft_http_body", c)
 
-  /** Charset-aware body → text decode (plans.HttpText), column form;
-    * same registration precondition. */
-  def httpText(body: Column, charset: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_http_text", body, charset)
-  }
+  /** Charset-aware body → text decode (plans.HttpText). */
+  def httpText(body: Column, charset: Column): Column =
+    GraftFunctions("graft_http_text", body, charset)
 
-  /** HTTP response fixture builder (plans.HttpWrap), column form;
-    * same registration precondition. */
+  /** HTTP response fixture builder (plans.HttpWrap). */
   def httpWrap(seed: Column, status: Column, contentType: Column,
-      body: Column, mode: Column, coding: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_http_wrap", seed, status, contentType, body, mode,
+      body: Column, mode: Column, coding: Column): Column =
+    GraftFunctions("graft_http_wrap", seed, status, contentType, body, mode,
       coding)
-  }
 
-  /** PDF triage (plans.PdfMeta), column form; same registration
-    * precondition. */
-  def pdfMeta(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_pdf_meta", c)
-  }
+  /** PDF triage (plans.PdfMeta). */
+  def pdfMeta(c: Column): Column =
+    GraftFunctions("graft_pdf_meta", c)
 
-  /** PDF fixture encoder (plans.PdfEncode), column form; same
-    * registration precondition. layout: 0 classic xref table, 1 xref
-    * stream (predictor), 2 xref stream + object stream. */
+  /** PDF fixture encoder (plans.PdfEncode). layout: 0 classic xref
+    * table, 1 xref stream (predictor), 2 xref stream + object stream. */
   def pdfEncode(seed: Column, nPages: Column, minor: Column,
-      encrypted: Column, layout: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_pdf_encode", seed, nPages, minor, encrypted, layout)
-  }
+      encrypted: Column, layout: Column): Column =
+    GraftFunctions("graft_pdf_encode", seed, nPages, minor, encrypted, layout)
 
-  /** PDF page-text extraction (plans.PdfPageTexts), column form; same
-    * registration precondition. */
-  def pdfPageTexts(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_pdf_page_texts", c)
-  }
+  /** PDF page-text extraction (plans.PdfPageTexts). */
+  def pdfPageTexts(c: Column): Column =
+    GraftFunctions("graft_pdf_page_texts", c)
 
-  /** PDF text-fixture encoder (plans.PdfTextEncode), column form;
-    * same registration precondition. */
-  def pdfTextEncode(seed: Column, nPages: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_pdf_text_encode", seed, nPages)
-  }
+  /** PDF text-fixture encoder (plans.PdfTextEncode). */
+  def pdfTextEncode(seed: Column, nPages: Column): Column =
+    GraftFunctions("graft_pdf_text_encode", seed, nPages)
 
-  /** Gzip member triage (plans.GzipMeta), column form; same
-    * registration precondition. */
-  def gzipMeta(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_gzip_meta", c)
-  }
+  /** Gzip member triage (plans.GzipMeta). */
+  def gzipMeta(c: Column): Column =
+    GraftFunctions("graft_gzip_meta", c)
 
-  /** Gzip fixture encoder (plans.GzipEncode), column form; same
-    * registration precondition. */
+  /** Gzip fixture encoder (plans.GzipEncode). */
   def gzipEncode(seed: Column, nPayload: Column, variant: Column,
-      members: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_gzip_encode", seed, nPayload, variant, members)
-  }
+      members: Column): Column =
+    GraftFunctions("graft_gzip_encode", seed, nPayload, variant, members)
 
-  /** AVIF triage (plans.AvifMeta), column form; same registration
-    * precondition. */
-  def avifMeta(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_avif_meta", c)
-  }
+  /** AVIF triage (plans.AvifMeta). */
+  def avifMeta(c: Column): Column =
+    GraftFunctions("graft_avif_meta", c)
 
-  /** AVIF fixture encoder (plans.AvifEncode), column form; same
-    * registration precondition. */
-  def avifEncode(w: Column, h: Column, seed: Column, animated: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_avif_encode", w, h, seed, animated)
-  }
+  /** AVIF fixture encoder (plans.AvifEncode). */
+  def avifEncode(w: Column, h: Column, seed: Column, animated: Column): Column =
+    GraftFunctions("graft_avif_encode", w, h, seed, animated)
 
-  /** HTML visible-text extraction (plans.HtmlText), column form; same
-    * registration precondition. */
-  def htmlText(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_html_text", c)
-  }
+  /** HTML visible-text extraction (plans.HtmlText). */
+  def htmlText(c: Column): Column =
+    GraftFunctions("graft_html_text", c)
 
-  /** WAV header metadata (plans.WavMeta), column form; same
-    * registration precondition. */
-  def wavMeta(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_wav_meta", c)
-  }
+  /** WAV header metadata (plans.WavMeta). */
+  def wavMeta(c: Column): Column =
+    GraftFunctions("graft_wav_meta", c)
 
-  /** BMP pixel statistics (plans.BmpStats), column form; same
-    * registration precondition. */
-  def bmpStats(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_bmp_stats", c)
-  }
+  /** BMP pixel statistics (plans.BmpStats). */
+  def bmpStats(c: Column): Column =
+    GraftFunctions("graft_bmp_stats", c)
 
   /** PNG full pixel decode — inflate + unfilter + channel sums
-    * (plans.PngStats), column form; same registration precondition. */
-  def pngStats(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_png_stats", c)
-  }
+    * (plans.PngStats). */
+  def pngStats(c: Column): Column =
+    GraftFunctions("graft_png_stats", c)
 
-  /** Deterministic valid-PNG synthesis (plans.PngEncode), column form;
-    * same registration precondition. */
-  def pngEncode(w: Column, h: Column, seed: Column, alpha: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_png_encode", w, h, seed, alpha)
-  }
+  /** Deterministic valid-PNG synthesis (plans.PngEncode). */
+  def pngEncode(w: Column, h: Column, seed: Column, alpha: Column): Column =
+    GraftFunctions("graft_png_encode", w, h, seed, alpha)
 
   /** GIF LZW pixel decode — palette indices to channel sums
-    * (plans.GifPixels), column form; same registration precondition. */
-  def gifPixels(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_gif_pixels", c)
-  }
+    * (plans.GifPixels). */
+  def gifPixels(c: Column): Column =
+    GraftFunctions("graft_gif_pixels", c)
 
-  /** Deterministic valid-GIF synthesis with real LZW
-    * (plans.GifEncode), column form; same registration precondition. */
-  def gifEncode(w: Column, h: Column, seed: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_gif_encode", w, h, seed)
-  }
+  /** Deterministic valid-GIF synthesis with real LZW (plans.GifEncode). */
+  def gifEncode(w: Column, h: Column, seed: Column): Column =
+    GraftFunctions("graft_gif_encode", w, h, seed)
 
   /** Baseline-DCT JPEG pixel decode — Huffman + dequant + IDCT to
-    * channel sums (plans.JpegPixels), column form; same registration
-    * precondition. */
-  def jpegPixels(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_jpeg_pixels", c)
-  }
+    * channel sums (plans.JpegPixels). */
+  def jpegPixels(c: Column): Column =
+    GraftFunctions("graft_jpeg_pixels", c)
 
   /** Deterministic exactly-decodable baseline-JPEG synthesis
-    * (plans.JpegEncode), column form; same registration precondition. */
-  def jpegEncode(w: Column, h: Column, seed: Column, restartRows: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_jpeg_encode", w, h, seed, restartRows)
-  }
+    * (plans.JpegEncode). */
+  def jpegEncode(w: Column, h: Column, seed: Column, restartRows: Column): Column =
+    GraftFunctions("graft_jpeg_encode", w, h, seed, restartRows)
 
-  /** Deterministic exactly-decodable COLOR baseline-JPEG synthesis
-    * with real subsampling (plans.JpegEncodeColor; mode 0/1/2 = 4:4:4
-    * / 4:2:2 / 4:2:0), column form; same registration precondition. */
+  /** Deterministic exactly-decodable COLOR baseline-JPEG synthesis with
+    * real subsampling (plans.JpegEncodeColor; mode 0/1/2 = 4:4:4 /
+    * 4:2:2 / 4:2:0). */
   def jpegEncodeColor(w: Column, h: Column, seed: Column, mode: Column,
-      restartRows: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_jpeg_encode_color", w, h, seed, mode, restartRows)
-  }
+      restartRows: Column): Column =
+    GraftFunctions("graft_jpeg_encode_color", w, h, seed, mode, restartRows)
 
-  /** INTERLACED single-frame GIF synthesis, column form. */
-  def gifEncodeIlc(w: Column, h: Column, seed: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_gif_encode_ilc", w, h, seed)
-  }
+  /** INTERLACED single-frame GIF synthesis. */
+  def gifEncodeIlc(w: Column, h: Column, seed: Column): Column =
+    GraftFunctions("graft_gif_encode_ilc", w, h, seed)
 
-  /** ADAM7-interlaced PNG synthesis, column form. */
-  def pngEncodeAdam7(w: Column, h: Column, seed: Column, alpha: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_png_encode_adam7", w, h, seed, alpha)
-  }
+  /** ADAM7-interlaced PNG synthesis. */
+  def pngEncodeAdam7(w: Column, h: Column, seed: Column, alpha: Column): Column =
+    GraftFunctions("graft_png_encode_adam7", w, h, seed, alpha)
 
-  /** APNG per-frame pixel decode (plans.PngFrames), column form. */
-  def pngFrames(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_png_frames", c)
-  }
+  /** APNG per-frame pixel decode (plans.PngFrames). */
+  def pngFrames(c: Column): Column =
+    GraftFunctions("graft_png_frames", c)
 
-  /** Deterministic exactly-decodable APNG synthesis, column form. */
-  def pngEncodeApng(w: Column, h: Column, frames: Column, seed: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_png_encode_apng", w, h, frames, seed)
-  }
+  /** Deterministic exactly-decodable APNG synthesis. */
+  def pngEncodeApng(w: Column, h: Column, frames: Column, seed: Column): Column =
+    GraftFunctions("graft_png_encode_apng", w, h, frames, seed)
 
-  /** Animated-GIF per-frame pixel decode (plans.GifFrames), column
-    * form; same registration precondition. */
-  def gifFrames(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_gif_frames", c)
-  }
+  /** Animated-GIF per-frame pixel decode (plans.GifFrames). */
+  def gifFrames(c: Column): Column =
+    GraftFunctions("graft_gif_frames", c)
 
   /** Deterministic exactly-decodable MULTI-FRAME GIF synthesis
-    * (plans.GifEncodeAnim), column form; same registration
-    * precondition. */
-  def gifEncodeAnim(w: Column, h: Column, frames: Column, seed: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_gif_encode_anim", w, h, frames, seed)
-  }
+    * (plans.GifEncodeAnim). */
+  def gifEncodeAnim(w: Column, h: Column, frames: Column, seed: Column): Column =
+    GraftFunctions("graft_gif_encode_anim", w, h, frames, seed)
 
   /** Deterministic exactly-decodable PROGRESSIVE-JPEG synthesis
-    * (plans.JpegEncodeProgressive; mode 0/1/2 = color subsampling,
-    * 3 = grayscale), column form; same registration precondition. */
+    * (plans.JpegEncodeProgressive; mode 0/1/2 = color subsampling, 3 =
+    * grayscale). */
   def jpegEncodeProgressive(w: Column, h: Column, seed: Column, mode: Column,
-      restartRows: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_jpeg_encode_progressive", w, h, seed, mode, restartRows)
-  }
+      restartRows: Column): Column =
+    GraftFunctions("graft_jpeg_encode_progressive", w, h, seed, mode,
+      restartRows)
 
-  /** Nearest-neighbor BMP resize stats (plans.BmpResize), column
-    * form; same registration precondition. */
-  def bmpResize(c: Column, w2: Column, h2: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_bmp_resize", c, w2, h2)
-  }
+  /** Nearest-neighbor BMP resize stats (plans.BmpResize). */
+  def bmpResize(c: Column, w2: Column, h2: Column): Column =
+    GraftFunctions("graft_bmp_resize", c, w2, h2)
 
-  /** 12-bit blocky SOF1 synthesis (plans.JpegEncode.encodeBlocky12),
-    * column form; same registration precondition. */
+  /** 12-bit blocky SOF1 synthesis (plans.JpegEncode.encodeBlocky12). */
   def jpegEncode12(w: Column, h: Column, seed: Column,
-      restartRows: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_jpeg_encode12", w, h, seed, restartRows)
-  }
+      restartRows: Column): Column =
+    GraftFunctions("graft_jpeg_encode12", w, h, seed, restartRows)
 
   /** Deterministic exactly-decodable LOSSLESS-JPEG synthesis
     * (plans.JpegEncode.encodeLossless: SOF3, predictor 1..7, gray or
-    * 3-component), column form; same registration precondition. */
+    * 3-component). */
   def jpegEncodeLossless(w: Column, h: Column, seed: Column, nComp: Column,
-      pred: Column, prec: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_jpeg_encode_lossless", w, h, seed, nComp, pred, prec)
-  }
+      pred: Column, prec: Column): Column =
+    GraftFunctions("graft_jpeg_encode_lossless", w, h, seed, nComp, pred, prec)
 
-  /** AVI header parse (plans.AviMeta), column form; same registration
-    * precondition. */
-  def aviMeta(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_avi_meta", c)
-  }
+  /** AVI header parse (plans.AviMeta). */
+  def aviMeta(c: Column): Column =
+    GraftFunctions("graft_avi_meta", c)
 
-  /** MJPEG-in-AVI per-frame pixel decode (plans.AviFrames), column
-    * form; same registration precondition. */
-  def aviFrames(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_avi_frames", c)
-  }
+  /** MJPEG-in-AVI per-frame pixel decode (plans.AviFrames). */
+  def aviFrames(c: Column): Column =
+    GraftFunctions("graft_avi_frames", c)
 
   /** Deterministic exactly-decodable MJPEG AVI synthesis
-    * (plans.AviEncode), column form; same registration precondition. */
+    * (plans.AviEncode). */
   def aviEncode(w: Column, h: Column, nFrames: Column, seed: Column,
-      mode: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_avi_encode", w, h, nFrames, seed, mode)
-  }
+      mode: Column): Column =
+    GraftFunctions("graft_avi_encode", w, h, nFrames, seed, mode)
 
-  /** Uncompressed-strip TIFF pixel decode (plans.TiffPixels), column
-    * form; same registration precondition. */
-  def tiffPixels(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_tiff_pixels", c)
-  }
+  /** Uncompressed-strip TIFF pixel decode (plans.TiffPixels). */
+  def tiffPixels(c: Column): Column =
+    GraftFunctions("graft_tiff_pixels", c)
 
   /** Deterministic exactly-decodable baseline-TIFF synthesis
-    * (plans.TiffEncode), column form; same registration
-    * precondition. */
+    * (plans.TiffEncode). */
   def tiffEncode(w: Column, h: Column, seed: Column, mode: Column,
-      rowsPerStrip: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_tiff_encode", w, h, seed, mode, rowsPerStrip)
-  }
+      rowsPerStrip: Column): Column =
+    GraftFunctions("graft_tiff_encode", w, h, seed, mode, rowsPerStrip)
 
-  /** ISO-BMFF (MP4) box-tree triage (plans.Mp4Meta), column form;
-    * same registration precondition. */
-  def mp4Meta(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_mp4_meta", c)
-  }
+  /** ISO-BMFF (MP4) box-tree triage (plans.Mp4Meta). */
+  def mp4Meta(c: Column): Column =
+    GraftFunctions("graft_mp4_meta", c)
 
-  /** Deterministic structurally-valid MP4 synthesis (plans.Mp4Encode),
-    * column form; same registration precondition. */
+  /** Deterministic structurally-valid MP4 synthesis (plans.Mp4Encode). */
   def mp4Encode(w: Column, h: Column, nVideo: Column, nAudio: Column,
       timescale: Column, duration: Column, nFragments: Column,
-      samplesPerFrag: Column, seed: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_mp4_encode", w, h, nVideo, nAudio, timescale,
+      samplesPerFrag: Column, seed: Column): Column =
+    GraftFunctions("graft_mp4_encode", w, h, nVideo, nAudio, timescale,
       duration, nFragments, samplesPerFrag, seed)
-  }
 
-  /** PCM sample decode to channel sums + peak (plans.WavPcm), column
-    * form; same registration precondition. */
-  def wavPcm(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_wav_pcm", c)
-  }
+  /** PCM sample decode to channel sums + peak (plans.WavPcm). */
+  def wavPcm(c: Column): Column =
+    GraftFunctions("graft_wav_pcm", c)
 
   /** Deterministic exactly-decodable 16-bit PCM WAV synthesis
-    * (plans.WavEncode), column form; same registration precondition. */
-  def wavEncode(nFrames: Column, channels: Column, seed: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_wav_encode", nFrames, channels, seed)
-  }
+    * (plans.WavEncode). */
+  def wavEncode(nFrames: Column, channels: Column, seed: Column): Column =
+    GraftFunctions("graft_wav_encode", nFrames, channels, seed)
 
-  /** IEEE-float WAV sample decode (plans.WavFloat), column form;
-    * same registration precondition. */
-  def wavFloat(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_wav_float", c)
-  }
+  /** IEEE-float WAV sample decode (plans.WavFloat). */
+  def wavFloat(c: Column): Column =
+    GraftFunctions("graft_wav_float", c)
 
   /** Deterministic exactly-decodable IEEE-float WAV synthesis
-    * (plans.WavFloat.encode), column form; same registration
-    * precondition. */
-  def wavEncodeFloat(nFrames: Column, channels: Column, seed: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_wav_encode_float", nFrames, channels, seed)
-  }
+    * (plans.WavFloat.encode). */
+  def wavEncodeFloat(nFrames: Column, channels: Column, seed: Column): Column =
+    GraftFunctions("graft_wav_encode_float", nFrames, channels, seed)
 
   /** Deterministic exactly-decodable G.711 WAV synthesis
-    * (plans.WavEncode.encodeG711: µ-law when mulaw, else A-law),
-    * column form; same registration precondition. */
+    * (plans.WavEncode.encodeG711: µ-law when mulaw, else A-law). */
   def wavEncodeG711(nFrames: Column, channels: Column, seed: Column,
-      mulaw: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_wav_encode_g711", nFrames, channels, seed, mulaw)
-  }
+      mulaw: Column): Column =
+    GraftFunctions("graft_wav_encode_g711", nFrames, channels, seed, mulaw)
 
-  /** Audio tag triage (plans.AudioTags: FLAC VORBIS_COMMENT + MP3
-    * ID3v2 text frames), column form; same registration
-    * precondition. */
-  def audioTags(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_audio_tags", c)
-  }
+  /** Audio tag triage (plans.AudioTags: FLAC VORBIS_COMMENT + MP3 ID3v2
+    * text frames). */
+  def audioTags(c: Column): Column =
+    GraftFunctions("graft_audio_tags", c)
 
   /** EXIF IFD-chain triage (plans.ExifMeta: orientation,
-    * DateTimeOriginal, Make over JPEG/APP1 or bare TIFF), column form;
-    * same registration precondition. */
-  def exifMeta(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_exif_meta", c)
-  }
+    * DateTimeOriginal, Make over JPEG/APP1 or bare TIFF). */
+  def exifMeta(c: Column): Column =
+    GraftFunctions("graft_exif_meta", c)
 
-  /** Deterministic EXIF fixture synthesis (plans.ExifMeta.encode),
-    * column form; same precondition. */
+  /** Deterministic EXIF fixture synthesis (plans.ExifMeta.encode). */
   def exifEncode(seed: Column, le: Column, wrapJpeg: Column,
       orientation: Column, make: Column, dt: Column,
-      dtOriginal: Column, latCsec: Column, lonCsec: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_exif_encode", seed, le, wrapJpeg, orientation,
-      make, dt, dtOriginal, latCsec, lonCsec)
-  }
+      dtOriginal: Column, latCsec: Column, lonCsec: Column): Column =
+    GraftFunctions("graft_exif_encode", seed, le, wrapJpeg, orientation, make,
+      dt, dtOriginal, latCsec, lonCsec)
 
-  /** FLAC STREAMINFO + metadata-chain triage (plans.FlacMeta), column
-    * form; same registration precondition. */
-  def flacMeta(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_flac_meta", c)
-  }
+  /** FLAC STREAMINFO + metadata-chain triage (plans.FlacMeta). */
+  def flacMeta(c: Column): Column =
+    GraftFunctions("graft_flac_meta", c)
 
   /** Deterministic conformant FLAC fixture synthesis
-    * (plans.FlacMeta.encode), column form; same precondition. */
+    * (plans.FlacMeta.encode). */
   def flacEncode(sampleRate: Column, channels: Column, bits: Column,
-      totalSamples: Column, seed: Column, padLen: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_flac_encode", sampleRate, channels, bits,
+      totalSamples: Column, seed: Column, padLen: Column): Column =
+    GraftFunctions("graft_flac_encode", sampleRate, channels, bits,
       totalSamples, seed, padLen)
-  }
 
-  /** MPEG Layer III frame-chain triage (plans.Mp3Meta), column form;
-    * same registration precondition. */
-  def mp3Meta(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_mp3_meta", c)
-  }
+  /** MPEG Layer III frame-chain triage (plans.Mp3Meta). */
+  def mp3Meta(c: Column): Column =
+    GraftFunctions("graft_mp3_meta", c)
 
-  /** Deterministic Layer III fixture synthesis (plans.Mp3Meta.encode),
-    * column form; same precondition. */
+  /** Deterministic Layer III fixture synthesis (plans.Mp3Meta.encode). */
   def mp3Encode(nFrames: Column, verSel: Column, rateIdx: Column,
       mono: Column, seed: Column, vbrStep: Column, id3Len: Column,
-      id3v1: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_mp3_encode", nFrames, verSel, rateIdx, mono, seed,
+      id3v1: Column): Column =
+    GraftFunctions("graft_mp3_encode", nFrames, verSel, rateIdx, mono, seed,
       vbrStep, id3Len, id3v1)
-  }
 
-  /** One-pass MinHash signature (plans.MinhashSignature), column form;
-    * same registration precondition. */
-  def minhash(c: Column, k: Int): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_minhash", c, org.apache.spark.sql.functions.lit(k))
-  }
+  /** One-pass MinHash signature (plans.MinhashSignature). */
+  def minhash(c: Column, k: Int): Column =
+    GraftFunctions("graft_minhash", c, org.apache.spark.sql.functions.lit(k))
 
-  /** One-pass hashed n-gram windows (plans.NgramHashes), column form;
-    * same registration precondition. */
-  def ngramHashes(c: Column, n: Int): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_ngram_hashes", c, org.apache.spark.sql.functions.lit(n))
-  }
+  /** One-pass hashed n-gram windows (plans.NgramHashes). */
+  def ngramHashes(c: Column, n: Int): Column =
+    GraftFunctions("graft_ngram_hashes", c,
+      org.apache.spark.sql.functions.lit(n))
 
   /** First index where two long arrays agree, -1 if none
-    * (plans.FirstAgree — the LSH band-dedup primitive), column form;
-    * same registration precondition. */
-  def firstAgree(a: Column, b: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_first_agree", a, b)
-  }
+    * (plans.FirstAgree — the LSH band-dedup primitive). */
+  def firstAgree(a: Column, b: Column): Column =
+    GraftFunctions("graft_first_agree", a, b)
 }

@@ -114,15 +114,7 @@ object XlsxCells {
     sb.toString
   }
 
-  /** One attribute's value from a tag-head substring, or null. */
-  private def attr(head: String, name: String): String = {
-    val k = s""" $name="""" // attributes in machine-written parts are "-quoted
-    val at = head.indexOf(k)
-    if (at < 0) return null
-    val start = at + k.length
-    val end = head.indexOf('"', start)
-    if (end < 0) null else head.substring(start, end)
-  }
+  import ZipExtract.attr
 
   def parse(zip: Array[Byte]): GenericArrayData = {
     val sheetBytes = ZipExtract.extract(zip, "xl/worksheets/sheet1.xml")

@@ -347,6 +347,18 @@ case class ZipExtract(left: Expression, right: Expression)
 
 object ZipExtract {
 
+  /** One `name="..."` attribute value from an XML tag head, or null.
+    * Attributes in machine-written package parts are "-quoted. Shared
+    * by the ZIP-packaged document decoders (xlsx, EPUB, ODF). */
+  private[plans] def attr(head: String, name: String): String = {
+    val k = s""" $name=""""
+    val at = head.indexOf(k)
+    if (at < 0) return null
+    val start = at + k.length
+    val end = head.indexOf('"', start)
+    if (end < 0) null else head.substring(start, end)
+  }
+
   /** Shared with the gzip/PDF tiers: never inflate more than 1 MiB. */
   private def MaxOut = GzipMeta.MaxInflate
 

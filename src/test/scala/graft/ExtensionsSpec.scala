@@ -519,11 +519,23 @@ class ExtensionsSpec extends SparkSpec {
     val viaExpr = pairs.select(Similarity.dot(col("va"), col("vb")).as("d")).agg(sum("d")).collect()(0).getDouble(0)
     val viaHof = pairs.select(Similarity.dotHof(col("va"), col("vb")).as("d")).agg(sum("d")).collect()(0).getDouble(0)
     assert(viaExpr === viaHof) // identical accumulation order -> bitwise equal
-    // SQL registration path
-    graft.plans.VectorExpressions.register(spark)
+    // SQL path: the builtin GraftExtensions injects
     val viaSql = pairs.createOrReplaceTempView("dot_pairs")
     val s = spark.sql("SELECT sum(graft_dot(va, vb)) FROM dot_pairs").collect()(0).getDouble(0)
     assert(s === viaExpr)
+  }
+
+  test("graft_dot keeps its arity gate after a Column helper is built") {
+    // a Column helper must not replace the injected builtin with an
+    // ungated copy: the wrong-arity SQL call fails at analysis with the
+    // gate's message, not with an index error from inside the builder
+    org.apache.spark.sql.SparkSession.setActiveSession(spark)
+    graft.plans.VectorExpressions.imgMeta(col("b"))
+    val e = intercept[Exception](spark.sql("SELECT graft_dot(array(1.0D))"))
+    val messages = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toList
+    assert(messages.exists(_.contains("graft_dot expects 2 argument(s), got 1")),
+      messages.mkString(" / "))
   }
 
   test("graft_cos fused cosine is bitwise-equal to dot/(norm*norm)") {

@@ -131,7 +131,6 @@ class GifPixelsSpec extends SparkSpec {
       (2L, "definitely not a gif".getBytes),
       (3L, graft.plans.GifEncode.encode(16, 16, 22L)))
     val df = rows.toDF("id", "b")
-    graft.plans.VectorExpressions.register(spark)
     val out = df.selectExpr("id", "graft_gif_pixels(b) AS s")
       .selectExpr("id", "s.width", "s.sum_r", "s.n_pixels")
       .orderBy("id").collect()

@@ -130,7 +130,6 @@ class Mp4Spec extends SparkSpec {
   }
 
   test("SQL registration: graft_mp4_meta composes with graft_mp4_encode") {
-    graft.plans.VectorExpressions.register(spark)
     val df = spark.sql(
       """SELECT graft_mp4_meta(graft_mp4_encode(
         |  320, 240, 2, 1, 1200, CAST(777 AS BIGINT), 2, 9,

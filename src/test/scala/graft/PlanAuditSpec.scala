@@ -182,7 +182,6 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("graft_topk rejects non-positive k at analysis time") {
-    graft.plans.TopKAggregate.register(spark)
     Tables.events(spark, sf).limit(1).createOrReplaceTempView("topk_probe")
     val e = intercept[Exception] {
       spark.sql("SELECT graft_topk(value, event_id, 0) FROM topk_probe").collect()

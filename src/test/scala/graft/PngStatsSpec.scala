@@ -112,7 +112,6 @@ class PngStatsSpec extends SparkSpec {
       (2L, "not a png at all".getBytes),
       (3L, graft.plans.PngEncode.encode(2, 6, 22L, true)))
     val df = rows.toDF("id", "b")
-    graft.plans.VectorExpressions.register(spark)
     val out = df.selectExpr("id", "graft_png_stats(b) AS s")
       .selectExpr("id", "s.width", "s.sum_r", "s.n_pixels")
       .orderBy("id").collect()

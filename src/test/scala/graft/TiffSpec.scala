@@ -662,7 +662,6 @@ class TiffSpec extends SparkSpec {
   }
 
   test("SQL registration: graft_tiff_pixels composes with graft_tiff_encode") {
-    graft.plans.VectorExpressions.register(spark)
     val r = spark.sql(
       """SELECT graft_tiff_pixels(graft_tiff_encode(
         |  5, 4, CAST(21 AS BIGINT), 1, 2)) AS s""".stripMargin)
