@@ -47,19 +47,6 @@ final class AppScopedCache[V](onEvict: V => Unit = (_: V) => (),
   def evict(spark: SparkSession, key: String): Unit =
     remove(fullKey(spark.sparkContext.applicationId, key))
 
-  /** Evict every entry of this app whose CALLER key satisfies
-    * `select`, running cleanups — the bounding hook for callers whose
-    * key space grows over the app's lifetime (e.g. one entry per
-    * table version): the caller decides which older family members a
-    * fresh insert supersedes. */
-  def evictMatching(spark: SparkSession, select: String => Boolean): Unit = {
-    import scala.jdk.CollectionConverters._
-    val prefix = spark.sparkContext.applicationId + ":"
-    entries.keySet().asScala.toList
-      .filter(k => k.startsWith(prefix) && select(k.substring(prefix.length)))
-      .foreach(remove)
-  }
-
   /** App-end teardown. By default it drops references WITHOUT running
     * cleanups: the stopping SparkContext releases every block itself,
     * and issuing unpersist RPCs here races the executor pools'

@@ -270,7 +270,9 @@ object CommitLog {
     * versions need reading per call. Keyed by the FIRST retained
     * version's (number, mtime): vacuum's horizon rewrite and a table
     * dropped-and-recreated at the same path both change that identity
-    * and force a clean rescan of the (then small) retained log. */
+    * and force a clean rescan of the (then small) retained log. This is
+    * not table state at one version, so it is not a [[Snapshot]]: the
+    * ledger spans every retained version and grows with each new one. */
   private case class LedgerState(firstV: Long, firstMtime: Long,
       through: Long, ids: Set[(Option[String], Long, Long)],
       floorQual: Option[Long])
@@ -571,69 +573,160 @@ object CommitLog {
       tsMillis: Long): DataFrame =
     read(spark, tablePath, Some(versionAtTimestamp(spark, tablePath, tsMillis)))
 
-  // ---- version-pinned metadata memos (r19) ----------------------------
-  // The resolved state AT A PINNED VERSION is immutable — commits are
-  // rename-published, never rewritten; a later checkpoint changes how
-  // the state is computed, not what it is — so the replay result is
-  // catalog metadata, memoizable per (table, version) with the same
-  // app-scoped lifetime as the footer-schema memo above. Every DSv2
-  // scan resolves snapshot + stats + DV refs (+ blooms under runtime
-  // filters) against its PINNED version, several times per query
-  // (schema resolve, planning, partition build); before the memo each
-  // resolve re-listed the log and re-read the commit tail. Unpinned
-  // (asOf=None) calls still replay fresh — they must see new commits.
-  private val snapshotCache = new graft.AppScopedCache[Seq[String]]()
-  private val fileStatsCache = new graft.AppScopedCache[FileStats]()
-  private val fileBloomsCache = new graft.AppScopedCache[FileBlooms]()
-  private val dvRefsCache = new graft.AppScopedCache[FileDvs]()
-  private val tableSchemaCache = new graft.AppScopedCache[Option[StructType]]()
+  // ---- one Snapshot per table version --------------------------------
 
-  /** The live file set at `asOf` (default: latest): start from the
-    * newest parquet checkpoint at or below it (when one exists) and
-    * replay only the JSON tail after it — O(checkpoint + tail), not
-    * O(versions). Paths relative to root. */
-  def snapshot(spark: SparkSession, tablePath: String,
-      asOf: Option[Long] = None): Seq[String] = asOf match {
-    case Some(v) => snapshotCache.getOrCompute(spark, s"$tablePath#snap#$v")(
-      prunedSnapshot(spark, tablePath, asOf, identity, (_, _) => true))
-    case None => prunedSnapshot(spark, tablePath, asOf, identity, (_, _) => true)
-  }
+  /** The table at one committed version, resolved once and shared by
+    * every metadata question about that version (Delta's Snapshot,
+    * scaled down). A resolve reads only the pin, the newest checkpoint
+    * id at or below it and the JSON tail after that checkpoint; every
+    * other field is lazy, computed at most once and only when asked —
+    * the commit path asks for `declared` and `constraints` and never
+    * pays the checkpoint reads a scan needs:
+    *  - `live`: the live data files, paths relative to the root;
+    *  - `stats`, `blooms`, `dvRefs`: checkpoint rows plus the tail;
+    *  - `declared`, `constraints`: the latest such field at or before
+    *    the version;
+    *  - `footerSchema`: the newest live file's footer — an undeclared
+    *    table's schema (uniform by contract: evolution requires a
+    *    declaration).
+    *
+    * Commits are published by put-if-absent and never rewritten, so the
+    * state at a version is immutable, and pinned and "latest" reads of
+    * it share one Snapshot. [[resolve]] caches it under (table path,
+    * version, the pinned commit file's mtime and length): a table
+    * dropped and re-created at the same path, or the horizon line
+    * vacuum rewrites in place, resolves afresh. The cache keeps the
+    * [[SnapshotKeepPins]] + 1 most recently used versions per table. */
+  private[graft] final class Snapshot private[CommitLog] (
+      spark: SparkSession, val tablePath: String, val version: Long,
+      private[CommitLog] val identity: (Long, Long),
+      val cp: Option[Long], val tail: Seq[(Long, String)]) {
 
-  /** Snapshot resolution with a metadata predicate pushed into the
-    * parquet domain: `keepCp` filters the checkpoint's (file, stats,
-    * blooms) rows AS A DATAFRAME — zone/bloom evaluation runs where
-    * the checkpoint lives, column pruning keeps unreferenced metadata
-    * columns (e.g. the ~8 KiB/column blooms on a zone-only scan) from
-    * ever being read, and only surviving file NAMES are collected. A
-    * resolve over an O(100k)-file table ships O(survivors) names to
-    * the driver, not ~GBs of per-file metadata. The JSON tail after
-    * the checkpoint is bounded by the checkpoint interval; `keepAdd`
-    * applies the same predicate to each tail add's parsed metadata
-    * driver-side (metadata-sized by construction). */
-  private def prunedSnapshot(spark: SparkSession, tablePath: String,
-      asOf: Option[Long], keepCp: DataFrame => DataFrame,
-      keepAdd: (Map[String, (Double, Double)], Map[String, String]) => Boolean): Seq[String] = {
-    val live = scala.collection.mutable.LinkedHashSet.empty[String]
-    val cp = bestCheckpoint(spark, tablePath, asOf)
-    cp.foreach { c =>
-      val dir = new Path(new Path(tablePath, LogDir), cpDirName(c))
-      live ++= keepCp(spark.read.parquet(dir.toString))
-        .select("file").collect().map(_.getString(0))
-    }
-    versions(spark, tablePath)
-      .filter(v => cp.forall(v > _) && asOf.forall(v <= _))
-      .foreach { v =>
-        val line = commitLine(spark, tablePath, v)
-        val st = extractStats(line)
-        val bl = extractBlooms(line)
-        extractArr(line, "adds").foreach { f =>
-          if (keepAdd(st.getOrElse(f, Map.empty), bl.getOrElse(f, Map.empty)))
-            live += f
-        }
-        live --= extractArr(line, "removes")
+    lazy val live: Seq[String] = replayable.replayLive()
+    lazy val stats: FileStats = replayable.replay(
+      cpMeta(_, "stats", parseStatsCols), extractStats)
+    lazy val blooms: FileBlooms = replayable.replay(
+      cpMeta(_, "blooms", parseBloomCols), extractBlooms)
+    lazy val dvRefs: FileDvs = replayable.replay(cpDvs, extractDvs)
+    lazy val declared: Option[StructType] = replayable.newest(line =>
+      schemaFieldRe.findFirstMatchIn(line).map(m =>
+        DataType.fromJson(unb64(m.group(1))).asInstanceOf[StructType]))
+    lazy val constraints: Constraints = replayable.newest(line =>
+      extractSection(line, "constraints").map(body =>
+        bloomColRe.findAllMatchIn(body).map(m =>
+          m.group(1) -> unb64(m.group(2))).toMap: Constraints))
+      .getOrElse(Map.empty)
+    lazy val footerSchema: Option[StructType] =
+      live.lastOption.map(f => spark.read.parquet(s"$tablePath/$f").schema)
+
+    /** This snapshot, or a fresh resolve of the same version when a
+      * vacuum has since deleted its checkpoint (vacuum leaves one at its
+      * horizon, at or below this version, and rewrites the horizon
+      * line to carry the schema and constraints). */
+    private[CommitLog] def replayable: Snapshot =
+      if (cp.forall(c => fsOf(spark, cpPath(c)).exists(cpPath(c)))) this
+      else resolveAt(spark, tablePath, version, identity)
+
+    private[CommitLog] def checkpoint(c: Long): DataFrame =
+      spark.read.parquet(cpPath(c).toString)
+
+    private def cpPath(c: Long) = new Path(new Path(tablePath, LogDir), cpDirName(c))
+
+    /** Order-aware: per version adds then removes, so a remove cancels
+      * only earlier adds and a later re-add (restore) wins. */
+    private def replayLive(): Seq[String] = {
+      val acc = scala.collection.mutable.LinkedHashSet.empty[String]
+      cp.foreach(c => acc ++= checkpoint(c).select("file").collect().map(_.getString(0)))
+      tail.foreach { case (_, line) =>
+        acc ++= extractArr(line, "adds")
+        acc --= extractArr(line, "removes")
       }
-    live.toSeq
+      acc.toSeq
+    }
+
+    /** Latest entry per file: the checkpoint's, then each tail commit's
+      * (entries are complete per-file replacements). */
+    private def replay[V](fromCp: DataFrame => Seq[(String, V)],
+        fromLine: String => Map[String, V]): Map[String, V] = {
+      val acc = scala.collection.mutable.Map.empty[String, V]
+      cp.foreach(c => acc ++= fromCp(checkpoint(c)))
+      tail.foreach { case (_, line) => acc ++= fromLine(line) }
+      acc.toMap
+    }
+
+    /** The newest value `field` finds in the commit lines at or below
+      * this version: the tail in hand first, then (only when the tail
+      * has none) the lines at or below the checkpoint. */
+    private def newest[T](field: String => Option[T]): Option[T] =
+      (tail.reverseIterator.map(_._2) ++ cp.iterator.flatMap(c =>
+        versions(spark, tablePath).filter(_ <= c).reverseIterator
+          .map(commitLine(spark, tablePath, _))))
+        .map(field).collectFirst { case Some(t) => t }
   }
+
+  /** Versions kept per table in the snapshot cache beyond the most
+    * recently used one (older versions re-resolve on demand —
+    * correctness is version-keyed, only latency changes). */
+  private val SnapshotKeepPins = 4
+
+  private val snapshots =
+    new graft.AppScopedCache[java.util.Map[Long, Snapshot]]()
+
+  /** Test observability: the versions of `tablePath` the cache holds. */
+  private[graft] def cachedPins(spark: SparkSession, tablePath: String): Set[Long] = {
+    import scala.jdk.CollectionConverters._
+    val pins = pinsOf(spark, tablePath)
+    pins.synchronized(pins.keySet.asScala.toSet)
+  }
+
+  private def pinsOf(spark: SparkSession, tablePath: String) =
+    snapshots.getOrCompute(spark, tablePath)(java.util.Collections.synchronizedMap(
+      new java.util.LinkedHashMap[Long, Snapshot](8, 0.75f, true) {
+        override def removeEldestEntry(e: java.util.Map.Entry[Long, Snapshot]): Boolean =
+          size() > SnapshotKeepPins + 1
+      }))
+
+  /** The [[Snapshot]] at `asOf`, latest when None (found by listing,
+    * so a concurrent writer's new commit is seen). Version -1 is the
+    * empty table before its first commit. A version the log does not
+    * hold — past the newest commit, or below the vacuum horizon — is
+    * refused, never served as some other version's state. */
+  private[graft] def resolve(spark: SparkSession, tablePath: String,
+      asOf: Option[Long] = None): Snapshot = {
+    val pin = asOf.getOrElse(latestVersion(spark, tablePath))
+    if (pin == -1L) return new Snapshot(spark, tablePath, -1L, (0L, 0L), None, Seq.empty)
+    val p = new Path(new Path(tablePath, LogDir), f"$pin%08d.json")
+    val st = try fsOf(spark, p).getFileStatus(p) catch {
+      case _: java.io.FileNotFoundException =>
+        val vs = versions(spark, tablePath)
+        throw new IllegalArgumentException(s"no version $pin exists in $tablePath" +
+          (if (vs.isEmpty) " (empty log)"
+          else if (pin < vs.head)
+            s" — oldest retained is v${vs.head} (below the vacuum horizon)"
+          else s" — the log holds v${vs.head}..v${vs.last}"))
+    }
+    val id = (st.getModificationTime, st.getLen)
+    val pins = pinsOf(spark, tablePath)
+    Option(pins.get(pin)).filter(_.identity == id).getOrElse {
+      val s = resolveAt(spark, tablePath, pin, id)
+      pins.put(pin, s)
+      s
+    }
+  }
+
+  private def resolveAt(spark: SparkSession, tablePath: String, pin: Long,
+      identity: (Long, Long)): Snapshot = {
+    val cp = bestCheckpoint(spark, tablePath, Some(pin))
+    val tail = versions(spark, tablePath).filter(v => cp.forall(v > _) && v <= pin)
+      .map(v => v -> commitLine(spark, tablePath, v))
+    new Snapshot(spark, tablePath, pin, identity, cp, tail)
+  }
+
+  /** The live file set at `asOf` (default: latest): the newest parquet
+    * checkpoint at or below it plus the JSON tail after it —
+    * O(checkpoint + tail), not O(versions). Paths relative to root. */
+  def snapshot(spark: SparkSession, tablePath: String,
+      asOf: Option[Long] = None): Seq[String] = resolve(spark, tablePath, asOf).live
 
   // controlled format written by commit(): values are uuid/part file
   // names (no quotes or commas inside), so a tiny scanner suffices
@@ -652,26 +745,7 @@ object CommitLog {
     * committed without stats simply never prune. Served from the
     * newest parquet checkpoint + JSON tail, like [[snapshot]]. */
   def fileStats(spark: SparkSession, tablePath: String,
-      asOf: Option[Long] = None): FileStats = asOf match {
-    case Some(v) => fileStatsCache.getOrCompute(spark, s"$tablePath#stats#$v")(
-      fileStatsUncached(spark, tablePath, asOf))
-    case None => fileStatsUncached(spark, tablePath, asOf)
-  }
-
-  private def fileStatsUncached(spark: SparkSession, tablePath: String,
-      asOf: Option[Long]): FileStats = {
-    val acc = scala.collection.mutable.Map.empty[String, Map[String, (Double, Double)]]
-    val cp = bestCheckpoint(spark, tablePath, asOf)
-    cp.foreach { c =>
-      readCheckpointRows(spark, tablePath, c).foreach { case (f, st, _) =>
-        if (st.nonEmpty) acc += f -> parseStatsCols(st)
-      }
-    }
-    versions(spark, tablePath)
-      .filter(v => cp.forall(v > _) && asOf.forall(v <= _))
-      .foreach(v => acc ++= extractStats(commitLine(spark, tablePath, v)))
-    acc.toMap
-  }
+      asOf: Option[Long] = None): FileStats = resolve(spark, tablePath, asOf).stats
 
   private val statsFileRe = """"((?:[^"\\]|\\.)+)":\{([^}]*)\}""".r
   private val statsColRe = """"((?:[^"\\]|\\.)+)":\[([^,\]]+),([^\]]+)\]""".r
@@ -726,26 +800,7 @@ object CommitLog {
     * [[fileStats]]: a file's filters ride the commit that ADDED it;
     * files committed without them simply never prune. */
   def fileBlooms(spark: SparkSession, tablePath: String,
-      asOf: Option[Long] = None): FileBlooms = asOf match {
-    case Some(v) => fileBloomsCache.getOrCompute(spark, s"$tablePath#blooms#$v")(
-      fileBloomsUncached(spark, tablePath, asOf))
-    case None => fileBloomsUncached(spark, tablePath, asOf)
-  }
-
-  private def fileBloomsUncached(spark: SparkSession, tablePath: String,
-      asOf: Option[Long]): FileBlooms = {
-    val acc = scala.collection.mutable.Map.empty[String, Map[String, String]]
-    val cp = bestCheckpoint(spark, tablePath, asOf)
-    cp.foreach { c =>
-      readCheckpointRows(spark, tablePath, c).foreach { case (f, _, bl) =>
-        if (bl.nonEmpty) acc += f -> parseBloomCols(bl)
-      }
-    }
-    versions(spark, tablePath)
-      .filter(v => cp.forall(v > _) && asOf.forall(v <= _))
-      .foreach(v => acc ++= extractBlooms(commitLine(spark, tablePath, v)))
-    acc.toMap
-  }
+      asOf: Option[Long] = None): FileBlooms = resolve(spark, tablePath, asOf).blooms
 
   private def extractDvs(json: String): Map[String, String] =
     extractSection(json, "dvs").fold(Map.empty[String, String]) { body =>
@@ -762,26 +817,7 @@ object CommitLog {
     * Entries for files no longer live may linger until a checkpoint
     * prunes them; callers filter by the snapshot's file set. */
   def deletionVectorRefs(spark: SparkSession, tablePath: String,
-      asOf: Option[Long] = None): FileDvs = asOf match {
-    case Some(v) => dvRefsCache.getOrCompute(spark, s"$tablePath#dvs#$v")(
-      deletionVectorRefsUncached(spark, tablePath, asOf))
-    case None => deletionVectorRefsUncached(spark, tablePath, asOf)
-  }
-
-  private def deletionVectorRefsUncached(spark: SparkSession, tablePath: String,
-      asOf: Option[Long]): FileDvs = {
-    val acc = scala.collection.mutable.Map.empty[String, String]
-    val cp = bestCheckpoint(spark, tablePath, asOf)
-    cp.foreach { c =>
-      readCheckpointDvs(spark, tablePath, c).foreach { case (f, enc) =>
-        if (enc.nonEmpty) acc += f -> enc
-      }
-    }
-    versions(spark, tablePath)
-      .filter(v => cp.forall(v > _) && asOf.forall(v <= _))
-      .foreach(v => acc ++= extractDvs(commitLine(spark, tablePath, v)))
-    acc.toMap
-  }
+      asOf: Option[Long] = None): FileDvs = resolve(spark, tablePath, asOf).dvRefs
 
   /** Decoded bytes behind one DV reference — inline base64, or a
     * driver-side sidecar read. Use per TOUCHED file (delete's prior
@@ -870,35 +906,22 @@ object CommitLog {
     }.toOption
   }
 
-  /** Checkpoint rows (file, statsBody, bloomsBody) — bodies in the
-    * same inner format the JSON commits use ("" = none), parsed
-    * per-file with the existing regexes. Full materialization: use
-    * only where the caller genuinely needs every file's metadata
-    * (fileStats/fileBlooms introspection); snapshot resolution goes
-    * through [[prunedSnapshot]], which keeps the metadata in the
-    * parquet domain. */
-  private def readCheckpointRows(spark: SparkSession, tablePath: String,
-      v: Long): Seq[(String, String, String)] = {
-    val dir = new Path(new Path(tablePath, LogDir), cpDirName(v))
-    spark.read.parquet(dir.toString)
-      .select("file", "stats", "blooms")
-      .collect()
-      .toSeq
-      .map(r => (r.getString(0),
-        Option(r.getString(1)).getOrElse(""),
-        Option(r.getString(2)).getOrElse("")))
-  }
+  /** (file, parsed body) for a checkpoint's non-empty `stats` or
+    * `blooms` column — only that column is read. Full materialization:
+    * for callers that need every file's metadata; scan planning goes
+    * through [[prunedFilesMulti]], which keeps it in the parquet domain. */
+  private def cpMeta[V](df: DataFrame, column: String,
+      parse: String => V): Seq[(String, V)] =
+    df.select("file", column).collect().toSeq.flatMap(r =>
+      Option(r.getString(1)).filter(_.nonEmpty).map(r.getString(0) -> parse(_)))
 
   /** (file, dv reference) pairs from a checkpoint; tolerant of
     * checkpoints written before the dv column existed. The
     * has-a-vector filter runs in the parquet domain, so only the
     * (rare) DV-carrying rows are ever collected — a 100k-file
     * checkpoint with a handful of deletes ships a handful of rows. */
-  private def readCheckpointDvs(spark: SparkSession, tablePath: String,
-      v: Long): Seq[(String, String)] = {
+  private def cpDvs(df: DataFrame): Seq[(String, String)] = {
     import org.apache.spark.sql.functions.{col, length}
-    val dir = new Path(new Path(tablePath, LogDir), cpDirName(v))
-    val df = spark.read.parquet(dir.toString)
     if (!df.columns.contains("dv")) Seq.empty
     else df.select("file", "dv")
       .filter(col("dv").isNotNull && length(col("dv")) > 0)
@@ -936,7 +959,7 @@ object CommitLog {
     val tailVs = versions(spark, tablePath)
       .filter(x => prev.forall(x > _) && x <= v)
     val tailLines = tailVs.map(x => commitLine(spark, tablePath, x))
-    // ORDER-AWARE tail replay (mirrors prunedSnapshot: per version,
+    // ORDER-AWARE tail replay (mirrors Snapshot.live: per version,
     // adds then removes): a remove cancels only EARLIER adds, and a
     // later re-add of the same name — restore() republishes
     // previously-removed files verbatim — wins. Set semantics here
@@ -1031,51 +1054,20 @@ object CommitLog {
 
   // ---- declared schema + CHECK constraints (table-boundary gate) ----
 
-  /** Footer schema of one immutable data file, memoized per app —
-    * catalog metadata, same discipline as the Tables schema memo:
-    * data files are never rewritten in place (uuid names, rename-
-    * based commit), so a footer read can be reused for the app's
-    * lifetime. Undeclared tables resolve their schema through this on
-    * EVERY read (DataFrameReader calls inferSchema + getTable per
-    * .load), which without the memo costs 2-4 one-task Spark jobs per
-    * lake query. */
-  private val footerSchemaCache = new graft.AppScopedCache[StructType]()
-
-  private[graft] def footerSchema(spark: SparkSession, tablePath: String,
-      file: String): StructType =
-    footerSchemaCache.getOrCompute(spark, s"$tablePath/$file#footer") {
-      spark.read.parquet(s"$tablePath/$file").schema
-    }
-
   private val schemaFieldRe = """"schemaB64":"([^"]*)"""".r
 
   /** The declared schema in force at `asOf` (latest declaration at or
     * before it), replayed from the log. None = never declared: the
     * table behaves as raw parquet, schema inferred from footers. */
   def tableSchema(spark: SparkSession, tablePath: String,
-      asOf: Option[Long] = None): Option[StructType] = asOf match {
-    case Some(v) => tableSchemaCache.getOrCompute(spark, s"$tablePath#schema#$v")(
-      tableSchemaUncached(spark, tablePath, asOf))
-    case None => tableSchemaUncached(spark, tablePath, asOf)
-  }
-
-  private def tableSchemaUncached(spark: SparkSession, tablePath: String,
-      asOf: Option[Long]): Option[StructType] =
-    versions(spark, tablePath).filter(v => asOf.forall(v <= _)).reverseIterator
-      .map(v => schemaFieldRe.findFirstMatchIn(commitLine(spark, tablePath, v)))
-      .collectFirst { case Some(m) =>
-        DataType.fromJson(unb64(m.group(1))).asInstanceOf[StructType] }
+      asOf: Option[Long] = None): Option[StructType] =
+    resolve(spark, tablePath, asOf).declared
 
   /** The CHECK-constraint set in force at `asOf` — the latest
     * `constraints` field wins (each carries the complete map). */
   def constraints(spark: SparkSession, tablePath: String,
       asOf: Option[Long] = None): Constraints =
-    versions(spark, tablePath).filter(v => asOf.forall(v <= _)).reverseIterator
-      .map(v => extractSection(commitLine(spark, tablePath, v), "constraints"))
-      .collectFirst { case Some(body) =>
-        bloomColRe.findAllMatchIn(body).map(m =>
-          m.group(1) -> unb64(m.group(2))).toMap: Constraints }
-      .getOrElse(Map.empty)
+    resolve(spark, tablePath, asOf).constraints
 
   /** Declare (or replace) the table's schema in one metadata-only
     * commit (dataChange=false — invisible to the change feed). From
@@ -1385,12 +1377,12 @@ object CommitLog {
     }
   }
 
-  /** DataFrameReader honoring the declared schema when one exists
+  /** DataFrameReader in the shape of `schema` when given — the
+    * declared schema, or an undeclared table's footer schema
     * (nullability relaxed: absent columns in pre-evolution files must
-    * materialize as NULL, not fail). */
-  private def readerFor(spark: SparkSession, tablePath: String,
-      asOf: Option[Long] = None) =
-    tableSchema(spark, tablePath, asOf).fold(spark.read)(d =>
+    * materialize as NULL, not fail); plain inference when None. */
+  private def readerFor(spark: SparkSession, schema: Option[StructType]) =
+    schema.fold(spark.read)(d =>
       // data files are written under PHYSICAL names (column mapping):
       // read in the physical shape; callers alias back to logical
       // AFTER anything needing `_metadata` ([[ColumnMapping]])
@@ -1401,10 +1393,8 @@ object CommitLog {
     * names — the companion every [[readerFor]] caller applies once
     * `_metadata` consultation (DV masking, provenance selects) is
     * done. Identity for unmapped tables. */
-  private def logicalFor(spark: SparkSession, tablePath: String,
-      asOf: Option[Long])(df: DataFrame): DataFrame =
-    tableSchema(spark, tablePath, asOf)
-      .fold(df)(d => ColumnMapping.toLogical(df, d))
+  private def logicalOf(s: Snapshot)(df: DataFrame): DataFrame =
+    s.declared.fold(df)(d => ColumnMapping.toLogical(df, d))
 
   /** Apply the version's deletion vectors to a parquet scan over
     * `files`: look the row's file up in a (metadata-sized) literal
@@ -1417,18 +1407,11 @@ object CommitLog {
     * through the driver. A no-DV table returns the frame untouched
     * (zero overhead). Must wrap the scan BEFORE projections:
     * `_metadata` is only resolvable on the file source relation. */
-  private def maskDvs(spark: SparkSession, tablePath: String,
-      asOf: Option[Long], files: Seq[String],
-      df: DataFrame): DataFrame =
-    maskDvsWith(tablePath, deletionVectorRefs(spark, tablePath, asOf), files, df)
-
-  /** [[maskDvs]] against already-resolved DV references — the
-    * multi-probe path replays them once per query, not once per term. */
-  private def maskDvsWith(tablePath: String, allRefs: FileDvs,
-      files: Seq[String], df: DataFrame): DataFrame = {
+  private def maskDvs(s: Snapshot, files: Seq[String], df: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{coalesce, col, element_at, lit, map, not}
+    val tablePath = s.tablePath
     val live = files.toSet
-    val refs = allRefs.filter { case (f, _) => live.contains(f) }
+    val refs = s.dvRefs.filter { case (f, _) => live.contains(f) }
     if (refs.isEmpty) df
     else {
       // keyed by file NAME: staged files carry fresh uuid names, so
@@ -1535,26 +1518,11 @@ object CommitLog {
     }
 
   /** The version's live files minus every file whose logged metadata
-    * provably excludes ALL of `preds` — zone legs evaluated in the
-    * checkpoint's parquet domain via [[zoneKeep]], bloom legs via
-    * [[bloomKeep]], tail adds checked driver-side from their parsed
-    * JSON (metadata-sized by construction). NaN or missing bounds keep
-    * the file: the `!(mx < lo || mn > hi)` form is false-on-NaN in
-    * both disjuncts, so a NaN zone never prunes. */
+    * provably excludes ALL of `preds` — [[prunedFilesMulti]] for one
+    * predicate. */
   private[graft] def prunedFilesFor(spark: SparkSession, tablePath: String,
-      asOf: Option[Long], preds: SkipPreds): Seq[String] = {
-    val keepCp = (preds.ranges.map { case (c, lo, hi) => zoneKeep(c, lo, hi) } ++
-      preds.probes.map { case (c, h) => bloomKeep(c, h) } ++
-      preds.probeSets.map { case (c, hs) =>
-        (df: DataFrame) => df.filter(hs.map(h => bloomKeepCol(c, h)).reduce(_ || _))
-      })
-      .foldLeft(identity[DataFrame] _)(_ andThen _)
-    prunedSnapshot(spark, tablePath, asOf, keepCp, (st, bl) =>
-      preds.ranges.forall { case (c, lo, hi) =>
-        st.get(c).forall { case (mn, mx) => !(mx < lo || mn > hi) } } &&
-      preds.probes.forall { case (c, h) => addMightContain(bl, c, h) } &&
-      preds.probeSets.forall { case (c, hs) => hs.exists(h => addMightContain(bl, c, h)) })
-  }
+      asOf: Option[Long], preds: SkipPreds): Seq[String] =
+    prunedFilesMulti(resolve(spark, tablePath, asOf), Seq(preds)).head
 
   /** xxhash64 probe for `column = value`, hashed the way the stored
     * filter hashed the COLUMN — i.e. at the column's declared type's
@@ -1564,10 +1532,10 @@ object CommitLog {
     * column type first; None when the type can't be resolved or the
     * cast is lossy (no pruning — the re-applied predicate decides). */
   private[graft] def probeHashFor(spark: SparkSession, tablePath: String,
-      asOf: Option[Long], column: String, value: Any): Option[Long] =
-    probeHashOf(tableSchema(spark, tablePath, asOf)
-      .orElse(snapshot(spark, tablePath, asOf).headOption.map(f =>
-        footerSchema(spark, tablePath, f))), column, value)
+      asOf: Option[Long], column: String, value: Any): Option[Long] = {
+    val s = resolve(spark, tablePath, asOf)
+    probeHashOf(s.declared.orElse(s.footerSchema), column, value)
+  }
 
   /** The probe-typing core of [[probeHashFor]] against an
     * already-resolved schema — the multi-probe path resolves the
@@ -1602,19 +1570,19 @@ object CommitLog {
     * unpruned scan-and-filter. */
   def scanRange(spark: SparkSession, tablePath: String, column: String,
       lo: Double, hi: Double, asOf: Option[Long] = None): DataFrame = {
-    val meta = resolvedMeta(spark, tablePath, asOf)
+    val s = resolve(spark, tablePath, asOf)
     // zones are keyed by PHYSICAL names (column mapping)
-    val physCol = meta.declared
+    val physCol = s.declared
       .fold(column)(ColumnMapping.physicalName(_, column))
-    val files = prunedFilesMulti(spark, tablePath, meta,
+    val files = prunedFilesMulti(s,
       Seq(SkipPreds(ranges = Seq((physCol, lo, hi))))).head
     val pred = org.apache.spark.sql.functions.col(column) >= lo &&
       org.apache.spark.sql.functions.col(column) <= hi
     if (files.isEmpty) read(spark, tablePath, asOf).filter(org.apache.spark.sql.functions.lit(false))
     // declared-schema read: a post-evolution scan over mixed-schema
     // survivors must null-fill, exactly like [[read]]
-    else logicalOf(meta)(maskDvsWith(tablePath, meta.dvRefs, files,
-      readerOf(spark, meta)
+    else logicalOf(s)(maskDvs(s, files,
+      readerOf(spark, s)
         .parquet(files.map(f => s"$tablePath/$f"): _*))).filter(pred)
   }
 
@@ -1652,104 +1620,6 @@ object CommitLog {
       value: Any, asOf: Option[Long] = None): DataFrame =
     scanEqualsMulti(spark, tablePath, column, Seq(value), asOf).head
 
-  /** Version-pinned table metadata resolved ONCE and memoized for the
-    * Spark app's lifetime. Everything here is immutable for a committed
-    * version — the log is append-only (writers only ever publish NEW
-    * versions; restore/compaction included), so re-deriving it per
-    * probe is pure fixed cost. Contents stay metadata-sized: file
-    * NAMES (exactly what [[read]] ships to the driver anyway), the
-    * checkpoint-interval-bounded JSON tail, the declared/inferred
-    * schema, and the (sparse) DV reference map — never per-file stats
-    * or bloom bytes, which stay in the checkpoint's parquet domain. */
-  private[graft] final case class ResolvedMeta(
-      version: Long,
-      cp: Option[Long],
-      tail: Seq[(Long, String)],
-      live: Seq[String],
-      declared: Option[StructType],
-      probeSchema: Option[StructType],
-      dvRefs: FileDvs)
-
-  private val metaCache = new graft.AppScopedCache[ResolvedMeta]()
-
-  /** Test observability: live [[metaCache]] entries (all tables). */
-  private[graft] def metaCacheSize: Int = metaCache.liveEntryCount
-
-  /** Resolve-or-recall the metadata pinned at `asOf` (latest when
-    * None). The PIN is re-derived per call — "latest" must observe a
-    * concurrent writer's new commit, so the version listing always
-    * runs — but everything hanging off a pinned version serves from
-    * the cache. The key carries the pinned commit file's mtime so a
-    * table dropped and recreated at the same path (same version
-    * numbers, different content) can never serve a stale resolve. */
-  private[graft] def resolvedMeta(spark: SparkSession, tablePath: String,
-      asOf: Option[Long]): ResolvedMeta = {
-    val vs = versions(spark, tablePath)
-    val pin = vs.filter(v => asOf.forall(_ >= v)).foldLeft(-1L)(math.max)
-    // an explicit VERSION AS OF below the retained log must refuse
-    // LOUDLY: with pin = -1 the resolve below would fall through to
-    // the newest checkpoint and serve the LATEST snapshot labeled as
-    // the requested version — the same contract versionAtTimestamp
-    // already enforces for timestamps
-    if (pin < 0 && asOf.isDefined)
-      throw new IllegalArgumentException(
-        s"no version <= ${asOf.get} exists in $tablePath" +
-          (if (vs.nonEmpty) s" — oldest retained is v${vs.head} " +
-            "(below the vacuum horizon)"
-          else " (empty log)"))
-    def resolve(): ResolvedMeta = {
-      val at = if (pin < 0) None else Some(pin)
-      val cp = bestCheckpoint(spark, tablePath, at)
-      val tail = vs.filter(v => cp.forall(v > _) && v <= pin)
-        .map(v => v -> commitLine(spark, tablePath, v))
-      val live = scala.collection.mutable.LinkedHashSet.empty[String]
-      cp.foreach { c =>
-        val dir = new Path(new Path(tablePath, LogDir), cpDirName(c))
-        live ++= spark.read.parquet(dir.toString)
-          .select("file").collect().map(_.getString(0))
-      }
-      tail.foreach { case (_, line) =>
-        extractArr(line, "adds").foreach(live += _)
-        live --= extractArr(line, "removes")
-      }
-      val declared = tableSchema(spark, tablePath, at)
-      val probeSchema = declared.orElse(live.headOption.map(f =>
-        spark.read.parquet(s"$tablePath/$f").schema))
-      ResolvedMeta(pin, cp, tail, live.toSeq, declared, probeSchema,
-        deletionVectorRefs(spark, tablePath, at))
-    }
-    if (pin < 0) resolve() // empty table: nothing worth caching
-    else {
-      val p = new Path(new Path(tablePath, LogDir), f"$pin%08d.json")
-      val mtime = scala.util.Try(
-        fsOf(spark, p).getFileStatus(p).getModificationTime).getOrElse(0L)
-      val meta = metaCache.getOrCompute(spark, s"$tablePath@$pin@$mtime")(resolve())
-      // bound the cache per table: a long-running serving app reading
-      // "latest" across many commits would otherwise hold one resolve
-      // (full live-file list + tail JSON) per version until app end.
-      // Keep the newest few pins — recent time-travel reads stay warm;
-      // an evicted older pin just re-resolves on demand.
-      metaCache.evictMatching(spark, k =>
-        k.startsWith(tablePath + "@") &&
-          cachedPinOf(k, tablePath).exists(_ < pin - MetaCacheKeepPins))
-      meta
-    }
-  }
-
-  /** Newest pins kept per table in [[metaCache]] beyond the one just
-    * resolved (older pins re-resolve on demand — correctness is
-    * version-keyed, only latency changes). */
-  private val MetaCacheKeepPins = 4L
-
-  // cache keys are s"$tablePath@$pin@$mtime"; parse the PIN from the
-  // fixed tail so a table path containing '@' can't confuse it
-  private def cachedPinOf(key: String, tablePath: String): Option[Long] = {
-    val rest = key.substring(tablePath.length + 1)
-    val at = rest.indexOf('@')
-    if (at <= 0) None
-    else scala.util.Try(rest.substring(0, at).toLong).toOption
-  }
-
   /** ONE parquet-domain job, many probes: for each `preds(i)`, the
     * pinned version's live files NOT provably excluded by it — the
     * per-term pruning of [[scanEquals]] batched so a k-term query pays
@@ -1759,9 +1629,10 @@ object CommitLog {
     * full live set (the no-pruning fallback for unhashable probes).
     * Only rows some probe keeps are collected, each as (file, k keep
     * bits) — still O(survivors) driver traffic. */
-  private[graft] def prunedFilesMulti(spark: SparkSession, tablePath: String,
-      meta: ResolvedMeta, preds: Seq[SkipPreds]): Seq[Seq[String]] = {
+  private[graft] def prunedFilesMulti(snap: Snapshot,
+      preds: Seq[SkipPreds]): Seq[Seq[String]] = {
     import org.apache.spark.sql.functions.{col, lit}
+    val s = snap.replayable
     val keepCols = preds.map { p =>
       (p.ranges.map { case (c, lo, hi) => zoneKeepCol(c, lo, hi) } ++
         p.probes.map { case (c, h) => bloomKeepCol(c, h) } ++
@@ -1770,9 +1641,8 @@ object CommitLog {
         .reduceOption(_ && _).getOrElse(lit(true))
     }
     val out = preds.map(_ => scala.collection.mutable.LinkedHashSet.empty[String])
-    meta.cp.foreach { c =>
-      val dir = new Path(new Path(tablePath, LogDir), cpDirName(c))
-      spark.read.parquet(dir.toString)
+    s.cp.foreach { c =>
+      s.checkpoint(c)
         .select(col("file") +: keepCols.zipWithIndex.map { case (k, i) =>
           // a NULL keep means "filtered out" under the single-probe
           // path's df.filter — coalesce to false for identical results
@@ -1788,7 +1658,7 @@ object CommitLog {
           }
         }
     }
-    meta.tail.foreach { case (_, line) =>
+    s.tail.foreach { case (_, line) =>
       val st = extractStats(line)
       val bl = extractBlooms(line)
       val adds = extractArr(line, "adds")
@@ -1825,35 +1695,35 @@ object CommitLog {
       values: Seq[Any], asOf: Option[Long] = None): Seq[DataFrame] = {
     import org.apache.spark.sql.functions.{col, lit}
     if (values.isEmpty) return Seq.empty
-    val meta = resolvedMeta(spark, tablePath, asOf)
+    val s = resolve(spark, tablePath, asOf)
     // probe typing subtleties live in [[probeHashOf]]; None = no
     // pruning for this shape (conservative — identical results)
     // blooms are keyed by PHYSICAL names (column mapping); the probe
     // TYPE resolves through the declared (logical) schema
-    val physCol = meta.declared
+    val physCol = s.declared
       .fold(column)(ColumnMapping.physicalName(_, column))
-    val preds = values.map(v => probeHashOf(meta.probeSchema, column, v)
+    val preds = values.map(v => probeHashOf(s.declared.orElse(s.footerSchema), column, v)
       .fold(SkipPreds())(h => SkipPreds(probes = Seq((physCol, h)))))
-    val filesPer = prunedFilesMulti(spark, tablePath, meta, preds)
-    val reader = readerOf(spark, meta)
+    val filesPer = prunedFilesMulti(s, preds)
+    val reader = readerOf(spark, s)
     values.zip(filesPer).map { case (v, files) =>
       if (files.isEmpty) {
         // same shape [[read]].filter(false) serves: the full live scan
         // under the empty filter (planner prunes it), or the declared
         // schema's empty relation for a file-less table
-        if (meta.live.nonEmpty)
-          logicalOf(meta)(
-            reader.parquet(meta.live.map(f => s"$tablePath/$f"): _*))
+        if (s.live.nonEmpty)
+          logicalOf(s)(
+            reader.parquet(s.live.map(f => s"$tablePath/$f"): _*))
             .filter(lit(false))
         else {
-          require(meta.declared.isDefined,
+          require(s.declared.isDefined,
             s"no live files in $tablePath" +
             asOf.fold("")(a => s" at version $a") + " and no declared schema")
           spark.createDataFrame(
             java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-            meta.declared.get)
+            s.declared.get)
         }
-      } else logicalOf(meta)(maskDvsWith(tablePath, meta.dvRefs, files,
+      } else logicalOf(s)(maskDvs(s, files,
         reader.parquet(files.map(f => s"$tablePath/$f"): _*)))
         .filter(col(column) === lit(v))
     }
@@ -1915,38 +1785,28 @@ object CommitLog {
     * publish by writing a NEW log entry this read never consults. */
   def read(spark: SparkSession, tablePath: String,
       asOf: Option[Long] = None): DataFrame = {
-    // served from the memoized per-version resolve: a session reading
-    // the same version many times (index serving, repeated analytics)
-    // replays schema/DV/snapshot once, not per read
-    val meta = resolvedMeta(spark, tablePath, asOf)
-    if (meta.live.isEmpty) {
+    val s = resolve(spark, tablePath, asOf)
+    if (s.live.isEmpty) {
       // a truncated/pre-first-append table still reads — as the empty
       // relation in its declared schema (without one there is no shape
       // to serve, and the old refusal stands)
-      require(meta.declared.isDefined,
+      require(s.declared.isDefined,
         s"no live files in $tablePath" + asOf.fold("")(v => s" at version $v") +
         " and no declared schema")
       return spark.createDataFrame(
         java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        meta.declared.get)
+        s.declared.get)
     }
-    logicalOf(meta)(maskDvsWith(tablePath, meta.dvRefs, meta.live,
-      readerOf(spark, meta).parquet(meta.live.map(f => s"$tablePath/$f"): _*)))
+    logicalOf(s)(maskDvs(s, s.live,
+      readerOf(spark, s).parquet(s.live.map(f => s"$tablePath/$f"): _*)))
   }
 
-  /** Reader honoring the resolve's declared schema (nullability
-    * relaxed, like [[readerFor]]); an UNDECLARED table reads under the
-    * resolve-time inferred footer schema — one footer read per
-    * version, not one inference pass per query (undeclared tables are
-    * uniform-schema by contract: evolution requires a declaration). */
-  private def readerOf(spark: SparkSession, meta: ResolvedMeta) =
-    meta.declared.orElse(meta.probeSchema).fold(spark.read)(d =>
-      spark.read.schema(StructType(
-        ColumnMapping.physicalSchema(d).fields.map(_.copy(nullable = true)))))
-
-  /** [[logicalFor]] against an already-resolved meta. */
-  private def logicalOf(meta: ResolvedMeta)(df: DataFrame): DataFrame =
-    meta.declared.fold(df)(d => ColumnMapping.toLogical(df, d))
+  /** [[readerFor]] under the declared schema, else the footer schema:
+    * one footer read per version, not one inference pass per query
+    * (undeclared tables are uniform-schema by contract: evolution
+    * requires a declaration). */
+  private def readerOf(spark: SparkSession, s: Snapshot) =
+    readerFor(spark, s.declared.orElse(s.footerSchema))
 
   /** Stage `df` as new immutable data files and publish them in one
     * commit. Appends never rewrite existing files. */
@@ -2084,13 +1944,12 @@ object CommitLog {
     if (batchId.exists(committedBatchIds(spark, tablePath).contains)) return None
     // pinned snapshot: removes and straddling-survivor reads below are
     // computed against THIS version; interleaved commits conflict
-    val v0 = latestVersion(spark, tablePath)
-    val live = if (v0 < 0) Seq.empty[String] else snapshot(spark, tablePath, Some(v0))
-    val zones = fileStats(spark, tablePath, Some(v0))
+    val s0 = resolve(spark, tablePath)
+    val v0 = s0.version
+    val live = s0.live
     // zones + staged-file stats are keyed by PHYSICAL names
-    val declared0 = tableSchema(spark, tablePath, Some(v0))
-    val physCol = declared0.fold(column)(ColumnMapping.physicalName(_, column))
-    def extent(f: String) = zones.get(f).flatMap(_.get(physCol))
+    val physCol = s0.declared.fold(column)(ColumnMapping.physicalName(_, column))
+    def extent(f: String) = s0.stats.get(f).flatMap(_.get(physCol))
     val inside = live.filter(extent(_).exists { case (mn, mx) => mn >= lo && mx <= hi })
     val straddling = live.filter { f =>
       extent(f) match {
@@ -2104,8 +1963,8 @@ object CommitLog {
       else {
         // survivors read in the physical shape; alias back to logical
         // before re-staging (stageWithMeta speaks logical names)
-        val surv = logicalFor(spark, tablePath, Some(v0))(
-          readerFor(spark, tablePath, Some(v0))
+        val surv = logicalOf(s0)(
+          readerFor(spark, s0.declared)
             .parquet(straddling.map(f => s"$tablePath/$f"): _*)
             .filter(col(physCol) < lit(lo) || col(physCol) > lit(hi)))
         val (fs0, st0, _) = stageWithMeta(spark, tablePath, surv, Seq(column), Seq.empty)
@@ -2159,9 +2018,9 @@ object CommitLog {
     if (batchId.exists(committedBatchIds(spark, tablePath).contains)) return None
     // pin the snapshot: the vectors below are unions against THIS
     // version's state, so an interleaved commit must conflict
-    val v0 = latestVersion(spark, tablePath)
-    if (v0 < 0) return None
-    val files = snapshot(spark, tablePath, Some(v0))
+    val s0 = resolve(spark, tablePath)
+    val v0 = s0.version
+    val files = s0.live
     if (files.isEmpty) return None
     // mask existing DVs so an already-deleted row can't be "re-deleted"
     // into a vector diff the change feed would then re-emit
@@ -2169,12 +2028,12 @@ object CommitLog {
     // (a projection loses hidden file-source metadata), so the user's
     // logical-named predicate and the file/row provenance coexist
     val scan = ColumnMapping.toLogical(
-      maskDvs(spark, tablePath, Some(v0), files,
-        readerFor(spark, tablePath, Some(v0))
+      maskDvs(s0, files,
+        readerFor(spark, s0.declared)
           .parquet(files.map(f => s"$tablePath/$f"): _*))
         .select(col("_metadata.file_name").as("__graft_fname"),
           col("_metadata.row_index").as("__graft_ri"), col("*")),
-      tableSchema(spark, tablePath, Some(v0)).getOrElse(new StructType()))
+      s0.declared.getOrElse(new StructType()))
     val matched = scan.filter(predicate)
       .select(col("__graft_fname").as("fname"),
         col("__graft_ri").as("ri"))
@@ -2185,7 +2044,7 @@ object CommitLog {
     // prior vectors: refs for everything, bytes only for TOUCHED files
     // (the driver's transit is ∝ this delete's blast radius, not the
     // table's accumulated delete state)
-    val priorRefs = deletionVectorRefs(spark, tablePath, Some(v0))
+    val priorRefs = s0.dvRefs
     val byName = files.map(f => new Path(f).getName -> f).toMap
     val newDvs: FileDvs = matched.map { r =>
       val f = byName.getOrElse(r.getString(0),
@@ -2474,12 +2333,13 @@ object CommitLog {
   def merge(spark: SparkSession, tablePath: String, changes: DataFrame,
       key: String): Long = {
     import org.apache.spark.sql.functions.col
-    val v0 = latestVersion(spark, tablePath)
-    val files = snapshot(spark, tablePath, Some(v0))
+    val s0 = resolve(spark, tablePath)
+    val v0 = s0.version
+    val files = s0.live
     require(files.nonEmpty, s"merge: no live files in $tablePath")
     val keys = changes.select(col(key)).distinct()
     // zones + file columns are keyed by PHYSICAL names (column mapping)
-    val physKey = tableSchema(spark, tablePath, Some(v0))
+    val physKey = s0.declared
       .fold(key)(ColumnMapping.physicalName(_, key))
     // data-skipping pre-prune: on a zone-statted key, files whose
     // logged [min, max] cannot intersect the changes' key range hold
@@ -2489,8 +2349,8 @@ object CommitLog {
     val candidates = mergeCandidates(spark, tablePath, v0, files, keys, key, physKey)
     val touchedNames =
       if (candidates.isEmpty) Set.empty[String]
-      else maskDvs(spark, tablePath, Some(v0), candidates,
-        readerFor(spark, tablePath, Some(v0))
+      else maskDvs(s0, candidates,
+        readerFor(spark, s0.declared)
           .parquet(candidates.map(f => s"$tablePath/$f"): _*))
         .select(col("_metadata.file_name").as("_fn"), col(physKey).as(key))
         .join(keys, Seq(key), "left_semi")
@@ -2503,9 +2363,9 @@ object CommitLog {
     val base =
       if (touched.isEmpty)
         read(spark, tablePath, Some(v0)).filter(org.apache.spark.sql.functions.lit(false))
-      else logicalFor(spark, tablePath, Some(v0))(
-        maskDvs(spark, tablePath, Some(v0), touched,
-          readerFor(spark, tablePath, Some(v0))
+      else logicalOf(s0)(
+        maskDvs(s0, touched,
+          readerFor(spark, s0.declared)
             .parquet(touched.map(f => s"$tablePath/$f"): _*)))
     val content = Changes.mergeApply(base, changes, key)
     commit(spark, tablePath, stage(spark, tablePath, content), touched,
@@ -2637,20 +2497,21 @@ object CommitLog {
     // plain slices batch into ONE multi-path read per (version, kind) —
     // a 1000-file commit is one scan, not a 1000-way union
     val (dvSlices, plain) = slices.partition(_.dvDiff.isDefined)
+    val latest = resolve(spark, tablePath)
     val plainDfs = plain.groupBy(s => (s.version, s.kind)).toSeq
       .sortBy { case ((v, kind), _) => (v, kind) }
       .map { case ((v, kind), ss) =>
         // declared-schema read keeps slices uniform across a schema
         // evolution (pre-evolution files null-fill)
-        logicalFor(spark, tablePath, None)(
-          readerFor(spark, tablePath).parquet(ss.map(s => s"$tablePath/${s.file}"): _*))
+        logicalOf(latest)(
+          readerFor(spark, latest.declared).parquet(ss.map(s => s"$tablePath/${s.file}"): _*))
           .withColumn("_change_type", lit(kind))
           .withColumn("_commit_version", lit(v))
       }
     val dvDfs = dvSlices.map { s =>
       // the DV bit test consumes `_metadata` BEFORE the logical alias
-      logicalFor(spark, tablePath, None)(
-        readerFor(spark, tablePath).parquet(s"$tablePath/${s.file}")
+      logicalOf(latest)(
+        readerFor(spark, latest.declared).parquet(s"$tablePath/${s.file}")
           .filter(graft.plans.DeletionVector.dvTest(
             lit(s.dvDiff.get),
             org.apache.spark.sql.functions.col("_metadata.row_index"))))
@@ -2983,6 +2844,15 @@ object CommitLog {
     val stamp = java.util.UUID.randomUUID().toString.take(8)
     val tmp = new Path(root, s"_staging_$stamp")
     dfP.write.mode("overwrite").parquet(tmp.toString)
+    // the staged part files, listed once: the re-reads below name them
+    // directly — handed the `_staging_` directory itself, Spark drops it
+    // as a hidden path and logs "All paths were ignored" — and the
+    // rename pass moves exactly these
+    val parts = fs.listStatus(tmp).toSeq.filter { f =>
+      val n = f.getPath.getName
+      f.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }.map(_.getPath)
+    val partPaths = parts.map(_.toString)
     // heartbeat: the staging sweep (vacuum) ages a _staging_ dir by
     // its NEWEST child — which stops moving once the last part file
     // lands, even though the write is still mid-flight (constraint
@@ -3000,13 +2870,13 @@ object CommitLog {
     // staging dir and refuses the whole write — nothing was committed,
     // so readers never see a partially-validated batch
     val cs = constraints(spark, tablePath)
-    if (cs.nonEmpty) {
+    if (cs.nonEmpty && parts.nonEmpty) {
       // staged files carry physical names; CHECK expressions speak
       // logical — read physical, alias back before evaluating
       val staged = declared.fold(spark.read)(d =>
         spark.read.schema(StructType(ColumnMapping.physicalSchema(d)
           .fields.map(_.copy(nullable = true)))))
-        .parquet(tmp.toString)
+        .parquet(partPaths: _*)
       val stagedL = declared.fold(staged)(ColumnMapping.toLogical(staged, _))
       val bad = violationCounts(stagedL, cs)
       if (bad.nonEmpty) {
@@ -3019,7 +2889,7 @@ object CommitLog {
     heartbeat() // fresh grace window for the stats/bloom aggregation
     var tmpStats: Map[String, Map[String, (Double, Double)]] = Map.empty
     var tmpBlooms: Map[String, Map[String, String]] = Map.empty
-    if (statsCols.nonEmpty || bloomCols.nonEmpty) {
+    if ((statsCols.nonEmpty || bloomCols.nonEmpty) && parts.nonEmpty) {
       import org.apache.spark.sql.functions.{col, count, input_file_name, lit, max, min, xxhash64}
       // per-file ROW COUNT rides the same aggregate under the reserved
       // [[RowCountStat]] stats key (Delta's numRecords): COUNT(*) then
@@ -3038,7 +2908,7 @@ object CommitLog {
           graft.plans.BloomAggregate.bloom(xxhash64(col(c)), mBits, k).as(s"bloom_$c")) ++
         nnCols.map(c => count(col(c)).cast("double").as(s"nn_$c")) ++
         (if (publishRows) Seq(count(lit(1)).cast("double").as("__nrows")) else Seq.empty)
-      val rows = spark.read.parquet(tmp.toString)
+      val rows = spark.read.parquet(partPaths: _*)
         .groupBy(input_file_name().as("file"))
         .agg(aggs.head, aggs.tail: _*)
         .collect()
@@ -3072,17 +2942,11 @@ object CommitLog {
     heartbeat() // fresh grace window for the rename pass
     val dataDir = new Path(root, DataDir)
     fs.mkdirs(dataDir)
-    val moved = fs.listStatus(tmp)
-      .filter { f =>
-        val n = f.getPath.getName
-        f.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }
-      .zipWithIndex.map { case (f, i) =>
-        val name = s"$stamp-$i.parquet"
-        require(fs.rename(f.getPath, new Path(dataDir, name)),
-          s"stage rename failed: ${f.getPath}")
-        (s"$DataDir/$name", f.getPath.getName)
-      }
+    val moved = parts.zipWithIndex.map { case (f, i) =>
+      val name = s"$stamp-$i.parquet"
+      require(fs.rename(f, new Path(dataDir, name)), s"stage rename failed: $f")
+      (s"$DataDir/$name", f.getName)
+    }
     fs.delete(tmp, true)
     val stats = moved.flatMap { case (rel, tmpName) =>
       tmpStats.get(tmpName).filter(_.nonEmpty).map(rel -> _)

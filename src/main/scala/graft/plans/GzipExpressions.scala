@@ -78,6 +78,26 @@ object GzipMeta {
     * decompression bomb's ambitions. */
   val MaxInflate: Long = 1L << 20
 
+  /** Inflate everything `inf` holds through a 4 KiB window — the one
+    * bounded loop the gzip, PDF and ZIP decoders share. Null on a
+    * corrupt stream, a stall before the end (truncated input, or a
+    * missing dictionary) or more than `limit` bytes out. The caller
+    * sets the input, ends `inf`, and keeps its own container checks. */
+  private[plans] def inflateBounded(inf: java.util.zip.Inflater,
+      limit: Long): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    val window = new Array[Byte](4096)
+    while (!inf.finished()) {
+      val n = try inf.inflate(window) catch {
+        case _: java.util.zip.DataFormatException => return null
+      }
+      if (n > 0) out.write(window, 0, n)
+      else if (!inf.finished()) return null
+      if (out.size() > limit) return null
+    }
+    out.toByteArray
+  }
+
   private final case class Member(fname: String, mtime: Long, os: Int,
       text: Boolean, isize: Long, nBytes: Long, crcOk: Boolean, end: Int)
 
@@ -134,18 +154,8 @@ object GzipMeta {
       val inf = new java.util.zip.Inflater(raw)
       try {
         inf.setInput(b)
-        val out = new java.io.ByteArrayOutputStream()
-        val window = new Array[Byte](4096)
-        while (!inf.finished()) {
-          val n = try inf.inflate(window) catch {
-            case _: java.util.zip.DataFormatException => return None
-          }
-          if (n > 0) out.write(window, 0, n)
-          else if (!inf.finished()) return None // truncated stream
-          if (out.size() > MaxInflate) return None // bomb ceiling
-        }
-        if (inf.getRemaining > 0) return None // trailing garbage
-        Some(out.toByteArray)
+        Option(inflateBounded(inf, MaxInflate))
+          .filter(_ => inf.getRemaining == 0) // trailing garbage
       } finally inf.end()
     }
     tryInflate(raw = false).orElse(tryInflate(raw = true))

@@ -292,17 +292,7 @@ object PdfMeta {
     val inf = new java.util.zip.Inflater()
     try {
       inf.setInput(b, off, len.toInt)
-      val out = new java.io.ByteArrayOutputStream()
-      val window = new Array[Byte](4096)
-      while (!inf.finished()) {
-        val n = try inf.inflate(window) catch {
-          case _: java.util.zip.DataFormatException => return null
-        }
-        if (n > 0) out.write(window, 0, n)
-        else if (!inf.finished()) return null
-        if (out.size() > GzipMeta.MaxInflate) return null
-      }
-      out.toByteArray
+      GzipMeta.inflateBounded(inf, GzipMeta.MaxInflate)
     } finally inf.end()
   }
 

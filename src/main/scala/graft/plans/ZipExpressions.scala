@@ -415,18 +415,9 @@ object ZipExtract {
               val inBuf = new Array[Byte](csize.toInt + 1)
               System.arraycopy(b, dataAt.toInt, inBuf, 0, csize.toInt)
               inf.setInput(inBuf)
-              val bos = new java.io.ByteArrayOutputStream(
-                math.min(usize, 1 << 16).toInt)
-              val window = new Array[Byte](4096)
-              while (!inf.finished()) {
-                val n = try inf.inflate(window) catch {
-                  case _: java.util.zip.DataFormatException => return null
-                }
-                if (n > 0) bos.write(window, 0, n)
-                else if (!inf.finished()) return null
-                if (bos.size() > MaxOut || bos.size() > usize) return null
-              }
-              bos.toByteArray
+              val inflated = GzipMeta.inflateBounded(inf, math.min(MaxOut, usize))
+              if (inflated == null) return null
+              inflated
             } finally inf.end()
           case _ => return null // other methods: recorded envelope
         }

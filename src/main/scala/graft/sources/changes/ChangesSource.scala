@@ -68,15 +68,13 @@ class ChangesTableProvider extends TableProvider with DataSourceRegister {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val spark = SparkSession.active
     val table = pathOf(options)
-    val base = CommitLog.tableSchema(spark, table).getOrElse {
-      val files = CommitLog.snapshot(spark, table)
-      require(files.nonEmpty,
+    val s = CommitLog.resolve(spark, table)
+    val base = s.declared.getOrElse {
+      require(s.live.nonEmpty,
         s"graft-changes: $table has no live files and no declared schema")
-      // one footer read, driver-side — metadata, not a table scan;
-      // the NEWEST live file (same fallback as the batch source's
-      // schemaAt) so later appends' widened columns survive; memoized
-      // per (table, file) like the batch source's resolve
-      CommitLog.footerSchema(spark, table, files.last)
+      // one footer read per version — metadata, not a table scan; the
+      // NEWEST live file, the same fallback as the batch source's schemaAt
+      s.footerSchema.get
     }
     base
       .add(StructField("_change_type", StringType, nullable = false))

@@ -177,14 +177,16 @@ object GraftTableProvider {
   private[grafttable] def schemaAt(spark: SparkSession, path: String,
       version: Long): StructType =
     if (version < 0) new StructType()
-    else CommitLog.tableSchema(spark, path, Some(version)).getOrElse {
-      val files = CommitLog.snapshot(spark, path, Some(version))
-      require(files.nonEmpty,
-        s"graft: no live files in $path at version $version and no declared schema")
-      // memoized per (path, file): the footer of an immutable committed
-      // file — without this every .load() of an undeclared table pays a
-      // one-task schema-inference Spark job (twice: inferSchema+getTable)
-      CommitLog.footerSchema(spark, path, files.last)
+    else {
+      // one footer read per version, kept with the version's snapshot —
+      // without it every .load() of an undeclared table pays a one-task
+      // schema-inference Spark job (twice: inferSchema+getTable)
+      val s = CommitLog.resolve(spark, path, Some(version))
+      s.declared.getOrElse {
+        require(s.live.nonEmpty,
+          s"graft: no live files in $path at version $version and no declared schema")
+        s.footerSchema.get
+      }
     }
 }
 

@@ -1499,11 +1499,10 @@ class CommitLogSpec extends SparkSpec {
     } finally cleanup(t)
   }
 
-  test("metaCache bounds per-table pins; evicted versions re-resolve") {
+  test("the snapshot cache bounds per-table pins; evicted versions re-resolve") {
     val t = tempTable()
     try {
       import spark.implicits._
-      val base = CommitLog.metaCacheSize
       (0 until 12).foreach { i =>
         CommitLog.append(spark, t, Seq((i.toLong, i.toString)).toDF("id", "s"))
         assert(CommitLog.read(spark, t).count() === i + 1L)
@@ -1511,12 +1510,164 @@ class CommitLogSpec extends SparkSpec {
       // a long-lived serving app reading "latest" across many commits
       // must not hold one resolve per version: superseded pins evict,
       // keeping the newest few for warm time travel
-      assert(CommitLog.metaCacheSize - base <= 5,
-        s"metaCache grew by ${CommitLog.metaCacheSize - base} over 12 versions")
+      val pins = CommitLog.cachedPins(spark, t)
+      assert(pins.size <= 5, s"the cache holds ${pins.size} pins over 12 versions")
       // an evicted older pin is still correct — it just re-resolves
       assert(CommitLog.read(spark, t, asOf = Some(2L)).count() === 3)
       assert(CommitLog.read(spark, t, asOf = Some(0L))
         .head.getLong(0) === 0L)
     } finally cleanup(t)
+  }
+
+  test("a table re-created at the same path serves the new incarnation") {
+    val t = tempTable()
+    try {
+      import spark.implicits._
+      def graftAt1 = spark.read.format("graft").option("versionAsOf", "1").load(t)
+      (0 until 3).foreach(i => CommitLog.appendWithStats(spark, t,
+        Seq((i.toLong, s"a$i")).toDF("id", "s"), Seq("id")))
+      assert(graftAt1.count() === 2)
+      val oldFiles = CommitLog.snapshot(spark, t, Some(1L))
+      assert(CommitLog.fileStats(spark, t, Some(1L)).keySet === oldFiles.toSet)
+      assert(CommitLog.tableSchema(spark, t, Some(1L)).isEmpty)
+      // drop it and build a different table at the same path and versions
+      cleanup(t)
+      val schema2 = new org.apache.spark.sql.types.StructType()
+        .add("k", "long").add("y", "string")
+      CommitLog.declareSchema(spark, t, schema2)
+      CommitLog.appendWithStats(spark, t, Seq((100L, "b")).toDF("k", "y"), Seq("k"))
+      CommitLog.appendWithStats(spark, t, Seq((200L, "c")).toDF("k", "y"), Seq("k"))
+      assert(graftAt1.columns.toSeq === Seq("k", "y"))
+      assert(graftAt1.collect().map(_.getLong(0)).toSeq === Seq(100L))
+      val newFiles = CommitLog.snapshot(spark, t, Some(1L))
+      assert(newFiles.size === 1 && newFiles.toSet.intersect(oldFiles.toSet).isEmpty)
+      val stats = CommitLog.fileStats(spark, t, Some(1L))
+      assert(stats.keySet === newFiles.toSet)
+      assert(stats(newFiles.head)("k") === ((100.0, 100.0)))
+      assert(CommitLog.tableSchema(spark, t, Some(1L)) === Some(schema2))
+    } finally cleanup(t)
+  }
+
+  test("a long metadata-only run keeps the table's snapshot cache bounded") {
+    val t = tempTable()
+    // each commit and each first resolve lists the log, so the run is
+    // quadratic in n: 300 versions take ~20 s, 1000 about 4 min
+    val n = 300
+    // no parquet checkpoints: every version is a pure JSON replay, so
+    // the run costs file reads, not a Spark job per version
+    spark.conf.set("spark.graft.commitlog.checkpointInterval", "0")
+    try {
+      import spark.implicits._
+      CommitLog.appendWithBloom(spark, t, Seq((1L, "a")).toDF("id", "s"),
+        bloomCols = Seq("s"), statsCols = Seq("id"))
+      (1 until n).foreach(_ =>
+        CommitLog.commit(spark, t, Seq.empty, Seq.empty, dataChange = false))
+      assert(CommitLog.latestVersion(spark, t) === n - 1L)
+      val file = CommitLog.snapshot(spark, t, Some(0L)).head
+      var peak = 0
+      (0 until n).foreach { v =>
+        val at = Some(v.toLong)
+        assert(CommitLog.snapshot(spark, t, at) === Seq(file))
+        assert(CommitLog.fileStats(spark, t, at).keySet === Set(file))
+        assert(CommitLog.fileBlooms(spark, t, at)(file).keySet === Set("s"))
+        assert(CommitLog.deletionVectorRefs(spark, t, at).isEmpty)
+        assert(CommitLog.tableSchema(spark, t, at).isEmpty)
+        assert(CommitLog.constraints(spark, t, at).isEmpty)
+        peak = math.max(peak, CommitLog.cachedPins(spark, t).size)
+      }
+      assert(peak <= 5, s"the cache held $peak pins of one table")
+    } finally {
+      spark.conf.unset("spark.graft.commitlog.checkpointInterval")
+      cleanup(t)
+    }
+  }
+
+  test("a version past the newest commit is refused, not served as the latest") {
+    val t = tempTable()
+    try {
+      import spark.implicits._
+      (0 until 2).foreach(i =>
+        CommitLog.append(spark, t, Seq((i.toLong, s"r$i")).toDF("id", "s")))
+      val future = CommitLog.latestVersion(spark, t) + 3
+      Seq[() => Any](() => CommitLog.read(spark, t, Some(future)),
+        () => CommitLog.snapshot(spark, t, Some(future)),
+        () => CommitLog.fileStats(spark, t, Some(future))).foreach { f =>
+        val e = intercept[IllegalArgumentException](f())
+        assert(e.getMessage.contains(s"no version $future"))
+      }
+      // once the log reaches that version it serves its own state
+      (2 until 5).foreach(i =>
+        CommitLog.append(spark, t, Seq((i.toLong, s"r$i")).toDF("id", "s")))
+      assert(CommitLog.read(spark, t, Some(future)).count() === future + 1)
+      assert(CommitLog.snapshot(spark, t, Some(future)).size === future + 1)
+    } finally cleanup(t)
+  }
+
+  test("a resolved snapshot still answers after vacuum drops its checkpoint") {
+    val t = tempTable()
+    spark.conf.set("spark.graft.commitlog.checkpointInterval", "3")
+    try {
+      import spark.implicits._
+      (0 until 6).foreach(i => CommitLog.appendWithBloom(spark, t,
+        Seq((i.toLong, s"r$i")).toDF("id", "s"), bloomCols = Seq("s"),
+        statsCols = Seq("id")))
+      // resolve v5 over the checkpoint at v3; only the file list is read
+      val files = CommitLog.snapshot(spark, t, Some(5L))
+      assert(CommitLog.resolve(spark, t, Some(5L)).cp === Some(3L))
+      CommitLog.vacuum(spark, t, keepFrom = 4L)
+      assert(!CommitLog.checkpointVersions(spark, t).contains(3L))
+      val stats = CommitLog.fileStats(spark, t, Some(5L))
+      assert(stats.keySet === files.toSet)
+      assert(stats.values.map(_("id")._1).toSet === (0 until 6).map(_.toDouble).toSet)
+      val blooms = CommitLog.fileBlooms(spark, t, Some(5L))
+      assert(blooms.keySet === files.toSet && blooms.values.forall(_.contains("s")))
+      assert(CommitLog.deletionVectorRefs(spark, t, Some(5L)).isEmpty)
+      assert(CommitLog.read(spark, t, Some(5L)).count() === 6)
+    } finally {
+      spark.conf.unset("spark.graft.commitlog.checkpointInterval")
+      cleanup(t)
+    }
+  }
+
+  test("a staged commit reads its part files without the ignored-paths warning") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{Configurator, Property}
+    val ignored = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("graft-staging-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = {
+        val msg = e.getMessage.getFormattedMessage
+        if (msg.contains("All paths were ignored")) ignored.add(msg)
+      }
+    }
+    Configurator.setLevel("org.apache.spark.sql.execution.datasources.DataSource", Level.WARN)
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    capture.start()
+    ctx.getConfiguration.getRootLogger.addAppender(capture, null, null)
+    ctx.updateLoggers()
+    val t = tempTable()
+    try {
+      import spark.implicits._
+      // positive control: a hidden-named directory is what Spark ignores
+      val hidden = s"$t/_hidden"
+      Seq(1L).toDF("id").write.parquet(hidden)
+      spark.read.parquet(hidden)
+      assert(ignored.size === 1)
+      ignored.clear()
+      CommitLog.addConstraint(spark, t, "id_nonneg", "id >= 0")
+      CommitLog.replaceRange(spark, t, Seq((1L, "a"), (2L, "b")).toDF("id", "s"),
+        "id", 0.0, 10.0)
+      CommitLog.replaceRange(spark, t, Seq((3L, "c")).toDF("id", "s"),
+        "id", 0.0, 10.0)
+      assert(CommitLog.read(spark, t).collect().map(_.getLong(0)).toSeq === Seq(3L))
+      assert(ignored.isEmpty, ignored.toArray.mkString("\n"))
+    } finally {
+      ctx.getConfiguration.getRootLogger.removeAppender("graft-staging-capture")
+      ctx.updateLoggers()
+      capture.stop()
+      cleanup(t)
+    }
   }
 }
