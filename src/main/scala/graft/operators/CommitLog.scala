@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StringType, StructField, StructType}
 
 /** A minimal commit-log table format over raw parquet — the metadata
   * layer that turns a directory of files into a TABLE with atomic
@@ -81,7 +81,7 @@ object CommitLog {
   val NonNullStatPrefix: String = "__nn_"
   def nonNullStat(c: String): String = NonNullStatPrefix + c
 
-  private def jstats(stats: FileStats): String =
+  private[graft] def jstats(stats: FileStats): String =
     stats.map { case (f, cols) =>
       "\"" + esc(f) + "\":{" + cols.map { case (c, (lo, hi)) =>
         "\"" + esc(c) + s"""":[$lo,$hi]"""
@@ -157,8 +157,9 @@ object CommitLog {
     * advanced past V by commit time, publishing anyway would base the
     * table on stale state (the classic lost update: a delete racing a
     * compaction resurrects rows; two overwrites both "win"). With
-    * `expectedVersion = Some(V)` the commit claims ONLY version V+1 —
-    * any interleaved commit makes it throw
+    * `expectedVersion = Some(V)` the commit claims ONLY version V+1,
+    * by put-if-absent and without listing the log — any interleaved
+    * commit makes it throw
     * [[java.util.ConcurrentModificationException]] instead of
     * publishing, and the caller re-reads and retries. Appends leave it
     * None: blind adds commute with everything (Delta's same conflict
@@ -179,7 +180,9 @@ object CommitLog {
     val fs = fsOf(spark, log)
     fs.mkdirs(log)
     val tmp = new Path(log, s".tmp-${java.util.UUID.randomUUID()}")
-    var v = latestVersion(spark, tablePath) + 1
+    // a snapshot-based commit claims V+1 directly and lets the
+    // put-if-absent decide the race: only a blind append lists the log
+    var v = expectedVersion.getOrElse(latestVersion(spark, tablePath)) + 1
     val batchField = batchId.fold("")(b => s""","batchId":$b""") +
       batchApp.fold("")(a => s""","batchApp":"${esc(a)}"""")
     val pinsField = if (pins.isEmpty) "" else
@@ -201,7 +204,10 @@ object CommitLog {
         s"but the log has advanced to v${latestVersion(spark, tablePath)} — " +
         "re-read the table and retry the operation")
     }
-    expectedVersion.foreach(e => if (v != e + 1) conflict())
+    // V itself must be in the log: a table dropped and re-created
+    // below V would otherwise take V+1 over a gap
+    expectedVersion.foreach(e =>
+      if (e >= 0 && !fs.exists(new Path(log, f"$e%08d.json"))) conflict())
     var claimed = -1L
     while (claimed < 0) {
       // commit wall-time, forced strictly monotone against the previous
@@ -1386,8 +1392,7 @@ object CommitLog {
       // data files are written under PHYSICAL names (column mapping):
       // read in the physical shape; callers alias back to logical
       // AFTER anything needing `_metadata` ([[ColumnMapping]])
-      spark.read.schema(StructType(
-        ColumnMapping.physicalSchema(d).fields.map(_.copy(nullable = true)))))
+      spark.read.schema(nullableSchema(ColumnMapping.physicalSchema(d))))
 
   /** Alias a physical-shape DataFrame back to the declared logical
     * names — the companion every [[readerFor]] caller applies once
@@ -2818,10 +2823,14 @@ object CommitLog {
     stageWithMeta(spark, tablePath, df, Seq.empty, Seq.empty)._1
 
   /** Stage plus per-staged-file skipping metadata — [min, max] zones
-    * for `statsCols` and Bloom filters for `bloomCols` — computed over
-    * the staging dir BEFORE the move (one aggregate grouped by
-    * input_file_name, the ZoneMaps.write shape), keyed by the files'
-    * FINAL relative names. */
+    * for `statsCols`, their non-null counts, the row count and Bloom
+    * filters for `bloomCols` — computed over the staged part files
+    * BEFORE the move and keyed by the files' FINAL relative names.
+    * The parquet footers the write just produced answer what they hold
+    * exactly (row and non-null counts, min/max of integral columns), so
+    * a range-managed append such as an ArchiveJob day costs the write
+    * and nothing more; one data pass grouped by input_file_name answers
+    * only the rest ([[stagedMeta]]). */
   private def stageWithMeta(spark: SparkSession, tablePath: String,
       df: DataFrame, statsCols: Seq[String], bloomCols: Seq[String],
       mBits: Int = 1 << 16, k: Int = 5): (Seq[String], FileStats, FileBlooms) = {
@@ -2852,7 +2861,6 @@ object CommitLog {
       val n = f.getPath.getName
       f.isFile && !n.startsWith("_") && !n.startsWith(".")
     }.map(_.getPath)
-    val partPaths = parts.map(_.toString)
     // heartbeat: the staging sweep (vacuum) ages a _staging_ dir by
     // its NEWEST child — which stops moving once the last part file
     // lands, even though the write is still mid-flight (constraint
@@ -2873,10 +2881,9 @@ object CommitLog {
     if (cs.nonEmpty && parts.nonEmpty) {
       // staged files carry physical names; CHECK expressions speak
       // logical — read physical, alias back before evaluating
-      val staged = declared.fold(spark.read)(d =>
-        spark.read.schema(StructType(ColumnMapping.physicalSchema(d)
-          .fields.map(_.copy(nullable = true)))))
-        .parquet(partPaths: _*)
+      val staged = spark.read.schema(nullableSchema(
+          declared.fold(dfP.schema)(ColumnMapping.physicalSchema)))
+        .parquet(parts.map(_.toString): _*)
       val stagedL = declared.fold(staged)(ColumnMapping.toLogical(staged, _))
       val bad = violationCounts(stagedL, cs)
       if (bad.nonEmpty) {
@@ -2886,59 +2893,11 @@ object CommitLog {
           bad.map { case (n, c) => s"$n ($c rows)" }.mkString(", "))
       }
     }
-    heartbeat() // fresh grace window for the stats/bloom aggregation
-    var tmpStats: Map[String, Map[String, (Double, Double)]] = Map.empty
-    var tmpBlooms: Map[String, Map[String, String]] = Map.empty
-    if ((statsCols.nonEmpty || bloomCols.nonEmpty) && parts.nonEmpty) {
-      import org.apache.spark.sql.functions.{col, count, input_file_name, lit, max, min, xxhash64}
-      // per-file ROW COUNT rides the same aggregate under the reserved
-      // [[RowCountStat]] stats key (Delta's numRecords): COUNT(*) then
-      // answers from the log with zero file opens. Skipped (collision
-      // safety) in the pathological case of a data column by that name.
-      val publishRows = !dfP.columns.contains(RowCountStat)
-      // per-column NON-NULL counts ride the same aggregate (see
-      // [[NonNullStatPrefix]]); a user column literally named like the
-      // reserved key would collide in the stats map, so that column
-      // skips publication (same collision posture as __rows)
-      val nnCols = statsColsP.filter(c => !dfP.columns.contains(nonNullStat(c)))
-      val aggs = statsColsP.flatMap(c =>
-        Seq(min(col(c)).cast("double").as(s"min_$c"),
-          max(col(c)).cast("double").as(s"max_$c"))) ++
-        bloomColsP.map(c =>
-          graft.plans.BloomAggregate.bloom(xxhash64(col(c)), mBits, k).as(s"bloom_$c")) ++
-        nnCols.map(c => count(col(c)).cast("double").as(s"nn_$c")) ++
-        (if (publishRows) Seq(count(lit(1)).cast("double").as("__nrows")) else Seq.empty)
-      val rows = spark.read.parquet(partPaths: _*)
-        .groupBy(input_file_name().as("file"))
-        .agg(aggs.head, aggs.tail: _*)
-        .collect()
-      tmpStats = rows.map { r =>
-        val name = r.getString(0).split('/').last
-        val colStats = statsColsP.flatMap { c =>
-          val lo = r.getAs[Any](s"min_$c")
-          val hi = r.getAs[Any](s"max_$c")
-          if (lo == null || hi == null) None
-          else Some(c -> (lo.asInstanceOf[Double], hi.asInstanceOf[Double]))
-        }.toMap
-        val nnStats = nnCols.map { c =>
-          val n = r.getAs[Double](s"nn_$c")
-          nonNullStat(c) -> (n, n)
-        }.toMap
-        val rowStat =
-          if (publishRows) {
-            val n = r.getAs[Double]("__nrows")
-            Map(RowCountStat -> (n, n))
-          } else Map.empty[String, (Double, Double)]
-        name -> (colStats ++ nnStats ++ rowStat)
-      }.toMap
-      tmpBlooms = rows.map { r =>
-        val name = r.getString(0).split('/').last
-        name -> bloomColsP.map { c =>
-          c -> (k.toString + ":" + java.util.Base64.getEncoder
-            .encodeToString(r.getAs[Array[Byte]](s"bloom_$c")))
-        }.toMap
-      }.toMap
-    }
+    heartbeat() // fresh grace window for the footer reads and data pass
+    val (tmpStats, tmpBlooms) =
+      if ((statsCols.nonEmpty || bloomCols.nonEmpty) && parts.nonEmpty)
+        stagedMeta(spark, parts, dfP.schema, statsColsP, bloomColsP, mBits, k)
+      else (Map.empty: FileStats, Map.empty: FileBlooms)
     heartbeat() // fresh grace window for the rename pass
     val dataDir = new Path(root, DataDir)
     fs.mkdirs(dataDir)
@@ -2955,5 +2914,156 @@ object CommitLog {
       tmpBlooms.get(tmpName).filter(_.nonEmpty).map(rel -> _)
     }.toMap
     (moved.map(_._1).toSeq, stats, blooms)
+  }
+
+  /** A read schema for files written with `schema`: every field
+    * nullable, so a re-read names its columns and types instead of
+    * starting a footer job to infer them. */
+  private def nullableSchema(schema: StructType): StructType =
+    StructType(schema.fields.map(_.copy(nullable = true)))
+
+  /** Columns a parquet footer can give a [min, max] zone for exactly:
+    * the integral ones. Parquet orders floating columns without NaN
+    * (Spark orders NaN last), stores timestamps as INT96 and strings
+    * as bytes, so the data pass answers every other type. */
+  private def footerZone(written: StructType, c: String): Boolean =
+    written.fields.find(_.name == c).exists(f =>
+      f.dataType == ByteType || f.dataType == ShortType ||
+        f.dataType == IntegerType || f.dataType == LongType)
+
+  /** Skipping metadata of freshly written part files, keyed by part
+    * file name, in the one shape every staging path publishes: per
+    * stats column its [min, max] (absent when the file holds no
+    * non-null value) and its non-null count under [[nonNullStat]], plus
+    * the file's [[RowCountStat]]; Bloom filters for `bloomCols`. A file
+    * without rows gets nothing. `written` is the schema the files were
+    * written with.
+    *
+    * One source answers a commit. When every stats column is integral,
+    * no Bloom filter is asked for and the stage wrote at most
+    * [[FooterStatsMaxFiles]] files, the footers the write just produced
+    * answer it exactly ([[footerStats]]), so a range-managed append such
+    * as an ArchiveJob day costs the write and nothing more. Otherwise,
+    * or when a footer lacks a statistic, one data pass grouped by
+    * input_file_name answers everything ([[dataPassMeta]]). */
+  private[graft] def stagedMeta(spark: SparkSession, parts: Seq[Path],
+      written: StructType, statsCols: Seq[String], bloomCols: Seq[String],
+      mBits: Int, k: Int): (FileStats, FileBlooms) = {
+    // per-file ROW COUNT under the reserved [[RowCountStat]] key
+    // (Delta's numRecords): COUNT(*) then answers from the log with
+    // zero file opens. Skipped (collision safety) in the pathological
+    // case of a data column by that name; a column named like a
+    // column's reserved non-null key skips that column's count alike
+    val publishRows = !written.fieldNames.contains(RowCountStat)
+    val nnCols = statsCols.filter(c => !written.fieldNames.contains(nonNullStat(c)))
+    val footer =
+      if (bloomCols.isEmpty && parts.length <= FooterStatsMaxFiles &&
+          statsCols.forall(footerZone(written, _)))
+        footerStats(spark.sessionState.newHadoopConf(), parts, statsCols, nnCols, publishRows)
+      else None
+    footer.map(stats => (stats, Map.empty: FileBlooms)).getOrElse(dataPassMeta(
+      spark, parts, written, statsCols, nnCols, publishRows, bloomCols, mBits, k))
+  }
+
+  /** The most part files whose footers [[stagedMeta]] reads. They are
+    * read one after another on the driver, each one open of the file
+    * (a few round trips on an object store), so a stage that wrote
+    * more, such as a large optimize or merge, takes the distributed
+    * data pass instead. */
+  private val FooterStatsMaxFiles = 16
+
+  /** Row count, non-null counts of `nnCols` and zones of `zoneCols`
+    * (integral columns, see [[footerZone]]) per part file, from the
+    * parquet footers alone, combined over the files' row groups.
+    * Files without rows are left out. None when a footer holds no
+    * single parquet column for one of them, or it lacks that column's
+    * statistics or null count. */
+  private[graft] def footerStats(conf: org.apache.hadoop.conf.Configuration,
+      parts: Seq[Path], zoneCols: Seq[String], nnCols: Seq[String],
+      rows: Boolean): Option[FileStats] = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.parquet.column.statistics.Statistics
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val perFile = parts.map { p =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
+      val blocks = try reader.getFooter.getBlocks.asScala.toSeq finally reader.close()
+      val n = blocks.map(_.getRowCount).sum
+      // one top-level primitive column's statistics in every row
+      // group, or None
+      def colStats(c: String): Option[Seq[Statistics[_]]] = {
+        val found = blocks.map(_.getColumns.asScala.find(_.getPath.toArray.toSeq == Seq(c))
+          .flatMap(ch => Option(ch.getStatistics)).filter(_.isNumNullsSet))
+        if (found.forall(_.isDefined)) Some(found.flatten) else None
+      }
+      def zone(c: String) = colStats(c).map { ss =>
+        val vs = ss.filter(_.hasNonNullValue)
+        if (vs.isEmpty) None
+        else Some(c -> (vs.map(_.genericGetMin.asInstanceOf[Number].longValue).min.toDouble,
+          vs.map(_.genericGetMax.asInstanceOf[Number].longValue).max.toDouble))
+      }
+      def nonNull(c: String) = colStats(c).map { ss =>
+        val nn = (n - ss.map(_.getNumNulls).sum).toDouble
+        nonNullStat(c) -> (nn, nn)
+      }
+      val zones = zoneCols.map(zone)
+      val nns = nnCols.map(nonNull)
+      val rowStat = if (rows) Seq(RowCountStat -> (n.toDouble, n.toDouble)) else Seq.empty
+      if (zones.exists(_.isEmpty) || nns.exists(_.isEmpty)) None
+      else Some((p.getName, n, (zones.flatten.flatten ++ nns.flatten ++ rowStat).toMap))
+    }
+    if (perFile.exists(_.isEmpty)) None
+    else Some(perFile.flatten.collect { case (f, n, m) if n > 0 => f -> m }.toMap)
+  }
+
+  /** The data pass over staged part files: one aggregate grouped by
+    * input_file_name (the ZoneMaps.write shape) giving per file the
+    * zones of `zoneCols` (cast to double, Spark's ordering), the
+    * non-null counts of `nnCols`, the row count when `rows`, and Bloom
+    * filters of `bloomCols`. Runs no job when asked for nothing. */
+  private[graft] def dataPassMeta(spark: SparkSession, parts: Seq[Path],
+      written: StructType, zoneCols: Seq[String], nnCols: Seq[String],
+      rows: Boolean, bloomCols: Seq[String], mBits: Int, k: Int)
+      : (FileStats, FileBlooms) = {
+    import org.apache.spark.sql.functions.{col, count, input_file_name, lit, max, min, xxhash64}
+    val aggs = zoneCols.flatMap(c =>
+        Seq(min(col(c)).cast("double").as(s"min_$c"),
+          max(col(c)).cast("double").as(s"max_$c"))) ++
+      bloomCols.map(c =>
+        graft.plans.BloomAggregate.bloom(xxhash64(col(c)), mBits, k).as(s"bloom_$c")) ++
+      nnCols.map(c => count(col(c)).cast("double").as(s"nn_$c")) ++
+      (if (rows) Seq(count(lit(1)).cast("double").as("__nrows")) else Seq.empty)
+    if (aggs.isEmpty) return (Map.empty, Map.empty)
+    val out = spark.read.schema(nullableSchema(written))
+      .parquet(parts.map(_.toString): _*)
+      .groupBy(input_file_name().as("file"))
+      .agg(aggs.head, aggs.tail: _*)
+      .collect()
+      .map(r => r.getString(0).split('/').last -> r)
+    val stats = out.map { case (name, r) =>
+      val zones = zoneCols.flatMap { c =>
+        val lo = r.getAs[Any](s"min_$c")
+        val hi = r.getAs[Any](s"max_$c")
+        if (lo == null || hi == null) None
+        else Some(c -> (lo.asInstanceOf[Double], hi.asInstanceOf[Double]))
+      }
+      val nns = nnCols.map { c =>
+        val n = r.getAs[Double](s"nn_$c")
+        nonNullStat(c) -> (n, n)
+      }
+      val rowStat =
+        if (rows) {
+          val n = r.getAs[Double]("__nrows")
+          Seq(RowCountStat -> (n, n))
+        } else Seq.empty
+      name -> (zones ++ nns ++ rowStat).toMap
+    }.toMap
+    val blooms = out.map { case (name, r) =>
+      name -> bloomCols.map { c =>
+        c -> (k.toString + ":" + java.util.Base64.getEncoder
+          .encodeToString(r.getAs[Array[Byte]](s"bloom_$c")))
+      }.toMap
+    }.toMap
+    (stats, blooms)
   }
 }

@@ -162,7 +162,9 @@ object ArchiveJob {
   }
 
   /** The day-partitioned conversion output for a set of days, ready for
-    * the partitioned sink: adds month=YYYYMM / day=YYYYMMDD columns. */
+    * the partitioned sink: adds month=YYYYMM / day=YYYYMMDD columns.
+    * The days are selected on `dateTime`, so a cached `df` skips the
+    * batches of other days. */
   def outputFor(df: DataFrame, from: LocalDate, to: LocalDate): DataFrame = {
     val (start, stop) = dayBounds(from, to)
     withDayLabels(convertUnits(df.filter(col("dateTime").between(start, stop))))
@@ -236,6 +238,16 @@ object ArchiveJob {
     // pending the range is yesterday alone, for the gauges
     val (lo, hi) = dayBounds(if (firstDay.isAfter(yesterday)) yesterday else firstDay, yesterday)
     val df = unionStations(spark, cfg).filter(col("dateTime").between(lo, hi)).cache()
+    // The cached slice holds exactly [firstDay, yesterday], so a write of
+    // that whole range (every 1-day tick, every backfill) takes it
+    // unfiltered. Spark inlines long literals into generated Java, so a
+    // day's dateTime bounds would make each tick compile new classes;
+    // without them every tick's plan generates the same source and is
+    // served from the codegen cache. A catch-up of several days still
+    // filters each day on dateTime, which the cache prunes by batch.
+    def output(from: LocalDate, to: LocalDate): DataFrame =
+      if (from == firstDay && to == yesterday) withDayLabels(convertUnits(df))
+      else outputFor(df, from, to)
     try {
       // the one control-plane read: samples per (UTC day, station)
       val counts: Map[LocalDate, Map[String, Long]] = stationDayCounts(df).collect()
@@ -260,14 +272,14 @@ object ArchiveJob {
       if (perDayCommit) {
         // Reference ordering (:474-476): write day N, then advance state.
         daysPresent.foreach { day =>
-          val out = outputFor(df, day, day)
+          val out = output(day, day)
           if (cfg.sinkFormat == "commitlog") writeDaysLog(spark, out, cfg, day, day)
           else writeDays(out, cfg)
           Watermark.advance(cfg.statePath, day)
         }
       } else if (daysPresent.nonEmpty) {
         // Backfill path: one job for the whole range, then one advance.
-        val out = outputFor(df, firstDay, yesterday)
+        val out = output(firstDay, yesterday)
         if (cfg.sinkFormat == "commitlog")
           writeDaysLog(spark, out, cfg, firstDay, yesterday)
         else writeDays(out, cfg)

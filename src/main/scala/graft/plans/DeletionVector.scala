@@ -177,12 +177,13 @@ case class DvTest(left: Expression, right: Expression) extends BinaryExpression 
 }
 
 /** The driver session's Hadoop configuration, made Java-serializable
-  * so an expression can carry it to the executors (Configuration is
-  * Writable but not Serializable; the same trick Spark uses
-  * internally). Without it an executor-side `new Configuration()`
-  * would silently drop runtime `spark.hadoop.*` settings — object
-  * store credentials, endpoints — and sidecar reads would fail on a
-  * real cluster while passing on local disk. */
+  * so an expression ([[DvLoad]]) or a broadcast (the SQLite scans) can
+  * carry it to the executors (Configuration is Writable but not
+  * Serializable; the same trick Spark uses internally). Without it an
+  * executor-side `new Configuration()` would silently drop runtime
+  * `spark.hadoop.*` settings — object store credentials, endpoints —
+  * and reads would fail on a real cluster while passing on local
+  * disk. */
 final class SerializableHadoopConf(
     @transient var value: org.apache.hadoop.conf.Configuration)
     extends Serializable {

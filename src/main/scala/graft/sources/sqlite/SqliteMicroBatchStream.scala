@@ -1,6 +1,5 @@
 package graft.sources.sqlite
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{
   MicroBatchStream, Offset, ReadAllAvailable, ReadLimit, ReadMaxRows,
@@ -160,7 +159,8 @@ class SqliteMicroBatchStream(rootPath: String, table: String,
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[SqliteOffset].maxRowids
     val e = end.asInstanceOf[SqliteOffset].maxRowids
-    val stationByPath = SqlitePaths.resolve(rootPath, conf)
+    val hconf = conf
+    val stationByPath = SqlitePaths.resolve(rootPath, hconf)
       .map { case (st, p) => p -> st }.toMap
     e.toSeq.sortBy(_._1).flatMap { case (p, endRowid) =>
       // (watermark-regression handling lives in latestOffset, where
@@ -178,7 +178,7 @@ class SqliteMicroBatchStream(rootPath: String, table: String,
         else {
           val station = stationByPath.getOrElse(p,
             SqlitePaths.stationOf(new org.apache.hadoop.fs.Path(p).getName))
-          SqliteScan.pageGroups(p, table, plo, phi).map(pages =>
+          SqliteScan.pageGroups(p, table, plo, phi, hconf).map(pages =>
             SqlitePartition(p, table, pages, plo, phi, station, stationCol): InputPartition)
         }
       }
@@ -186,8 +186,7 @@ class SqliteMicroBatchStream(rootPath: String, table: String,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new SqliteReaderFactory(fullSchema, required,
-      new SqliteConf(SqliteTableProvider.hadoopConf()))
+    new SqliteReaderFactory(fullSchema, required, SqliteTableProvider.broadcastConf())
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()

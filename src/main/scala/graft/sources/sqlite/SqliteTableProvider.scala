@@ -5,6 +5,7 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -14,6 +15,7 @@ import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import graft.plans.SerializableHadoopConf
 
 /** Spark DataSource V2 for SQLite database files — the reference's real
   * ingest format (aristoteles/aristoteles.py:229-230 reads wview SQLite
@@ -109,6 +111,13 @@ object SqliteTableProvider {
     org.apache.spark.sql.SparkSession.getActiveSession
       .map(_.sessionState.newHadoopConf())
       .getOrElse(new Configuration())
+
+  /** [[hadoopConf]] broadcast once for a scan's tasks, as Spark's own
+    * file scans do: carried inside the reader factory instead, the
+    * whole Configuration would be deserialized again by every task. */
+  def broadcastConf(): Broadcast[SerializableHadoopConf] =
+    org.apache.spark.sql.SparkSession.active.sparkContext
+      .broadcast(new SerializableHadoopConf(hadoopConf()))
 
   /** SQLite type-affinity rules (fileformat2.html §3.1 / lang docs),
     * reduced to the four storage classes we surface. */
@@ -273,7 +282,7 @@ class SqliteAggScan(paths: Seq[String], table: String, aggs: Seq[SqliteAgg],
   override def planInputPartitions(): Array[InputPartition] =
     paths.toArray.map(p => SqliteAggPartition(p, table, aggs, lo, hi): InputPartition)
   override def createReaderFactory(): PartitionReaderFactory = {
-    val sconf = new SqliteConf(SqliteTableProvider.hadoopConf())
+    val conf = SqliteTableProvider.broadcastConf()
     new PartitionReaderFactory {
       override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
         val part = p.asInstanceOf[SqliteAggPartition]
@@ -282,7 +291,7 @@ class SqliteAggScan(paths: Seq[String], table: String, aggs: Seq[SqliteAgg],
           private var row: InternalRow = _
           override def next(): Boolean = {
             if (done) return false
-            val f = SqliteFile.open(part.path, sconf.value)
+            val f = SqliteFile.open(part.path, conf.value.value)
             try {
               val root = f.tableRoot(part.table)
               val vals: Seq[Any] = part.aggs.map {
@@ -322,14 +331,16 @@ class SqliteScan(rootPath: String, files: Seq[(String, String)], table: String,
   /** Every file's pruned page groups become partitions (see
     * [[SqliteScan.pageGroups]]); a multi-station directory fans in as
     * one distributed scan. */
-  override def planInputPartitions(): Array[InputPartition] =
+  override def planInputPartitions(): Array[InputPartition] = {
+    val conf = SqliteTableProvider.hadoopConf()
     files.toArray.flatMap { case (station, p) =>
-      SqliteScan.pageGroups(p, table, lo, hi).map(pages =>
+      SqliteScan.pageGroups(p, table, lo, hi, conf).map(pages =>
         SqlitePartition(p, table, pages, lo, hi, station, stationCol): InputPartition)
     }
+  }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new SqliteReaderFactory(fullSchema, required)
+    new SqliteReaderFactory(fullSchema, required, SqliteTableProvider.broadcastConf())
 
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
@@ -342,8 +353,9 @@ object SqliteScan {
     * children, pruned to those intersecting [lo, hi] at PLAN time,
     * grouped so partition count stays O(32-ish per file). A leaf root
     * (small DB) is a single group. */
-  def pageGroups(path: String, table: String, lo: Long, hi: Long): Array[Seq[Int]] = {
-    val f = SqliteFile.open(path)
+  def pageGroups(path: String, table: String, lo: Long, hi: Long,
+      conf: Configuration): Array[Seq[Int]] = {
+    val f = SqliteFile.open(path, conf)
     try {
       val root = f.tableRoot(table)
       val kids = f.interiorChildren(root)
@@ -368,27 +380,16 @@ case class SqlitePartition(path: String, table: String, pages: Seq[Int],
                            station: String = "",
                            stationCol: Option[String] = None) extends InputPartition
 
-/** Hadoop Configuration is not Serializable; this wrapper ships the
-  * DRIVER's configuration (s3a credentials, kerberos — everything
-  * spark.hadoop.* carries) to the executor-side readers, the standard
-  * connector pattern. */
-class SqliteConf(@transient var value: Configuration) extends Serializable {
-  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-    out.defaultWriteObject(); value.write(out)
-  }
-  private def readObject(in: java.io.ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    value = new Configuration(false)
-    value.readFields(in)
-  }
-}
-
+/** Reads the scan's partitions with the DRIVER session's Hadoop
+  * configuration (s3a credentials, kerberos — everything
+  * spark.hadoop.* carries), broadcast once per scan
+  * ([[SqliteTableProvider.broadcastConf]]). */
 class SqliteReaderFactory(fullSchema: StructType, required: StructType,
-    conf: SqliteConf = new SqliteConf(SqliteTableProvider.hadoopConf()))
+    conf: Broadcast[SerializableHadoopConf])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[SqlitePartition]
-    new SqlitePartitionReader(p, fullSchema, required, conf.value)
+    new SqlitePartitionReader(p, fullSchema, required, conf.value.value)
   }
 }
 

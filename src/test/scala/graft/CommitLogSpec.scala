@@ -1185,6 +1185,88 @@ class CommitLogSpec extends SparkSpec {
     } finally cleanup(t)
   }
 
+  test("staged stats from the footers equal the data pass's, in the same commit JSON") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.types.StructType
+    val t = tempTable()
+    val blockSize = "parquet.block.size"
+    try {
+      CommitLog.declareSchema(spark, t,
+        StructType.fromDDL("i INT, l BIGINT, none INT, x DOUBLE, s STRING"))
+      // column mapping: logical `ts`, physical `l` in the files and stats
+      CommitLog.renameColumn(spark, t, "l", "ts")
+      val df = spark.range(0, 6000, 1, 2).select(
+        when(col("id") % 7 === 0, lit(null))
+          .otherwise((col("id") - 3000).cast("int")).as("i"),
+        (col("id") * 1000000007L - (1L << 40)).as("ts"),
+        lit(null).cast("int").as("none"),
+        when(col("id") === 5, lit(Double.NaN)).otherwise(col("id").cast("double")).as("x"),
+        col("id").cast("string").as("s"))
+      // small row groups: the footer path combines several per file
+      spark.conf.set(blockSize, "8192")
+      val (v1, v2) = try {
+        (CommitLog.appendWithStats(spark, t, df, Seq("i", "ts", "none", "x")),
+          CommitLog.appendWithStats(spark, t, df.filter(col("id") % 100 < 3), Seq("ts")))
+      } finally spark.conf.unset(blockSize)
+      val conf = spark.sessionState.newHadoopConf()
+      val committed = CommitLog.fileStats(spark, t)
+      val line = (v: Long) => new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(f"$t/_graft_log/$v%08d.json")), "UTF-8")
+      def check(v: Long, statsCols: Seq[String], footerZones: Seq[String]): Unit = {
+        val files = CommitLog.snapshot(spark, t, Some(v)).toSet --
+          CommitLog.snapshot(spark, t, Some(v - 1))
+        val parts = files.toSeq.sorted.map(f => new Path(s"$t/$f"))
+        assert(parts.length === 2)
+        val written = spark.read.parquet(parts.map(_.toString): _*).schema
+        val (data, _) = CommitLog.dataPassMeta(spark, parts, written,
+          statsCols, statsCols, rows = true, Seq.empty, 0, 0)
+        val footer = CommitLog.footerStats(conf, parts, footerZones, statsCols,
+          rows = true).get
+        val nonFooter = statsCols.filterNot(footerZones.contains).toSet
+        assert(footer === data.map { case (f, m) => f -> (m -- nonFooter) },
+          "footer-derived stats differ from the data pass")
+        for (p <- parts) {
+          val rel = s"data/${p.getName}"
+          // NaN != NaN, so the comparison is on the published text
+          val want = CommitLog.jstats(Map(rel -> data(p.getName)))
+          assert(CommitLog.jstats(Map(rel -> committed(rel))) === want)
+          assert(line(v).contains(want.drop(1).dropRight(1)), s"v$v commit JSON of $rel")
+        }
+      }
+      check(v1, Seq("i", "l", "none", "x"), Seq("i", "l", "none"))
+      check(v2, Seq("l"), Seq("l"))
+      val v1Files = CommitLog.snapshot(spark, t, Some(v1))
+      val groups = v1Files.map { f =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(s"$t/$f"), conf))
+        try r.getFooter.getBlocks.asScala.length finally r.close()
+      }
+      assert(groups.forall(_ > 1), s"row groups per file: $groups")
+      v1Files.foreach { f =>
+        val st = committed(f)
+        assert(!st.contains("none") && st(CommitLog.nonNullStat("none")) === ((0.0, 0.0)))
+        assert(st(CommitLog.RowCountStat) === ((3000.0, 3000.0)))
+        assert(st.contains("l") && !st.contains("ts"), "stats keyed by the physical name")
+      }
+      // Spark orders NaN last: the file holding id 5 publishes a NaN max
+      assert(v1Files.count(f => committed(f)("x")._2.isNaN) === 1)
+      assert(CommitLog.read(spark, t).filter(col("ts").isNotNull).count() === 6180)
+    } finally cleanup(t)
+  }
+
+  test("a snapshot-based commit over a version the log does not hold conflicts") {
+    val t = tempTable()
+    try {
+      import spark.implicits._
+      CommitLog.append(spark, t, Seq((1L, "a")).toDF("id", "s")) // v0
+      intercept[java.util.ConcurrentModificationException] {
+        CommitLog.commit(spark, t, Seq.empty, Seq.empty, expectedVersion = Some(4L))
+      }
+      assert(CommitLog.versions(spark, t) === Seq(0L), "a conflict publishes nothing")
+    } finally cleanup(t)
+  }
+
   test("optimistic concurrency: a snapshot-based commit refuses to publish over an advanced log") {
     val t = tempTable()
     try {

@@ -281,6 +281,29 @@ class SqliteSourceSpec extends SparkSpec {
     assert(r.getLong(3) === 0L) // stB is metric (usUnits=0)
   }
 
+  test("a Hadoop setting made only on the session reaches the SQLite readers") {
+    // the scheme resolves only through the session's Hadoop conf (a
+    // runtime session setting under its plain Hadoop key: Spark applies
+    // `spark.hadoop.*` keys only when the context starts), and with the
+    // file-system cache off every reader resolves it again from the conf
+    // it was given: the broadcast one on the task side
+    val keys = Seq(
+      "fs.sessiononly.impl" -> classOf[SessionOnlyFileSystem].getName,
+      "fs.sessiononly.impl.disable.cache" -> "true")
+    keys.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val path = "sessiononly://" + res("stA.sdb")
+      val opened = SessionOnlyFileSystem.opens.get
+      val lo = 1709251200L + 86400
+      val rows = spark.read.format("sqlite").load(path)
+        .filter(col("dateTime") >= lo).select("dateTime", "outTemp").collect()
+      assert(rows.length === 288 && rows.map(_.getLong(0)).min === lo)
+      val agg = spark.read.format("sqlite").load(path).agg(count(lit(1))).collect()(0)
+      assert(agg.getLong(0) === 576L)
+      assert(SessionOnlyFileSystem.opens.get > opened, "the test file system was not used")
+    } finally keys.foreach { case (k, _) => spark.conf.unset(k) }
+  }
+
   // ---- e2e: the reference's actual pipeline input -------------------
 
   test("an archive tick reads only its pending day from the station file") {
@@ -362,4 +385,23 @@ class SqliteSourceSpec extends SparkSpec {
     val rB = rawSpot.schema.fieldNames.indexOf("barometer")
     assert(math.abs(spot.getDouble(iB) - rawSpot.getDouble(rB) * 33.863886) < 1e-9)
   }
+}
+
+/** The local file system under the `sessiononly` scheme, which no
+  * default Hadoop configuration maps to a class: a read reaches it only
+  * through a configuration carrying the session's Hadoop settings.
+  * Counts the files it opens. */
+class SessionOnlyFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = SessionOnlyFileSystem.Uri
+  override def getScheme: String = SessionOnlyFileSystem.Uri.getScheme
+  override def open(f: org.apache.hadoop.fs.Path, bufferSize: Int)
+      : org.apache.hadoop.fs.FSDataInputStream = {
+    SessionOnlyFileSystem.opens.incrementAndGet()
+    super.open(f, bufferSize)
+  }
+}
+
+object SessionOnlyFileSystem {
+  val Uri: java.net.URI = java.net.URI.create("sessiononly:///")
+  val opens = new java.util.concurrent.atomic.AtomicLong
 }
