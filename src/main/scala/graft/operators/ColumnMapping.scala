@@ -115,8 +115,8 @@ object ColumnMapping {
       f.copy(name = physicalName(declared, f.name))))
 
   /** Rewrite a pushed filter's single-part column names through `m`
-    * (the zone/bloom consultation and row-group ranges are keyed by
-    * PHYSICAL names). Unknown filter shapes pass through — they are
+    * (zones, blooms and the data files' columns are keyed by PHYSICAL
+    * names). Unknown filter shapes pass through — they are
     * not skippable, so their names are never consulted. */
   def mapFilter(f: Filter, m: String => String): Filter = f match {
     case GreaterThan(c, v) => GreaterThan(m(c), v)

@@ -198,6 +198,17 @@ final class SerializableHadoopConf(
   }
 }
 
+object SerializableHadoopConf {
+  /** The session's Hadoop conf, broadcast once for a scan's or a
+    * write's tasks as Spark's own file scans do: carried inside a
+    * reader or writer factory instead, the whole Configuration would be
+    * deserialized again by every task. */
+  def broadcast(spark: org.apache.spark.sql.SparkSession)
+      : org.apache.spark.broadcast.Broadcast[SerializableHadoopConf] =
+    spark.sparkContext.broadcast(
+      new SerializableHadoopConf(spark.sessionState.newHadoopConf()))
+}
+
 /** `graft_dv_load(path)` → binary: a sidecar deletion-vector file's
   * bytes, loaded ON THE EXECUTOR probing the row — large vectors never
   * transit the driver, the commit JSON, or a broadcast; each task

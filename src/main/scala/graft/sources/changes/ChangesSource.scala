@@ -4,15 +4,6 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.schema.{GroupType, LogicalTypeAnnotation, MessageType}
-import org.apache.parquet.schema.LogicalTypeAnnotation.{TimestampLogicalTypeAnnotation, TimeUnit}
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -27,6 +18,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.operators.CommitLog
+import graft.sources.ParquetRead
 
 /** Structured-Streaming CHANGE FEED over a commit-log table — Delta's
   * `readStream` CDF surface re-expressed for [[CommitLog]]:
@@ -170,8 +162,10 @@ class ChangesMicroBatchStream(tablePath: String, schema: StructType,
     }.toArray
   }
 
+  // _change_type and _commit_version are each slice's constants
   override def createReaderFactory(): PartitionReaderFactory =
-    new ChangesReaderFactory(schema)
+    new ChangesReaderFactory(ParquetRead(spark, schema,
+      StructType(schema.fields.takeRight(2)), Map.empty, Nil))
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
@@ -180,94 +174,16 @@ class ChangesMicroBatchStream(tablePath: String, schema: StructType,
 case class ChangesPartition(filePath: String, kind: String, version: Long,
     dvDiff: Option[Array[Byte]]) extends InputPartition
 
-class ChangesReaderFactory(schema: StructType) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new ChangesPartitionReader(partition.asInstanceOf[ChangesPartition], schema)
-}
-
-/** Reads one parquet file with parquet-java's Group API and converts
-  * records to InternalRows of the declared schema — name-matched, so a
+/** DV-delete slices emit ONLY the rows whose bit is set in the vector
+  * diff; every other slice emits the file's rows. Files decode through
+  * [[ParquetRead]], name-matched on physical names, so a
   * pre-evolution file null-fills missing columns exactly like the
-  * batch feed's declared-schema read. For DV-delete partitions only
-  * the rows whose bit is set in the vector diff are emitted (the row
-  * index is the read position — parquet-java iterates in file order,
-  * the same order `_metadata.row_index` numbers).
-  *
-  * Supported physical types: BOOLEAN, INT32 (int/date), INT64
-  * (long/timestamp MICROS|MILLIS|NANOS), INT96 (legacy timestamp),
-  * FLOAT, DOUBLE, BINARY (string/bytes) — the flat-primitive surface
-  * commit-log tables carry. Nested/repeated columns are refused with
-  * a named error rather than decoded wrongly. */
-class ChangesPartitionReader(p: ChangesPartition, schema: StructType)
-    extends PartitionReader[InternalRow] {
-
-  private val conf = new Configuration()
-  private val inputFile = HadoopInputFile.fromPath(new Path(p.filePath), conf)
-
-  private val fileSchema: MessageType = {
-    val fr = ParquetFileReader.open(inputFile)
-    try fr.getFooter.getFileMetaData.getSchema finally fr.close()
+  * batch feed's declared-schema read. */
+class ChangesReaderFactory(read: ParquetRead) extends PartitionReaderFactory {
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
+    val p = partition.asInstanceOf[ChangesPartition]
+    ParquetRead.reader(read.rows(p.filePath,
+      InternalRow(UTF8String.fromString(p.kind), p.version), p.dvDiff.orNull,
+      keepSet = true))
   }
-
-  private val reader = {
-    val rs = new GroupReadSupport()
-    org.apache.parquet.hadoop.ParquetReader.builder(rs, new Path(p.filePath))
-      .withConf(conf).build()
-  }
-
-  // output slot -> file field index (-1 = absent: null-fill).
-  // COLUMN MAPPING: file columns are addressed by the field's PHYSICAL
-  // name (carried in the declared schema's metadata, which survives
-  // the stream's schema JSON round trip); logical names stay on the
-  // output slots — a renamed column keeps serving, never null-fills
-  private val dataFields = schema.fields.dropRight(2) // _change_type, _commit_version appended here
-  private val fieldIdx: Array[Int] = dataFields.map { f =>
-    val phys = graft.operators.ColumnMapping.physical(f)
-    if (fileSchema.containsField(phys)) fileSchema.getFieldIndex(phys) else -1
-  }
-  fieldIdx.zipWithIndex.foreach { case (i, out) =>
-    // nested columns (list / map / struct, recursively) decode through
-    // ParquetGroups; only a top-level shape contradiction refuses
-    if (i >= 0 && !graft.sources.ParquetGroups.shapeCompatible(
-        fileSchema.getType(i), dataFields(out).dataType))
-      throw new UnsupportedOperationException(
-        s"graft-changes: column '${dataFields(out).name}' in ${p.filePath} " +
-        s"is ${fileSchema.getType(i)} in the file but declared " +
-        s"${dataFields(out).dataType.catalogString} — top-level shape mismatch")
-  }
-
-  private val changeTypeValue = UTF8String.fromString(p.kind)
-  private var rowIndex = -1L
-  private var current: InternalRow = _
-
-  override def next(): Boolean = {
-    var g: Group = reader.read()
-    rowIndex += 1
-    // DV-delete slices emit ONLY rows whose diff bit is set — probed
-    // with the SAME testBit the scan-side dv mask uses (word layout is
-    // its contract, never re-derived here)
-    while (g != null &&
-        p.dvDiff.exists(dv => !graft.plans.BitsetAggregate.testBit(dv, rowIndex))) {
-      g = reader.read()
-      rowIndex += 1
-    }
-    if (g == null) return false
-    val vals = new Array[Any](schema.length)
-    var out = 0
-    while (out < dataFields.length) {
-      val fi = fieldIdx(out)
-      vals(out) =
-        if (fi < 0 || g.getFieldRepetitionCount(fi) == 0) null
-        else graft.sources.ParquetGroups.convert(g, fi,
-          dataFields(out).dataType, s"graft-changes ${p.filePath}")
-      out += 1
-    }
-    vals(schema.length - 2) = changeTypeValue
-    vals(schema.length - 1) = p.version
-    current = InternalRow.fromSeq(vals.toIndexedSeq)
-    true
-  }
-
-  override def get(): InternalRow = current
-  override def close(): Unit = reader.close()
 }

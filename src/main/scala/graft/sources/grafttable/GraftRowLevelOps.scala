@@ -37,7 +37,7 @@ import graft.operators.CommitLog
   *  - the COW scan NEVER row-filters: a matched file's unmatched rows
   *    must flow through the rewrite or they'd be silently dropped —
   *    pushed filters prune whole files only, and the readers get no
-  *    row-group ranges;
+  *    filters to skip row groups with;
   *  - deletion vectors are applied by the scan, so a DV-deleted row
   *    cannot resurrect through the rewrite, and replacing the file
   *    retires its vector;
@@ -74,7 +74,7 @@ class GraftRowLevelOperation(tablePath: String, cmd: Command)
 /** Scan builder for the rewrite's read side. Pushed filters (the
   * command's condition) are used ONLY to prune whole files via the
   * log's zone/bloom metadata — every filter is returned as residual
-  * and the readers receive no row-group ranges, because the rewrite
+  * and the readers receive no filters, because the rewrite
   * needs every live row of every surviving file. */
 class GraftCowScanBuilder(op: GraftRowLevelOperation, tablePath: String)
     extends ScanBuilder with SupportsPushDownFilters
@@ -162,12 +162,14 @@ class GraftCowScan(val tablePath: String, val version: Long,
     }
 
   override def planInputPartitions(): Array[InputPartition] =
-    GraftScan.partitionsFor(SparkSession.active, tablePath, version, files,
-      ranges = Array.empty) // no row-group skipping: every live row flows
+    GraftScan.partitionsFor(SparkSession.active, tablePath, version, files)
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new GraftReaderFactory(schema,
-      GraftScan.mappingOf(SparkSession.active, tablePath, version))
+  // no filters, so no row-group skipping: every live row flows
+  override def createReaderFactory(): PartitionReaderFactory = {
+    val spark = SparkSession.active
+    new GraftReaderFactory(GraftScan.parquetRead(spark, schema,
+      GraftScan.mappingOf(spark, tablePath, version), Nil))
+  }
 
   override def description(): String =
     s"graft COW scan $tablePath v$version (${files.size} candidate files)"
@@ -199,7 +201,8 @@ class GraftCowWrite(op: GraftRowLevelOperation, tablePath: String,
       else CommitLog.fileStats(spark, tablePath, Some(scan.version))
         .values.flatMap(_.keys).toSet
         .intersect(writeSchemaP.fields.map(_.name).toSet).toSeq.sorted
-    GraftCowWriterFactory(tablePath, writeSchemaP, statted)
+    GraftCowWriterFactory(tablePath, writeSchemaP, statted,
+      graft.plans.SerializableHadoopConf.broadcast(spark))
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
@@ -214,7 +217,7 @@ class GraftCowWrite(op: GraftRowLevelOperation, tablePath: String,
     val adds = staged.map(_.relName).toSeq
     def deleteStaged(): Unit = {
       val fs = new Path(tablePath).getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
+        spark.sessionState.newHadoopConf())
       staged.foreach(m =>
         scala.util.Try(fs.delete(new Path(tablePath, m.relName), false)))
     }
@@ -232,7 +235,7 @@ class GraftCowWrite(op: GraftRowLevelOperation, tablePath: String,
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
     val spark = SparkSession.active
     val fs = new Path(tablePath).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
+      spark.sessionState.newHadoopConf())
     messages.foreach {
       case m: GraftFileMessage if m.relName != null =>
         scala.util.Try(fs.delete(new Path(tablePath, m.relName), false))
@@ -244,11 +247,14 @@ class GraftCowWrite(op: GraftRowLevelOperation, tablePath: String,
 }
 
 case class GraftCowWriterFactory(tablePath: String, schema: StructType,
-    statsCols: Seq[String]) extends DataWriterFactory {
+    statsCols: Seq[String],
+    conf: org.apache.spark.broadcast.Broadcast[graft.plans.SerializableHadoopConf])
+    extends DataWriterFactory {
   override def createWriter(partitionId: Int,
       taskId: Long): DataWriter[InternalRow] =
     new GraftStreamDataWriter(tablePath, schema, statsCols,
-      bloomCols = Seq.empty, mBits = 64, k = 1, partitionId = partitionId)
+      bloomCols = Seq.empty, mBits = 64, k = 1, partitionId = partitionId,
+      conf = conf.value.value)
 }
 
 /** The `_file` metadata column: full path of the data file a row came

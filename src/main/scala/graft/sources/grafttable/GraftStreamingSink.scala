@@ -4,6 +4,7 @@ import java.util.UUID
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
@@ -20,7 +21,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.operators.CommitLog
-import graft.plans.BloomAggregate
+import graft.plans.{BloomAggregate, SerializableHadoopConf}
 
 /** Native exactly-once streaming sink for commit-log tables:
   *
@@ -73,7 +74,8 @@ class GraftStreamingWrite(tablePath: String, schema: StructType,
           bloomCols.map(ColumnMapping.physicalName(d, _)))
       case _ => (schema, statsCols, bloomCols)
     }
-    GraftStreamWriterFactory(tablePath, schemaP, statsP, bloomP, mBits, k)
+    GraftStreamWriterFactory(tablePath, schemaP, statsP, bloomP, mBits, k,
+      SerializableHadoopConf.broadcast(spark))
   }
 
   override def commit(epochId: Long,
@@ -84,7 +86,7 @@ class GraftStreamingWrite(tablePath: String, schema: StructType,
     }
     def deleteStaged(): Unit = {
       val fs = new Path(tablePath).getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
+        spark.sessionState.newHadoopConf())
       staged.foreach(m =>
         scala.util.Try(fs.delete(new Path(tablePath, m.relName), false)))
     }
@@ -140,7 +142,7 @@ class GraftStreamingWrite(tablePath: String, schema: StructType,
       messages: Array[WriterCommitMessage]): Unit = {
     val spark = SparkSession.active
     val fs = new Path(tablePath).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
+      spark.sessionState.newHadoopConf())
     messages.foreach {
       case m: GraftFileMessage if m.relName != null =>
         scala.util.Try(fs.delete(new Path(tablePath, m.relName), false))
@@ -156,12 +158,13 @@ case class GraftFileMessage(relName: String, rows: Long,
     extends WriterCommitMessage
 
 case class GraftStreamWriterFactory(tablePath: String, schema: StructType,
-    statsCols: Seq[String], bloomCols: Seq[String], mBits: Int, k: Int)
+    statsCols: Seq[String], bloomCols: Seq[String], mBits: Int, k: Int,
+    conf: Broadcast[SerializableHadoopConf])
     extends StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
     new GraftStreamDataWriter(tablePath, schema, statsCols, bloomCols,
-      mBits, k, partitionId)
+      mBits, k, partitionId, conf.value.value)
 }
 
 /** Executor-side writer: InternalRow → parquet Group straight to the
@@ -169,19 +172,18 @@ case class GraftStreamWriterFactory(tablePath: String, schema: StructType,
   * commit), zone extents and Bloom words updated per row. The parquet
   * layout matches what Spark's own writer produces for the supported
   * type surface (INT64 MICROS adjusted-to-UTC timestamps, annotated
-  * strings/dates, 3-level LIST arrays), so batch readers — Spark's and
-  * the engine's own — read streamed and batch-staged files
-  * identically. */
+  * strings/dates, 3-level LIST arrays), so Spark's parquet reader
+  * reads streamed and batch-staged files identically. `conf` is the
+  * session's Hadoop conf, which its factory broadcasts. */
 class GraftStreamDataWriter(tablePath: String, schema: StructType,
     statsCols: Seq[String], bloomCols: Seq[String], mBits: Int, k: Int,
-    partitionId: Int) extends DataWriter[InternalRow] {
+    partitionId: Int, conf: Configuration) extends DataWriter[InternalRow] {
 
   import GraftStreamDataWriter._
 
   private val relName =
     s"${CommitLog.DataDir}/${UUID.randomUUID().toString.take(8)}-s$partitionId.parquet"
   private val fullPath = new Path(tablePath, relName)
-  private val conf = new Configuration()
   private val msgType = messageTypeOf(schema)
   private val factory = new SimpleGroupFactory(msgType)
 
@@ -327,8 +329,7 @@ object GraftStreamDataWriter {
 
   /** StructType → parquet MessageType matching Spark's writer layout
     * (3-level LIST, key_value MAP, plain-group STRUCT — recursively),
-    * so the sink's files are indistinguishable from batch-staged ones
-    * and the recursive reader round-trips them. */
+    * so the sink's files are indistinguishable from batch-staged ones. */
   private[grafttable] def messageTypeOf(schema: StructType): MessageType = {
     val b = Types.buildMessage()
     schema.fields.foreach(f => b.addField(fieldTypeOf(f.name, f.dataType)))
@@ -371,7 +372,7 @@ object GraftStreamDataWriter {
   /** One value into slot `fi` of `g`, recursively — InternalRow,
     * ArrayData, and MapData key/value arrays all expose the same
     * SpecializedGetters surface, so one definition writes every
-    * nesting level (the writer twin of ParquetGroups.convert). */
+    * nesting level. */
   private def addValue(g: org.apache.parquet.example.data.Group, fi: Int,
       dt: DataType,
       src: org.apache.spark.sql.catalyst.expressions.SpecializedGetters,

@@ -2,19 +2,7 @@ package graft.sources.grafttable
 
 import java.util
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.column.statistics.{DoubleStatistics, FloatStatistics, IntStatistics, LongStatistics}
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.metadata.BlockMetaData
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.io.{ColumnIOFactory, RecordReader}
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType}
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
@@ -24,8 +12,11 @@ import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate,
 import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, InsertableRelation, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.operators.CommitLog
+import graft.plans.SerializableHadoopConf
+import graft.sources.ParquetRead
 
 /** Batch DSv2 source over a commit-log table — the `spark.read`
   * surface that makes the log's data skipping AUTOMATIC:
@@ -43,10 +34,10 @@ import graft.operators.CommitLog
   * `scanEquals` APIs use — numeric comparisons become zone legs,
   * equality on keyed columns becomes a Bloom probe — so whole FILES
   * the logged metadata excludes are never opened, without the caller
-  * naming a column. Inside each surviving file the reader skips whole
-  * ROW GROUPS whose parquet footer statistics exclude every pushed
-  * range (ordinal bookkeeping keeps deletion-vector positions exact
-  * across skips). Every pushed filter is also RETURNED to Spark as a
+  * naming a column. Inside each surviving file Spark's parquet reader
+  * skips whole ROW GROUPS whose footer statistics exclude the pushed
+  * filters; its row index keeps deletion-vector positions exact across
+  * skips. Every pushed filter is also RETURNED to Spark as a
   * residual, so the scan's result is identical to an unpruned
   * scan-and-filter no matter how conservative the metadata is.
   *
@@ -55,13 +46,13 @@ import graft.operators.CommitLog
   * already-constructed DataFrame, exactly like [[CommitLog.read]].
   *
   * Deletion vectors ride the partitions: small vectors inline as
-  * bytes, sidecars as paths loaded once per partition reader on the
-  * executor — the driver never materializes sidecar bitmaps.
+  * bytes, sidecars as paths the executor loads through
+  * [[graft.plans.DvLoad]]'s cache — the driver never materializes
+  * sidecar bitmaps.
   *
-  * Column pruning reaches the parquet pages: the reader requests only
-  * the projected fields ([[ParquetFileReader.setRequestedSchema]]);
-  * a count-style empty projection reads NO pages at all — row counts
-  * come from footer metadata, minus the deletion vector's bits.
+  * Files decode through [[ParquetRead]], Spark's own parquet reader
+  * with the session's Hadoop conf: column pruning reaches the parquet
+  * pages, and a count-style empty projection reads no column pages.
   *
   * At 100 TB this is the read path a cluster user wants: file-level
   * skipping from one metadata resolve (checkpoint parquet domain, no
@@ -729,7 +720,7 @@ class GraftScan(tablePath: String, version: Long, required: StructType,
     * storage-partitioned join keeps its shape AND skips the build
     * side's dead files. */
   @volatile private var runtime: Array[Filter] = Array.empty
-  @volatile private var slicesCache: (Seq[String], Array[(String, Double, Double)]) = null
+  @volatile private var filesCache: Seq[String] = null
 
   override def filterAttributes()
       : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
@@ -742,7 +733,7 @@ class GraftScan(tablePath: String, version: Long, required: StructType,
   override def filter(filters: Array[Filter]): Unit =
     if (clusterCols.isEmpty) {
       runtime = filters.filter(GraftScanBuilder.skippable)
-      slicesCache = null
+      filesCache = null
     } else {
       // freeze the keyed structure FIRST (it derives from the static
       // file set), then record the filters for within-group pruning
@@ -750,8 +741,8 @@ class GraftScan(tablePath: String, version: Long, required: StructType,
       runtime = filters.filter(GraftScanBuilder.skippable)
     }
 
-  private def fileSlices: (Seq[String], Array[(String, Double, Double)]) = {
-    val cached = slicesCache
+  private def liveFiles: Seq[String] = {
+    val cached = filesCache
     if (cached != null) cached
     else {
       val spark = SparkSession.active
@@ -759,9 +750,8 @@ class GraftScan(tablePath: String, version: Long, required: StructType,
       val files =
         if (preds.isEmpty) CommitLog.snapshot(spark, tablePath, Some(version))
         else CommitLog.prunedFilesFor(spark, tablePath, Some(version), preds)
-      val computed = (files, preds.ranges.toArray)
-      slicesCache = computed
-      computed
+      filesCache = files
+      files
     }
   }
 
@@ -785,7 +775,7 @@ class GraftScan(tablePath: String, version: Long, required: StructType,
     if (clusterCols.isEmpty) None
     else {
       val zones = zoneStats
-      val keyed = fileSlices._1.map { f =>
+      val keyed = liveFiles.map { f =>
         val key = clusterCols.map(c => zones.get(f).flatMap(_.get(physOf(c))) match {
           case Some((lo, hi)) if lo == hi && !lo.isNaN => Some(lo)
           case _ => None
@@ -822,9 +812,8 @@ class GraftScan(tablePath: String, version: Long, required: StructType,
   private lazy val keyedPlan: Option[Array[InputPartition]] =
     keyedGroups.map { groups =>
       val spark = SparkSession.active
-      val ranges = fileSlices._2
       groups.flatMap { case (key, fs) =>
-        val parts = GraftScan.partitionsFor(spark, tablePath, version, fs, ranges)
+        val parts = GraftScan.partitionsFor(spark, tablePath, version, fs)
           .map(_.asInstanceOf[GraftPartition])
         val rows = fs.map(f =>
           zoneStats.get(f).flatMap(_.get(CommitLog.RowCountStat)).map(_._1))
@@ -872,7 +861,7 @@ class GraftScan(tablePath: String, version: Long, required: StructType,
     else Array.empty
 
   private lazy val clusterColsNullFree: Boolean =
-    fileSlices._1.forall { f =>
+    liveFiles.forall { f =>
       val st = zoneStats.getOrElse(f, Map.empty)
       st.get(CommitLog.RowCountStat).exists { case (rows, _) =>
         clusterCols.forall(c =>
@@ -891,15 +880,11 @@ class GraftScan(tablePath: String, version: Long, required: StructType,
           parts.length)
       case None =>
         new org.apache.spark.sql.connector.read.partitioning.UnknownPartitioning(
-          fileSlices._1.size)
+          liveFiles.size)
     }
 
   override def planInputPartitions(): Array[InputPartition] = {
     val spark = SparkSession.active
-    val (files, ranges) = fileSlices
-    // only the RANGE legs travel to the readers (row-group skipping);
-    // bloom legs are file-level only — our files carry no parquet
-    // bloom filters
     keyedPlan match {
       case Some(parts) =>
         val rt = runtime
@@ -923,13 +908,17 @@ class GraftScan(tablePath: String, version: Long, required: StructType,
           }
         }
       case None =>
-        GraftScan.partitionsFor(spark, tablePath, version, files, ranges)
+        GraftScan.partitionsFor(spark, tablePath, version, liveFiles)
     }
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new GraftReaderFactory(required,
-      GraftScan.mappingOf(SparkSession.active, tablePath, version))
+  /** The pushed and runtime filters skip row groups inside each file;
+    * the zone and Bloom legs above already skipped whole files. */
+  override def createReaderFactory(): PartitionReaderFactory = {
+    val spark = SparkSession.active
+    new GraftReaderFactory(GraftScan.parquetRead(spark, required,
+      GraftScan.mappingOf(spark, tablePath, version), (pushed ++ runtime).toSeq))
+  }
 }
 
 object GraftScan {
@@ -965,8 +954,8 @@ object GraftScan {
     * Shared by the batch scan and the row-level COW scan. */
   private[grafttable] def skipPredsOf(spark: SparkSession, tablePath: String,
       version: Long, pushed0: Array[Filter]): CommitLog.SkipPreds = {
-    // COLUMN MAPPING: filters arrive with LOGICAL names; zones, blooms
-    // and row-group ranges are keyed by PHYSICAL names — translate
+    // COLUMN MAPPING: filters arrive with LOGICAL names; zones and
+    // blooms are keyed by PHYSICAL names — translate
     // once here so every consumer (batch scan, COW scan, runtime
     // filters) consults the right keys
     val pushed = CommitLog.tableSchema(spark, tablePath, Some(version))
@@ -1016,26 +1005,34 @@ object GraftScan {
 
   /** File list → DV-resolved reader partitions at `version`: inline
     * vectors decode driver-side (small by contract), sidecars travel
-    * as paths the executor loads. Shared by the batch scan and the
-    * table stream's snapshot batch. */
+    * as paths the executor loads, with one broadcast of the session's
+    * Hadoop conf when the list holds any. Shared by the batch scan,
+    * the table stream's snapshot batch and the copy-on-write scan. */
   private[grafttable] def partitionsFor(spark: SparkSession,
-      tablePath: String, version: Long, files: Seq[String],
-      ranges: Array[(String, Double, Double)]): Array[InputPartition] = {
+      tablePath: String, version: Long, files: Seq[String]): Array[InputPartition] = {
     val dvRefs = CommitLog.deletionVectorRefs(spark, tablePath, Some(version))
+    lazy val conf = SerializableHadoopConf.broadcast(spark)
     files.map { f =>
-      val (inline, sidecar) = dvRefs.get(f) match {
+      val p = GraftPartition(s"$tablePath/$f", null, null, null)
+      (dvRefs.get(f) match {
         case Some(enc) if enc.startsWith("@") =>
-          (null: Array[Byte], s"$tablePath/${CommitLog.LogDir}/${enc.drop(1)}")
-        case Some(enc) => (java.util.Base64.getDecoder.decode(enc), null: String)
-        case None => (null: Array[Byte], null: String)
-      }
-      GraftPartition(s"$tablePath/$f", inline, sidecar, ranges): InputPartition
+          p.copy(dvSidecar = s"$tablePath/${CommitLog.LogDir}/${enc.drop(1)}", conf = conf)
+        case Some(enc) => p.copy(dvInline = java.util.Base64.getDecoder.decode(enc))
+        case None => p
+      }): InputPartition
     }.toArray
   }
+
+  /** The one parquet read of every graft table scan: `schema` with
+    * `_file` served as each file's path. */
+  private[grafttable] def parquetRead(spark: SparkSession, schema: StructType,
+      nameMap: Map[String, String], filters: Seq[Filter]): ParquetRead =
+    ParquetRead(spark, schema, StructType(Seq(StructField(
+      GraftFileMetaColumn.name(), StringType, nullable = false))), nameMap, filters)
 }
 
 case class GraftPartition(filePath: String, dvInline: Array[Byte],
-    dvSidecar: String, ranges: Array[(String, Double, Double)])
+    dvSidecar: String, conf: Broadcast[SerializableHadoopConf])
     extends InputPartition
 
 /** One storage-partitioned-join partition: ALL the files sharing one
@@ -1048,202 +1045,23 @@ case class GraftKeyedPartition(files: Array[GraftPartition], key: InternalRow)
   override def partitionKey(): InternalRow = key
 }
 
-class GraftReaderFactory(schema: StructType,
-    nameMap: Map[String, String] = Map.empty) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    partition match {
-      case p: GraftPartition => new GraftPartitionReader(p, schema, nameMap)
-      case k: GraftKeyedPartition => new PartitionReader[InternalRow] {
-        // chain the key's files through the ordinary single-file reader
-        private var idx = 0
-        private var cur: PartitionReader[InternalRow] =
-          if (k.files.isEmpty) null else new GraftPartitionReader(k.files(0), schema, nameMap)
-        override def next(): Boolean = {
-          while (cur != null) {
-            if (cur.next()) return true
-            cur.close(); idx += 1
-            cur = if (idx < k.files.length)
-              new GraftPartitionReader(k.files(idx), schema, nameMap) else null
-          }
-          false
-        }
-        override def get(): InternalRow = cur.get()
-        override def close(): Unit = if (cur != null) cur.close()
-      }
+/** Reads each file of a partition through [[ParquetRead]], masking
+  * its deletion vector; a keyed (SPJ) partition chains its files.
+  * Inline vectors arrive in the partition, sidecars load on the
+  * executor through the partition's broadcast Hadoop conf. */
+class GraftReaderFactory(read: ParquetRead) extends PartitionReaderFactory {
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
+    val files = partition match {
+      case p: GraftPartition => Array(p)
+      case k: GraftKeyedPartition => k.files
     }
-}
-
-/** Reads one data file row-group by row-group with parquet-java's
-  * low-level API:
-  *
-  *  - requests ONLY the projected columns (pages of pruned columns are
-  *    never decoded; an empty projection reads no pages at all — rows
-  *    are counted from footer metadata);
-  *  - skips whole row groups whose footer statistics exclude every
-  *    pushed range ([[ParquetFileReader.skipNextRowGroup]]) — the
-  *    running row ORDINAL advances by the group's rowCount, so
-  *    deletion-vector bits keep lining up with `_metadata.row_index`
-  *    semantics;
-  *  - masks rows whose deletion-vector bit is set, with the SAME
-  *    [[graft.plans.BitsetAggregate.testBit]] the SQL scan path
-  *    codegens — the word layout is its contract, never re-derived;
-  *  - null-fills projected columns absent from the file (declared-
-  *    schema reads over pre-evolution files).
-  *
-  * Row-group statistics only prune when the column's physical type is
-  * a plain signed number (no logical annotation) — the one domain
-  * where footer min/max and the pushed double range are comparable
-  * without conversion subtleties; everything else keeps the group. */
-class GraftPartitionReader(p: GraftPartition, schema: StructType,
-    nameMap: Map[String, String] = Map.empty)
-    extends PartitionReader[InternalRow] {
-
-  GraftPartitionReader.filesOpened.incrementAndGet() // test observability
-
-  // COLUMN MAPPING: file columns are addressed by PHYSICAL names (the
-  // scan-time map wins; field metadata is the fallback so a factory
-  // built without one still resolves); output slots keep logical names
-  private def physName(f: StructField): String =
-    nameMap.getOrElse(f.name, graft.operators.ColumnMapping.physical(f))
-
-  private val conf = new Configuration()
-  private val reader =
-    ParquetFileReader.open(HadoopInputFile.fromPath(new Path(p.filePath), conf))
-  private val fileSchema: MessageType =
-    reader.getFooter.getFileMetaData.getSchema
-
-  // projected fields present in the file (declared-schema evolution:
-  // absent fields null-fill; `_file` fills with the file path); nested
-  // columns (list / map / struct, recursively) decode through
-  // ParquetGroups — the open-time gate only rejects a declared type
-  // whose TOP-LEVEL shape contradicts the file's
-  private val isFileCol: Array[Boolean] = schema.fields.map(f =>
-    f.name == GraftFileMetaColumn.name() && !fileSchema.containsField(physName(f)))
-  private val filePathUtf8 =
-    org.apache.spark.unsafe.types.UTF8String.fromString(p.filePath)
-  private val present: Array[StructField] =
-    schema.fields.filter(f => fileSchema.containsField(physName(f)))
-  present.foreach { f =>
-    val t = fileSchema.getType(fileSchema.getFieldIndex(physName(f)))
-    if (!graft.sources.ParquetGroups.shapeCompatible(t, f.dataType))
-      throw new UnsupportedOperationException(
-        s"graft ${p.filePath}: column '${f.name}' is ${t} in the file but " +
-        s"declared ${f.dataType.catalogString} — top-level shape mismatch")
+    ParquetRead.reader(files.iterator.flatMap { p =>
+      GraftPartitionReader.filesOpened.incrementAndGet()
+      val dv = if (p.dvSidecar == null) p.dvInline
+        else graft.plans.DvLoad.bytesFor(p.dvSidecar, p.conf.value.value)
+      read.rows(p.filePath, InternalRow(UTF8String.fromString(p.filePath)), dv)
+    })
   }
-  private val projSchema: MessageType =
-    new MessageType(fileSchema.getName, present.map(f =>
-      fileSchema.getType(fileSchema.getFieldIndex(physName(f)))): _*)
-  if (present.nonEmpty) reader.setRequestedSchema(projSchema)
-
-  // output slot -> projected field index (-1 = absent: null-fill)
-  private val fieldIdx: Array[Int] = schema.fields.map(f =>
-    if (projSchema.containsField(physName(f))) projSchema.getFieldIndex(physName(f))
-    else -1)
-
-  private val dv: Array[Byte] =
-    if (p.dvInline != null) p.dvInline
-    else if (p.dvSidecar != null) {
-      val path = new Path(p.dvSidecar)
-      val fs = path.getFileSystem(conf)
-      val in = fs.open(path)
-      try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
-    } else null
-
-  private val blocks: util.List[BlockMetaData] = reader.getFooter.getBlocks
-  private var blockIdx = 0
-  private var rowsLeftInGroup = 0L
-  private var recordReader: RecordReader[Group] = _
-  private var ordinal = -1L // row position within the FILE (dv domain)
-  private var current: InternalRow = _
-
-  /** Footer-statistics check for "this row group might contain a row
-    * in every pushed range" — absent/empty/annotated stats keep the
-    * group (conservative), matching [[CommitLog.zoneKeep]]'s posture
-    * at file granularity. */
-  private def keepGroup(b: BlockMetaData): Boolean =
-    p.ranges.forall { case (col, lo, hi) =>
-      b.getColumns.asScala.find(cc =>
-        cc.getPath.size == 1 && cc.getPath.iterator.next == col) match {
-        case None => true
-        case Some(cc) =>
-          val st = cc.getStatistics
-          if (st == null || st.isEmpty || !st.hasNonNullValue) true
-          else {
-            val pt = cc.getPrimitiveType
-            val plain = pt.getLogicalTypeAnnotation == null ||
-              (pt.getLogicalTypeAnnotation match {
-                case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation =>
-                  i.isSigned
-                case _ => false
-              })
-            if (!plain) true
-            else (pt.getPrimitiveTypeName, st) match {
-              case (PrimitiveTypeName.INT32, s: IntStatistics) =>
-                !(s.getMax < lo || s.getMin > hi)
-              case (PrimitiveTypeName.INT64, s: LongStatistics) =>
-                !(s.getMax < lo || s.getMin > hi)
-              case (PrimitiveTypeName.FLOAT, s: FloatStatistics) =>
-                !(s.getMax < lo || s.getMin > hi)
-              case (PrimitiveTypeName.DOUBLE, s: DoubleStatistics) =>
-                !(s.getMax < lo || s.getMin > hi)
-              case _ => true
-            }
-          }
-      }
-    }
-
-  /** Position on the next surviving row group; false = file done. */
-  private def advanceGroup(): Boolean = {
-    while (blockIdx < blocks.size) {
-      val b = blocks.get(blockIdx)
-      blockIdx += 1
-      if (!keepGroup(b)) {
-        reader.skipNextRowGroup()
-        ordinal += b.getRowCount
-      } else if (present.isEmpty) {
-        // count-only projection: rows exist, pages don't matter
-        reader.skipNextRowGroup()
-        rowsLeftInGroup = b.getRowCount
-        return true
-      } else {
-        val pages = reader.readNextRowGroup()
-        rowsLeftInGroup = pages.getRowCount
-        recordReader = new ColumnIOFactory()
-          .getColumnIO(projSchema, fileSchema)
-          .getRecordReader(pages, new GroupRecordConverter(projSchema))
-        return true
-      }
-    }
-    false
-  }
-
-  override def next(): Boolean = {
-    while (true) {
-      if (rowsLeftInGroup == 0 && !advanceGroup()) return false
-      rowsLeftInGroup -= 1
-      ordinal += 1
-      val g: Group = if (present.isEmpty) null else recordReader.read()
-      if (dv == null || !graft.plans.BitsetAggregate.testBit(dv, ordinal)) {
-        val vals = new Array[Any](schema.length)
-        var out = 0
-        while (out < schema.length) {
-          val fi = fieldIdx(out)
-          vals(out) =
-            if (isFileCol(out)) filePathUtf8
-            else if (fi < 0 || g == null || g.getFieldRepetitionCount(fi) == 0) null
-            else graft.sources.ParquetGroups.convert(g, fi,
-              schema.fields(out).dataType, s"graft ${p.filePath}")
-          out += 1
-        }
-        current = InternalRow.fromSeq(vals.toIndexedSeq)
-        return true
-      }
-    }
-    false // unreachable
-  }
-
-  override def get(): InternalRow = current
-  override def close(): Unit = reader.close()
 }
 
 object GraftPartitionReader {

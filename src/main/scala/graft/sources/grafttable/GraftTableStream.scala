@@ -59,7 +59,7 @@ object TableStreamOffset {
   * processed). For row-accurate delete propagation, use
   * `format("graft-changes")`.
   *
-  * Readers are the SAME [[GraftPartitionReader]] the batch scan uses
+  * Readers are the SAME [[GraftReaderFactory]] the batch scan uses
   * (projection pushdown included); appended files stream as-of their
   * commit (no later DVs applied — the rows as appended, Delta's
   * table-stream contract). */
@@ -114,7 +114,7 @@ class GraftMicroBatchStream(tablePath: String, schema: StructType,
       // the pinned snapshot, DVs applied — identical to a batch read
       if (s.v < 0) return Array.empty
       return GraftScan.partitionsFor(spark, tablePath, s.v,
-        CommitLog.snapshot(spark, tablePath, Some(s.v)), Array.empty)
+        CommitLog.snapshot(spark, tablePath, Some(s.v)))
     }
     val slices = CommitLog.changeSlices(spark, tablePath, s.v, e.v)
     val deletes = slices.filter(_.kind != "insert")
@@ -125,16 +125,15 @@ class GraftMicroBatchStream(tablePath: String, schema: StructType,
         "stream cannot represent them. Set ignoreDeletes=true to drop " +
         "them, or stream format(\"graft-changes\") for row-accurate CDC.")
     slices.filter(_.kind == "insert").map(sl =>
-      GraftPartition(s"$tablePath/${sl.file}", null, null,
-        Array.empty): InputPartition).toArray
+      GraftPartition(s"$tablePath/${sl.file}", null, null, null): InputPartition).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
     // ship the logical→physical map explicitly (column mapping):
     // physical names never change, so the latest declaration serves
     // every streamed version's files
-    new GraftReaderFactory(schema, GraftScan.mappingOf(spark, tablePath,
-      CommitLog.latestVersion(spark, tablePath)))
+    new GraftReaderFactory(GraftScan.parquetRead(spark, schema,
+      GraftScan.mappingOf(spark, tablePath, CommitLog.latestVersion(spark, tablePath)), Nil))
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()

@@ -439,7 +439,7 @@ final class SqliteFile(in: FSDataInputStream) {
 }
 
 object SqliteFile {
-  def open(path: String, conf: Configuration = new Configuration()): SqliteFile = {
+  def open(path: String, conf: Configuration): SqliteFile = {
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
     new SqliteFile(fs.open(p))

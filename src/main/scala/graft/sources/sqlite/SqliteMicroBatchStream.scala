@@ -186,7 +186,8 @@ class SqliteMicroBatchStream(rootPath: String, table: String,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new SqliteReaderFactory(fullSchema, required, SqliteTableProvider.broadcastConf())
+    new SqliteReaderFactory(fullSchema, required,
+      graft.plans.SerializableHadoopConf.broadcast(org.apache.spark.sql.SparkSession.active))
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()

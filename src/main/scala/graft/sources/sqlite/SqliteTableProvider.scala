@@ -112,13 +112,6 @@ object SqliteTableProvider {
       .map(_.sessionState.newHadoopConf())
       .getOrElse(new Configuration())
 
-  /** [[hadoopConf]] broadcast once for a scan's tasks, as Spark's own
-    * file scans do: carried inside the reader factory instead, the
-    * whole Configuration would be deserialized again by every task. */
-  def broadcastConf(): Broadcast[SerializableHadoopConf] =
-    org.apache.spark.sql.SparkSession.active.sparkContext
-      .broadcast(new SerializableHadoopConf(hadoopConf()))
-
   /** SQLite type-affinity rules (fileformat2.html §3.1 / lang docs),
     * reduced to the four storage classes we surface. */
   def sparkType(decl: String): DataType = {
@@ -282,7 +275,7 @@ class SqliteAggScan(paths: Seq[String], table: String, aggs: Seq[SqliteAgg],
   override def planInputPartitions(): Array[InputPartition] =
     paths.toArray.map(p => SqliteAggPartition(p, table, aggs, lo, hi): InputPartition)
   override def createReaderFactory(): PartitionReaderFactory = {
-    val conf = SqliteTableProvider.broadcastConf()
+    val conf = SerializableHadoopConf.broadcast(org.apache.spark.sql.SparkSession.active)
     new PartitionReaderFactory {
       override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
         val part = p.asInstanceOf[SqliteAggPartition]
@@ -340,7 +333,8 @@ class SqliteScan(rootPath: String, files: Seq[(String, String)], table: String,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new SqliteReaderFactory(fullSchema, required, SqliteTableProvider.broadcastConf())
+    new SqliteReaderFactory(fullSchema, required,
+      SerializableHadoopConf.broadcast(org.apache.spark.sql.SparkSession.active))
 
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
@@ -383,7 +377,7 @@ case class SqlitePartition(path: String, table: String, pages: Seq[Int],
 /** Reads the scan's partitions with the DRIVER session's Hadoop
   * configuration (s3a credentials, kerberos — everything
   * spark.hadoop.* carries), broadcast once per scan
-  * ([[SqliteTableProvider.broadcastConf]]). */
+  * ([[SerializableHadoopConf.broadcast]]). */
 class SqliteReaderFactory(fullSchema: StructType, required: StructType,
     conf: Broadcast[SerializableHadoopConf])
     extends PartitionReaderFactory {

@@ -106,7 +106,24 @@ class GraftSourceSpec extends SparkSpec {
         .filter(col("id") >= 30000L && col("id") < 31000L)
       val got = spark.read.format("graft").load(t)
         .filter(col("id") >= 30000L && col("id") < 31000L)
-      assert(sortedRows(got) === sortedRows(want))
+      // the scan's rows, summed over its tasks: groups are skipped, not
+      // read and filtered (a scan of the whole file returns 59,940)
+      val sc = spark.sparkContext
+      val records = new java.util.concurrent.atomic.AtomicLong
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+          Option(e.taskMetrics).foreach(m => records.addAndGet(m.inputMetrics.recordsRead))
+      }
+      org.apache.spark.ListenerBusDrain(sc)
+      sc.addSparkListener(listener)
+      val gotRows = try {
+        val r = sortedRows(got)
+        org.apache.spark.ListenerBusDrain(sc)
+        r
+      } finally sc.removeSparkListener(listener)
+      assert(records.get >= 999 && records.get < 6000,
+        s"the scan read ${records.get} rows of the file's 60,000")
+      assert(gotRows === sortedRows(want))
       assert(got.count() === 999) // 1000 minus the deleted 30000
     } finally {
       if (oldBlock == null) hc.unset("parquet.block.size")
@@ -1385,5 +1402,77 @@ class GraftSourceSpec extends SparkSpec {
       assert(schema.fieldNames.contains("score"),
         s"newest file's column lost: ${schema.fieldNames.mkString(",")}")
     } finally cleanup(t)
+  }
+
+  // ---- a file system registered only on the session ------------------
+  // The scheme resolves only through the session's Hadoop conf (see
+  // SqliteSourceSpec), and with the file-system cache off every reader
+  // and writer resolves it again from the conf it was given.
+
+  private def withSessionOnlyTable(body: String => Unit): Unit = {
+    val keys = Seq(
+      "fs.sessiononly.impl" -> classOf[SessionOnlyFileSystem].getName,
+      "fs.sessiononly.impl.disable.cache" -> "true",
+      // a sidecar vector: it loads on the executor through the conf too
+      "spark.graft.commitlog.dvInlineThreshold" -> "8")
+    keys.foreach { case (k, v) => spark.conf.set(k, v) }
+    val local = tempTable()
+    try {
+      val t = "sessiononly://" + local
+      CommitLog.append(spark, t, spark.range(0, 100)
+        .select(col("id"), (col("id") * 2).as("y")).coalesce(1))
+      CommitLog.delete(spark, t, "id % 3 = 0") // 34 rows, a deletion vector
+      val opened = SessionOnlyFileSystem.opens.get
+      body(t)
+      assert(SessionOnlyFileSystem.opens.get > opened, "the test file system was not used")
+    } finally {
+      keys.foreach { case (k, _) => spark.conf.unset(k) }
+      cleanup(local)
+    }
+  }
+
+  test("session-only file system: a graft scan with a deletion vector") {
+    withSessionOnlyTable { t =>
+      val ids = spark.read.format("graft").load(t).select("id").collect().map(_.getLong(0))
+      assert(ids.sorted.toSeq === (0L until 100L).filter(_ % 3 != 0))
+    }
+  }
+
+  test("session-only file system: a graft-changes read") {
+    withSessionOnlyTable { t =>
+      val q = spark.readStream.format("graft-changes").option("startingVersion", "0")
+        .load(t).writeStream.format("memory").queryName("sessiononly_changes")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      try q.awaitTermination() finally q.stop()
+      val kinds = spark.sql("SELECT _change_type, count(*) FROM sessiononly_changes " +
+        "GROUP BY _change_type").collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(kinds === Map("insert" -> 100L, "delete" -> 34L))
+    }
+  }
+
+  test("session-only file system: a streaming-sink append") {
+    withSessionOnlyTable { t =>
+      val in = java.nio.file.Files.createTempDirectory("graft_sink_in_").toString
+      val ckpt = java.nio.file.Files.createTempDirectory("graft_sink_ck_").toString
+      try {
+        spark.range(1000, 1010).select(col("id"), (col("id") * 2).as("y"))
+          .coalesce(1).write.parquet(s"$in/b0")
+        val q = spark.readStream.schema("id LONG, y LONG").parquet(s"$in/*")
+          .writeStream.format("graft").option("checkpointLocation", ckpt)
+          .option("statsCols", "id")
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start(t)
+        q.awaitTermination()
+        assert(CommitLog.read(spark, t).count() === 76)
+      } finally { cleanup(in); cleanup(ckpt) }
+    }
+  }
+
+  test("session-only file system: a copy-on-write DELETE") {
+    withSessionOnlyTable { t =>
+      spark.conf.set("spark.sql.catalog.graft", "graft.sources.grafttable.GraftCatalogPlugin")
+      spark.sql(s"DELETE FROM graft.`$t` WHERE id % 2 = 0") // no DV form: a rewrite
+      val ids = CommitLog.read(spark, t).select("id").collect().map(_.getLong(0))
+      assert(ids.sorted.toSeq === (0L until 100L).filter(i => i % 3 != 0 && i % 2 != 0))
+    }
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import java.time.LocalDate
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import graft.pipeline._
@@ -21,7 +22,7 @@ class SqliteSourceSpec extends SparkSpec {
   // ---- low-level decoder -------------------------------------------
 
   test("sqlite_master and CREATE TABLE parse (rowid alias detected)") {
-    val f = SqliteFile.open(res("stA.sdb"))
+    val f = SqliteFile.open(res("stA.sdb"), new Configuration())
     try {
       val (cols, alias) = SqliteFile.parseCreateTable(f.tableSql("archive"))
       assert(cols.head === ("dateTime", "INTEGER"))
@@ -32,7 +33,7 @@ class SqliteSourceSpec extends SparkSpec {
   }
 
   test("full scan returns every row with correct dateTime keys") {
-    val f = SqliteFile.open(res("stA.sdb"))
+    val f = SqliteFile.open(res("stA.sdb"), new Configuration())
     try {
       val rows = f.scanTable(f.tableRoot("archive")).toSeq
       assert(rows.length === 576)
@@ -43,7 +44,7 @@ class SqliteSourceSpec extends SparkSpec {
   }
 
   test("range scan prunes: only requested rowids, fewer subtrees visited") {
-    val f = SqliteFile.open(res("stA.sdb"))
+    val f = SqliteFile.open(res("stA.sdb"), new Configuration())
     try {
       val root = f.tableRoot("archive")
       val lo = 1709251200L + 3600
@@ -126,7 +127,7 @@ class SqliteSourceSpec extends SparkSpec {
   }
 
   test("countOrKth answers count-or-cutoff in one walk, parity with the pair (r13)") {
-    val f = SqliteFile.open(res("stA.sdb"))
+    val f = SqliteFile.open(res("stA.sdb"), new Configuration())
     try {
       val root = f.tableRoot("archive")
       val total = f.countRows(root, Long.MinValue, Long.MaxValue)
@@ -161,10 +162,10 @@ class SqliteSourceSpec extends SparkSpec {
   test("corrupt file and missing table fail with clear errors") {
     val junk = java.nio.file.Files.createTempFile("graft-junk", ".sdb")
     java.nio.file.Files.write(junk, Array.fill[Byte](4096)(0x5a))
-    val e1 = intercept[Exception] { SqliteFile.open(junk.toString) }
+    val e1 = intercept[Exception] { SqliteFile.open(junk.toString, new Configuration()) }
     assert(e1.getMessage.contains("not a SQLite 3 database"))
     val e2 = intercept[NoSuchElementException] {
-      val f = SqliteFile.open(res("stA.sdb"))
+      val f = SqliteFile.open(res("stA.sdb"), new Configuration())
       try f.tableRoot("nonexistent") finally f.close()
     }
     assert(e2.getMessage.contains("nonexistent"))
