@@ -71,24 +71,25 @@ object GraftSession {
   * discipline, not a schema.
   */
 object Tables {
-  /** Parquet footer schemas memoized per (app, file): the driver tables
-    * are immutable inputs, and `spark.read.parquet` re-infers the
-    * schema (a footer read + parquet-to-catalyst conversion) on EVERY
-    * call — ~2 table reads per query x 221 queries x 2 bench passes of
-    * pure repeated metadata work. A deployment holds exactly this in
-    * its catalog (the warmup's GraftCatalog.register is the same
-    * statement); memoizing the StructType and passing it via
-    * `.schema(...)` skips the inference, changes nothing else about
-    * the scan, and dies with the SparkContext. */
-  private val schemaCache =
-    new AppScopedCache[org.apache.spark.sql.types.StructType]()
+  /** A driver table's file under `dir`. */
+  def path(dir: String, name: String): String = s"$dir/$name.parquet"
 
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val path = s"$dir/$name.parquet"
-    val schema = schemaCache.getOrCompute(spark, path)(
+  /** `spark.read.parquet` re-infers the schema (a footer read +
+    * parquet-to-catalyst conversion) on EVERY call: ~2 table reads per
+    * query x 221 queries x 2 bench passes of pure repeated metadata
+    * work. A deployment holds exactly this in its catalog; the footer
+    * schema is an [[Artifacts]] value keyed on the file's fingerprint,
+    * passed via `.schema(...)`, which changes nothing else about the
+    * scan. */
+  private def read(spark: SparkSession, dir: String, path: String,
+      params: Any*): DataFrame = {
+    val schema = Artifacts.value(spark, "schema", dir, Seq(path), params: _*)(
       spark.read.parquet(path).schema)
     spark.read.schema(schema).parquet(path)
   }
+
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
+    read(spark, dir, path(dir, name), name)
 
   /** Two events layouts exist in the wild (the driver regenerated the
     * testdata between rounds): the CURRENT files store `ts` as standard
@@ -101,13 +102,10 @@ object Tables {
   private def eventsRaw(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    val path = s"$dir/events.parquet"
     // memoized AFTER the two confs are set, so the cached schema is the
     // one those confs produce (LongType ts_ns on legacy files,
     // session-TZ timestamp on current ones)
-    val schema = schemaCache.getOrCompute(spark, path)(
-      spark.read.parquet(path).schema)
-    spark.read.schema(schema).parquet(path)
+    read(spark, dir, path(dir, "events"), "events")
   }
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "lineitem")
@@ -156,6 +154,15 @@ object Tables {
   def documents(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "embeddings")
 
+  /** An engine-built artifact parquet (IVF index, dedup index, HTML and
+    * media fixtures) read with the same fingerprint-keyed footer schema
+    * as [[apply]]: every serve-path `spark.read.parquet` re-ran a
+    * one-task schema-inference JOB per query (r19 StageProfile:
+    * 25-30 ms + a full AQE job round each on knn_ivf_pq /
+    * dedup_incremental_indexed). */
+  def artifactParquet(spark: SparkSession, path: String): DataFrame =
+    read(spark, path, path)
+
   /** The documents table spread across the cluster BEFORE expensive
     * per-row compute (shingling, minhash signatures, n-gram windows —
     * higher-order-function chains that run interpreted, ~0.5 ms/doc).
@@ -166,19 +173,6 @@ object Tables {
     * by-comparison-tiny doc table before a CPU-bound stage is still
     * the right trade. Hash on doc_id: deterministic assignment, even
     * spread. */
-  /** An engine-built artifact parquet (IVF index, dedup index) read
-    * with a memoized footer/partition schema — the same catalog-
-    * metadata discipline as [[apply]]: these artifacts are written
-    * once per (app, corpus) and appends never alter their schema, yet
-    * every serve-path `spark.read.parquet` re-ran a one-task schema-
-    * inference JOB per query (r19 StageProfile: 25-30 ms + a full AQE
-    * job round each on knn_ivf_pq / dedup_incremental_indexed). */
-  def artifactParquet(spark: SparkSession, path: String): DataFrame = {
-    val schema = schemaCache.getOrCompute(spark, path)(
-      spark.read.parquet(path).schema)
-    spark.read.schema(schema).parquet(path)
-  }
-
   def documentsParallel(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.col
     documents(spark, dir)

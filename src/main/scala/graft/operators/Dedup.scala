@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{AppScopedCache, Tables}
+import graft.{Artifacts, Tables}
 import graft.functions.TextFunctions._
 
 /** Deduplication operators for the LLM-data-pipeline surface (north-star
@@ -100,12 +100,13 @@ object Dedup {
     case None                               => ArrayTier
   }
 
+  /** Every Dedup artifact is built from the corpus's documents table. */
+  private def docs(dir: String): Seq[String] = Seq(Tables.path(dir, "documents"))
+
   /** The vocabulary probe memoized per CORPUS (the probe is a distinct
-    * aggregate — cheap, but not free per call). Its own cache instance,
-    * so no compute lambda ever re-enters the map it is populating. */
-  private val vocabCache = new AppScopedCache[Option[Array[Long]]]()
+    * aggregate — cheap, but not free per call). */
   private def corpusVocab(spark: SparkSession, dir: String): Option[Array[Long]] =
-    vocabCache.getOrCompute(spark, s"$dir#vocab") {
+    Artifacts.value(spark, "dedup_vocab", dir, docs(dir)) {
       smallVocab(tokenSets(spark, dir))
     }
 
@@ -271,22 +272,16 @@ object Dedup {
   def minhashLshPairs(spark: SparkSession, dir: String): DataFrame =
     nearDupPairsUnsorted(spark, dir).orderBy(col("doc_a"), col("doc_b"))
 
-  /** One pair set per corpus: minhash_lsh, the cluster build, and the
+  /** The adaptive near-dup pair core WITHOUT the presentation sort —
+    * consumers that only need the pair set (connected components) skip
+    * the global range-partition+sort a total order costs.
+    *
+    * One pair set per corpus: minhash_lsh, the cluster build, and the
     * reduction report all consume the same near-dup pairs, so the
     * pipeline (tokenize -> minhash -> band join -> verify) runs once and
     * is served from a lazy checkpoint — the same build-once economics as
-    * the cluster assignments below. Evicted with [[evictCorpus]]. */
-  private val pairCache =
-    new AppScopedCache[DataFrame](AppScopedCache.unpersistPlanRDDs)
-
-  /** The adaptive near-dup pair core WITHOUT the presentation sort —
-    * consumers that only need the pair set (connected components) skip
-    * the global range-partition+sort a total order costs. */
+    * the cluster assignments below, an [[Artifacts.frame]] per corpus. */
   private[operators] def nearDupPairsUnsorted(spark: SparkSession, dir: String): DataFrame =
-    // the branch decision runs OUTSIDE any pairCache compute: the
-    // banded arm re-enters pairCache under its own key, and a nested
-    // computeIfAbsent on one ConcurrentHashMap is forbidden (it can
-    // throw 'Recursive update' when the two keys share a bin)
     corpusVocab(spark, dir) match {
       // the all-pairs degenerate-LSH argument below is specific to the
       // TINY (≤64-symbol) vocabulary, where most pairs agree on most
@@ -294,7 +289,7 @@ object Dedup {
       // plan — it gets the multi-word popcount tier at VERIFY time
       // through bandedPairsShared's vocab thread instead
       case Some(vocab) if vocab.length <= MaskSymbols =>
-        pairCache.getOrCompute(spark, dir) {
+        Artifacts.frame(spark, "dedup_masked_pairs", dir, docs(dir)) {
           maskedPairsFor(spark, dir, vocab).localCheckpoint(false)
         }
       // general corpus: share the ONE banded build with
@@ -321,12 +316,12 @@ object Dedup {
   /** The single memoized banded build per corpus, shared by the
     * adaptive path and the explicit banded query. */
   private def bandedPairsShared(spark: SparkSession, dir: String): DataFrame =
-    pairCache.getOrCompute(spark, s"$dir#banded") {
+    Artifacts.frame(spark, "dedup_banded_pairs", dir, docs(dir)) {
       // the corpus vocabulary (when ≤512 symbols) upgrades the VERIFY
       // stage to a popcount tier; the banding itself is unchanged.
       // Sound here because the vocab is computed over the SAME unigram
       // token sets being banded — it covers every token on both sides.
-      bandedPairsFor(tokenSets(spark, dir), 0.8, s"$dir#banded",
+      bandedPairsFor(tokenSets(spark, dir), 0.8,
         vocab = corpusVocab(spark, dir)).localCheckpoint(false)
     }
 
@@ -334,7 +329,7 @@ object Dedup {
     * (band_id, band_key), first-agreeing-band candidate dedup,
     * verification on attached sets). Memoized per corpus like the
     * adaptive path — repeat calls must not rebuild checkpoints (the
-    * scratch tracker holds strong references, so an unmemoized
+    * build's band tables are owned by its entry, so an unmemoized
     * per-call build would grow storage without bound). */
   def minhashLshPairsBanded(spark: SparkSession, dir: String): DataFrame =
     bandedPairsShared(spark, dir).orderBy(col("doc_a"), col("doc_b"))
@@ -344,17 +339,14 @@ object Dedup {
     * Jaccard"). Same banded machinery as the unigram path, so the same
     * 100 TB shape: candidates scale with true collisions. */
   def shingleLshPairs(spark: SparkSession, dir: String): DataFrame =
-    pairCache.getOrCompute(spark, s"$dir#shingle") {
+    Artifacts.frame(spark, "dedup_shingle_pairs", dir, docs(dir)) {
       bandedPairsFor(shingleSets(spark, dir, 3).filter(size(col("toks")) > 0),
-        0.8, s"$dir#shingle").localCheckpoint(false)
+        0.8).localCheckpoint(false)
     }.orderBy(col("doc_a"), col("doc_b"))
 
-  /** Per-call band-table checkpoints, tracked per corpus so
-    * [[evictCorpus]] can release their blocks in a long-lived session. */
-  private val scratch = new AppScopedCache.ScratchFrames
-
-  /** Banded-LSH near-dup pairs over ANY (doc_id, toks) set frame.
-    * `scope` names the corpus for storage-lifetime tracking.
+  /** Banded-LSH near-dup pairs over ANY (doc_id, toks) set frame. Its
+    * set and band-table checkpoints go to [[Artifacts.own]], so the
+    * artifact being built releases them.
     *
     * Join topology (the part that decides cost on a dup-heavy corpus):
     * a clique of d near-identical docs emits ~d^2/2 pairs up to
@@ -367,8 +359,8 @@ object Dedup {
     * scale, shuffles on doc_id at large). Measured at sf0.1 this cut
     * the pair build ~3x vs carrying toks through the band join. */
   private[operators] def bandedPairsFor(sets: DataFrame, threshold: Double,
-      scope: String, vocab: Option[Array[Long]] = None): DataFrame =
-    bandedPairsCore(sets, None, threshold, scope, vocab)
+      vocab: Option[Array[Long]] = None): DataFrame =
+    bandedPairsCore(sets, None, threshold, vocab)
 
   /** Banded near-dup pairs BETWEEN two disjoint set frames — the
     * incremental-ingest shape (side a = standing corpus, side b =
@@ -378,32 +370,24 @@ object Dedup {
     * collisions — the property that makes a large backfill batch
     * ingestible at 100 TB where a broadcast would OOM. */
   private[operators] def bandedPairsAcross(setsA: DataFrame, setsB: DataFrame,
-      threshold: Double, scope: String,
-      vocab: Option[Array[Long]] = None): DataFrame =
-    bandedPairsCore(setsA, Some(setsB), threshold, scope, vocab)
+      threshold: Double, vocab: Option[Array[Long]] = None): DataFrame =
+    bandedPairsCore(setsA, Some(setsB), threshold, vocab)
 
   private def bandedPairsCore(setsA: DataFrame, setsB: Option[DataFrame],
-      threshold: Double, scope: String,
-      vocab: Option[Array[Long]] = None): DataFrame = {
-    val spark = setsA.sparkSession
+      threshold: Double, vocab: Option[Array[Long]] = None): DataFrame = {
     // materialized once: the band table and both candidate-attach
     // joins below all read this frame — without the checkpoint each
     // consumer would recompute tokenize/shingle from the scan. Lazy so
     // plan-only callers (.schema/.explain) pay nothing; at scale this
     // IS the set table a production dedup writes before banding.
-    def prep(sets: DataFrame): DataFrame = {
-      val r = sets.withColumn("sz", size(col("toks"))).localCheckpoint(false)
-      scratch.track(spark, scope, r)
-      r
-    }
+    def prep(sets: DataFrame): DataFrame =
+      Artifacts.own(sets.withColumn("sz", size(col("toks"))).localCheckpoint(false))
     val reprA = prep(setsA)
     val reprB = setsB.map(prep).getOrElse(reprA)
     def bandTable(repr: DataFrame): DataFrame = {
       // both join sides read the band table: checkpoint so the
       // signature pipeline runs once (a self-join reuses no subplan)
-      val b = bandTableFor(repr).localCheckpoint(false)
-      scratch.track(spark, scope, b)
-      b
+      Artifacts.own(bandTableFor(repr).localCheckpoint(false))
     }
     val bandsA = bandTable(reprA)
     val bandsB = setsB.map(_ => bandTable(reprB)).getOrElse(bandsA)
@@ -539,7 +523,7 @@ object Dedup {
 
   /** One signature checkpoint per corpus for the pair join. */
   private def simhashMemo(spark: SparkSession, dir: String): DataFrame =
-    pairCache.getOrCompute(spark, s"$dir#simhash") {
+    Artifacts.frame(spark, "dedup_simhash", dir, docs(dir)) {
       simhashesUnsorted(spark, dir).localCheckpoint(false)
     }
 
@@ -578,8 +562,7 @@ object Dedup {
     // the memoized per-corpus signature checkpoint: both sides of the
     // band self-join read it, and a self-join reuses no subplan —
     // without the barrier the md5-per-token signature pipeline runs
-    // twice (measured ~2x the whole query's cost). Evicted with
-    // [[evictCorpus]].
+    // twice (measured ~2x the whole query's cost).
     val sh = simhashMemo(spark, dir)
     val bands = sh.select(
       col("doc_id"), col("simhash"),
@@ -648,11 +631,9 @@ object Dedup {
     * localCheckpoint) and then served to every consumer — the clusters
     * query, the reduction report, a keep-canonical filter — the same
     * build-once economics as a materialized index. */
-  private val clusterCache =
-    new AppScopedCache[DataFrame](AppScopedCache.unpersistPlanRDDs)
-
   def dedupClusters(spark: SparkSession, dir: String): DataFrame =
-    clusterCache.getOrCompute(spark, dir)(dedupClusters(spark, dir, CcLocalThreshold))
+    Artifacts.frame(spark, "dedup_clusters", dir, docs(dir))(
+      dedupClusters(spark, dir, CcLocalThreshold))
 
   /** Incremental ingest dedup — the production shape: an INCOMING
     * batch (here the doc_id % 10 slice) checked for near-duplicates
@@ -675,15 +656,12 @@ object Dedup {
     * call (including plan-only .explain/.schema callers) would break
     * the lazy-construction convention this file keeps. A production
     * ingest passes `knownBatchDocs` instead — its batch size is free. */
-  private val batchCountCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
   def incrementalDedup(spark: SparkSession, dir: String,
       threshold: Double = 0.8,
       maxBroadcastBatch: Long = IncrementalBroadcastMaxDocs,
       knownBatchDocs: Option[Long] = None): DataFrame = {
     val batchDocs: Long = knownBatchDocs.getOrElse(
-      batchCountCache.computeIfAbsent(dir, _ =>
+      Artifacts.value(spark, "dedup_batch_count", dir, docs(dir))(
         Tables.documents(spark, dir).filter(col("doc_id") % 10 === 0).count()))
     if (batchDocs <= maxBroadcastBatch) {
       // full reuse of the adaptive pair machinery: setRepr picks the
@@ -709,7 +687,7 @@ object Dedup {
       // build: per-call scratch checkpoints would grow block storage
       // without bound, and the threshold belongs in the key — a memo
       // built at 0.8 must not answer a 0.9 call (ADVICE r5).
-      pairCache.getOrCompute(spark, s"$dir#incremental#$threshold") {
+      Artifacts.frame(spark, "dedup_incremental", dir, docs(dir), threshold) {
         incrementalBandedRaw(spark, dir, threshold).localCheckpoint(false)
       }
         .select(col("doc_b").as("new_doc_id"), col("doc_a").as("dup_of"), col("jaccard"))
@@ -729,7 +707,7 @@ object Dedup {
     bandedPairsAcross(
       sets.filter(col("doc_id") % 10 =!= 0),
       sets.filter(col("doc_id") % 10 === 0),
-      threshold, s"$dir#incremental", vocab = corpusVocab(spark, dir))
+      threshold, vocab = corpusVocab(spark, dir))
   }
 
   /** On-disk dedup corpus index — the persisted twin of the IVF index
@@ -912,15 +890,8 @@ object Dedup {
     * ingest/warmup) under a scratch dir deleted on app end — mirrors
     * Similarity.ivfIndexPath; a deployment passes its own durable path
     * to [[writeDedupIndex]]/[[incrementalDedupIndexed]] directly. */
-  private val dedupIndexCache =
-    new AppScopedCache[String](Similarity.deleteLocalDir, cleanupOnAppEnd = true)
-
   def dedupIndexPath(spark: SparkSession, dir: String): String =
-    dedupIndexCache.getOrCompute(spark, s"$dir#dedupidx") {
-      val path = java.nio.file.Files.createTempDirectory("graft_dedupidx_").toString
-      writeDedupIndex(spark, dir, path)
-      path
-    }
+    Artifacts.scratchDir(spark, "dedupidx", dir, docs(dir))(writeDedupIndex(spark, dir, _))
 
   /** Incremental near-dup check SERVED from the persisted index: the
     * incoming batch is tokenized and banded live (work ∝ batch size),
@@ -934,12 +905,12 @@ object Dedup {
     // batch repr + band table memoized per corpus (threshold-free):
     // both are read twice (band join + verification attach), and a
     // repeat call must not rebuild checkpoints
-    val batchRepr = pairCache.getOrCompute(spark, s"$dir#incridx") {
+    val batchRepr = Artifacts.frame(spark, "dedup_batch_sets", dir, docs(dir)) {
       tokenSets(spark, dir).filter(col("doc_id") % 10 === 0)
         .withColumn("sz", size(col("toks")))
         .localCheckpoint(false)
     }
-    val batchBands = pairCache.getOrCompute(spark, s"$dir#incridx#bands") {
+    val batchBands = Artifacts.frame(spark, "dedup_batch_bands", dir, docs(dir)) {
       bandTableFor(batchRepr).localCheckpoint(false)
     }
     val corpusSets = graft.Tables.artifactParquet(spark, s"$indexPath/sets")
@@ -1034,9 +1005,9 @@ object Dedup {
   /** Chunk table memoized per (corpus, k): paragraphFlags reads it from
     * BOTH sides of its shared-fp join (a self-derived join reuses no
     * subplan), and paragraphDedup shares the same rows — the gramTable
-    * economics. Evicted with [[evictCorpus]]. */
+    * economics. */
   private def paragraphChunks(spark: SparkSession, dir: String, k: Int): DataFrame =
-    pairCache.getOrCompute(spark, s"$dir#paras$k") {
+    Artifacts.frame(spark, "dedup_paragraphs", dir, docs(dir), k) {
       Tables.documentsParallel(spark, dir)
         .select(col("doc_id"), tokens(col("text")).as("tk"))
         .select(col("doc_id"),
@@ -1127,6 +1098,13 @@ object Dedup {
       .orderBy(col("doc_id"), col("start_pos"))
   }
 
+  /** Stride-1 hashed k-gram table per (corpus, k), shared by
+    * [[substringDedup]] and [[substringScrub]]. */
+  private def substringGramTable(spark: SparkSession, dir: String, k: Int): DataFrame =
+    Artifacts.frame(spark, "dedup_substring_grams", dir, docs(dir), k) {
+      substringGrams(Tables.documentsParallel(spark, dir), k).localCheckpoint(false)
+    }
+
   /** Exact substring dedup at ARBITRARY offsets — the output shape of
     * suffix-array dedup (Lee et al. 2022, "Deduplicating Training Data
     * Makes Language Models Better"), computed scan-speed relationally:
@@ -1139,9 +1117,7 @@ object Dedup {
     * tokens (k× the paragraph table's rows — still one explode + two
     * hash shuffles + one bounded window, no pairwise work). */
   def substringDedup(spark: SparkSession, dir: String, k: Int = 20): DataFrame = {
-    val grams = pairCache.getOrCompute(spark, s"$dir#sgrams$k") {
-      substringGrams(Tables.documentsParallel(spark, dir), k).localCheckpoint(false)
-    }
+    val grams = substringGramTable(spark, dir, k)
     substringSpansOf(grams, k)
   }
 
@@ -1161,9 +1137,7 @@ object Dedup {
     * row (empty clean_text), keeping the frame total. Linear: two
     * exploded scans, one hash anti-join, one hash aggregate. */
   def substringScrub(spark: SparkSession, dir: String, k: Int = 20): DataFrame = {
-    val grams = pairCache.getOrCompute(spark, s"$dir#sgrams$k") {
-      substringGrams(Tables.documentsParallel(spark, dir), k).localCheckpoint(false)
-    }
+    val grams = substringGramTable(spark, dir, k)
     // min != max — same one-phase-partial-aggregate move as
     // substringSpansOf (predicate identical to countDistinct > 1)
     val dupFp = grams.groupBy(col("fp"))
@@ -1203,33 +1177,9 @@ object Dedup {
       .agg(count(lit(1)).as("n_members"), (count(lit(1)) > 1).as("is_dup_cluster"))
       .orderBy(col("doc_id"))
 
-  /** Release one corpus's memoized state now — cluster assignments,
-    * the near-dup pair set, and tracked band-table checkpoints — so a
-    * long-lived session serving many corpora doesn't accumulate their
-    * storage blocks. (App shutdown evicts everything automatically.) */
-  def evictCorpus(spark: SparkSession, dir: String,
-      paragraphKs: Seq[Int] = Seq(20),
-      incrementalThresholds: Seq[Double] = Seq(0.8),
-      substringKs: Seq[Int] = Seq(20)): Unit = {
-    clusterCache.evict(spark, dir)
-    batchCountCache.remove(dir)
-    vocabCache.evict(spark, s"$dir#vocab")
-    paragraphKs.foreach(k => pairCache.evict(spark, s"$dir#paras$k"))
-    substringKs.foreach(k => pairCache.evict(spark, s"$dir#sgrams$k"))
-    incrementalThresholds.foreach(t =>
-      pairCache.evict(spark, s"$dir#incremental#$t"))
-    dedupIndexCache.evict(spark, s"$dir#dedupidx")
-    Seq(dir, s"$dir#banded", s"$dir#shingle", s"$dir#incremental",
-        s"$dir#simhash", s"$dir#incridx", s"$dir#incridx#bands")
-      .foreach { scope =>
-      pairCache.evict(spark, scope)
-      scratch.evict(spark, scope)
-    }
-  }
-
   private[graft] def dedupClusters(spark: SparkSession, dir: String,
       localThreshold: Long): DataFrame = {
-    // the memoized pair checkpoint (pairCache) already materializes
+    // the memoized pair checkpoint already materializes
     // once and serves every read below — no extra .cache() layer
     val pairs = nearDupPairsUnsorted(spark, dir).select(col("doc_a"), col("doc_b"))
 
@@ -1290,7 +1240,7 @@ object Dedup {
           curr = checksum(next)
           // the superseded round's checkpoint is no longer referenced
           // once `next` is materialized — release it immediately
-          AppScopedCache.unpersistPlanRDDs(labels)
+          Artifacts.unpersistPlanRDDs(labels)
           labels = next
           rounds += 1
         }
@@ -1307,7 +1257,7 @@ object Dedup {
     // cpairs fed the residual solve only; its checkpoint is not a leaf
     // of the final memoized frame (which eviction unpersists), so
     // release it here rather than pinning it for the app lifetime
-    AppScopedCache.unpersistPlanRDDs(cpairs)
+    Artifacts.unpersistPlanRDDs(cpairs)
 
     // (4) resolve; singleton docs label themselves
     val resolved = l1agg

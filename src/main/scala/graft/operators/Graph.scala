@@ -30,9 +30,6 @@ object Graph {
   val Damping: Double = 0.85
   val Iterations: Int = 3
 
-  private val rankCache =
-    new graft.AppScopedCache[DataFrame](graft.AppScopedCache.unpersistPlanRDDs)
-
   /** PageRank over the symmetric customer↔supplier graph, fixed
     * iteration count, reported for suppliers as rank normalized to the
     * uniform baseline (rank × N — "how many times more central than
@@ -42,12 +39,10 @@ object Graph {
     * presentation projection (intermediate per-iteration checkpoints
     * drop out of reach and are reclaimed by the ContextCleaner). */
   def pagerankSuppliers(spark: SparkSession, dir: String): DataFrame =
-    rankCache.getOrCompute(spark, s"$dir#pagerank") {
+    graft.Artifacts.frame(spark, "pagerank", dir,
+        Seq("orders", "lineitem").map(Tables.path(dir, _))) {
       pagerankSuppliersUncached(spark, dir).localCheckpoint(false)
     }.orderBy(col("rank_norm").desc, col("supp_key"))
-
-  def evictCorpus(spark: SparkSession, dir: String): Unit =
-    rankCache.evict(spark, s"$dir#pagerank")
 
   /** Convergence-tested PageRank: iterate until the max absolute rank
     * change drops below `eps` (or `maxIter` caps a pathological

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Artifacts, Tables}
 
 /** HTML ingestion surface: visible-text extraction, link harvest, URL
   * normalization, and domain-blocklist filtering — the web-crawl front
@@ -65,36 +65,16 @@ object Html {
       .select(col("doc_id"), htmlOf.as("html"))
       .write.mode("overwrite").parquet(path)
 
-  private val htmlCache =
-    new graft.AppScopedCache[String](Similarity.deleteLocalDir(_), cleanupOnAppEnd = true)
+  /** Both Html artifacts are built from the corpus's documents. */
+  private def docs(dir: String): Seq[String] = Seq(Tables.path(dir, "documents"))
 
   /** One persisted HTML fixture per corpus, built on first use under a
     * scratch dir deleted on app end — mirrors Multimodal.mediaFixturePath. */
   def htmlFixturePath(spark: SparkSession, dir: String): String =
-    htmlCache.getOrCompute(spark, s"$dir#html") {
-      val path = java.nio.file.Files.createTempDirectory("graft_html_").toString
-      writeHtmlFixture(spark, dir, path)
-      path
-    }
+    Artifacts.scratchDir(spark, "html", dir, docs(dir))(writeHtmlFixture(spark, dir, _))
 
-  /** Release one corpus's HTML fixture now (next query rebuilds). */
-  def evictCorpus(spark: SparkSession, dir: String): Unit = {
-    htmlCache.evict(spark, s"$dir#html")
-    linksCache.evict(spark, s"$dir#links")
-  }
-
-  /** Fixture schema memoized per app like the Multimodal slices —
-    * (doc_id, html) is immutable once written; skip the per-query
-    * footer re-inference. */
-  private val pagesSchemaCache =
-    new graft.AppScopedCache[org.apache.spark.sql.types.StructType]()
-
-  private def pages(spark: SparkSession, dir: String): DataFrame = {
-    val path = htmlFixturePath(spark, dir)
-    val schema = pagesSchemaCache.getOrCompute(spark, path)(
-      spark.read.parquet(path).schema)
-    spark.read.schema(schema).parquet(path)
-  }
+  private def pages(spark: SparkSession, dir: String): DataFrame =
+    Tables.artifactParquet(spark, htmlFixturePath(spark, dir))
 
   /** Visible text per page via the native extractor — one codegen'd
     * scan over the fixture. Oracled as a ROUND-TRIP: extraction must
@@ -155,11 +135,8 @@ object Html {
     * the blocklist/cap/url-dedup family all consume the same link
     * table, so the regexp harvest + URL parse runs ONCE per corpus —
     * the build-once-serve-many discipline of the dedup pair memo. */
-  private val linksCache =
-    new graft.AppScopedCache[DataFrame](graft.AppScopedCache.unpersistPlanRDDs)
-
   private def linksMemo(spark: SparkSession, dir: String): DataFrame =
-    linksCache.getOrCompute(spark, s"$dir#links") {
+    Artifacts.frame(spark, "html_links", dir, docs(dir)) {
       htmlLinks(spark, dir).localCheckpoint(false)
     }
 

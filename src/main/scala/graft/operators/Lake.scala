@@ -17,25 +17,18 @@ import graft.Tables
   * by Spark keeps conservativeness invisible to results. */
 object Lake {
 
-  private val tableCache = new graft.AppScopedCache[String](p => {
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p))
-    ()
-  }, cleanupOnAppEnd = true)
-
   /** orders(o_orderkey, o_orderstatus, o_totalprice) as a commit-log
     * table, range-clustered on o_totalprice (4 files with disjoint
-    * zones) with a bloom on o_orderstatus — built once per (app, dir)
-    * in a temp dir the cache deletes on application end. */
+    * zones) with a bloom on o_orderstatus — built once per corpus
+    * version in a scratch dir deleted on application end. */
   private def ordersTable(spark: SparkSession, dir: String): String =
-    tableCache.getOrCompute(spark, dir) {
-      val p = java.nio.file.Files.createTempDirectory("graft_lake_").toString
+    graft.Artifacts.scratchDir(spark, "lake", dir, Seq(Tables.path(dir, "orders"))) { p =>
       val df = Tables.orders(spark, dir)
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
         .repartitionByRange(4, col("o_totalprice"))
       CommitLog.appendWithBloom(spark, p, df,
         bloomCols = Seq("o_orderstatus"),
         statsCols = Seq("o_totalprice", "o_orderkey"))
-      p
     }
 
   /** Filter+aggregate THROUGH the DSv2 source: the o_totalprice
@@ -65,8 +58,7 @@ object Lake {
     * answer GROUP BY bucket entirely from metadata (Delta's
     * partition-level count, generalized to clustering stats). */
   private[graft] def groupedTable(spark: SparkSession, dir: String): String =
-    tableCache.getOrCompute(spark, s"$dir#grouped") {
-      val p = java.nio.file.Files.createTempDirectory("graft_lakeg_").toString
+    graft.Artifacts.scratchDir(spark, "lakeg", dir, Seq(Tables.path(dir, "orders"))) { p =>
       val df = Tables.orders(spark, dir)
         .select(col("o_orderkey"), (col("o_orderkey") % 4).as("bucket"),
           col("o_totalprice"))
@@ -74,7 +66,6 @@ object Lake {
         CommitLog.appendWithStats(spark, p, df.filter(col("bucket") === i),
           Seq("bucket", "o_orderkey"))
       }
-      p
     }
 
   /** GROUPED aggregate THROUGH the DSv2 source: Catalyst pushes the

@@ -930,35 +930,12 @@ object Multimodal {
   /** One persisted media fixture per corpus, built on first use (or
     * eagerly at warmup) under a scratch dir deleted on app end —
     * mirrors Similarity.ivfIndexPath / Dedup.dedupIndexPath. */
-  private val mediaCache =
-    new graft.AppScopedCache[String](Similarity.deleteLocalDir(_), cleanupOnAppEnd = true)
-
   def mediaFixturePath(spark: SparkSession, dir: String): String =
-    mediaCache.getOrCompute(spark, s"$dir#media") {
-      val path = java.nio.file.Files.createTempDirectory("graft_media_").toString
-      writeMediaFixture(spark, dir, path)
-      path
-    }
+    graft.Artifacts.scratchDir(spark, "media", dir, Seq(Tables.path(dir, "documents")))(
+      writeMediaFixture(spark, dir, _))
 
-  /** Release one corpus's media fixture now (scratch dir deleted, next
-    * decode rebuilds) — mirrors Dedup/Similarity.evictCorpus for
-    * long-lived sessions. App shutdown evicts everything automatically. */
-  def evictCorpus(spark: SparkSession, dir: String): Unit =
-    mediaCache.evict(spark, s"$dir#media")
-
-  /** Fixture-slice schemas memoized like [[graft.Tables]]' driver
-    * tables: every slice is (doc_id: long, <kind>: binary/string) and
-    * immutable once written, so re-inferring it per decode query is
-    * repeated footer work a catalog would hold. */
-  private val mediaSchemaCache =
-    new graft.AppScopedCache[org.apache.spark.sql.types.StructType]()
-
-  private def mediaTable(spark: SparkSession, dir: String, kind: String): DataFrame = {
-    val path = s"${mediaFixturePath(spark, dir)}/$kind"
-    val schema = mediaSchemaCache.getOrCompute(spark, path)(
-      spark.read.parquet(path).schema)
-    spark.read.schema(schema).parquet(path)
-  }
+  private def mediaTable(spark: SparkSession, dir: String, kind: String): DataFrame =
+    Tables.artifactParquet(spark, s"${mediaFixturePath(spark, dir)}/$kind")
 
   /** The documents table as a multimodal table: text re-encoded as the
     * opaque binary payload + deterministic digests. Fully

@@ -27,36 +27,28 @@ import graft.functions.TextFunctions._
   *     scalars ride a broadcast one-row frame so the whole ranking is
   *     one plan with no driver-side action.
   *
-  * Both serving queries consume the memoized postings
-  * (build-once-serve-many, [[graft.AppScopedCache]] discipline), so a
-  * session answering many searches tokenizes the corpus ONCE. */
+  * Both serving queries consume the memoized postings (a build-once
+  * [[graft.Artifacts]] frame), so a session answering many searches
+  * tokenizes the corpus ONCE. */
 object Search {
 
   /** The registered queries' search terms — present in the fixture
     * vocabulary so both serving shapes return non-trivial results. */
   val QueryTerms: Seq[String] = Seq("spark", "merge", "window")
 
-  private val postingsCache =
-    new graft.AppScopedCache[DataFrame](graft.AppScopedCache.unpersistPlanRDDs)
+  /** Every Search artifact is built from the corpus's documents. */
+  private def docs(dir: String): Seq[String] = Seq(graft.Tables.path(dir, "documents"))
 
   /** Postings table (token, doc_id, tf): one explode + one hash
     * aggregate, shuffled by (token, doc_id). Memoized per corpus. */
   def postings(spark: SparkSession, dir: String): DataFrame =
-    postingsCache.getOrCompute(spark, s"$dir#postings") {
+    graft.Artifacts.frame(spark, "postings", dir, docs(dir)) {
       Tables.documents(spark, dir)
         .select(col("doc_id"), explode(tokens(col("text"))).as("token"))
         .groupBy(col("token"), col("doc_id"))
         .agg(count(lit(1)).as("tf"))
         .localCheckpoint(false)
     }
-
-  def evictCorpus(spark: SparkSession, dir: String): Unit = {
-    postingsCache.evict(spark, s"$dir#postings")
-    postingsCache.evict(spark, s"$dir#posckpt")
-    indexTableCache.evict(spark, s"$dir#indextable")
-    posIndexTableCache.evict(spark, s"$dir#posindextable")
-    normsTableCache.evict(spark, s"$dir#normstable")
-  }
 
   /** Term dictionary: per-token document frequency, collection
     * frequency, and first posting — the index's own summary (what a
@@ -115,19 +107,13 @@ object Search {
     * sessions and a term lookup opens only segments whose Bloom admits
     * the term. Same base/delta two-segment fixture split as
     * [[indexTablePath]]. */
-  private val posIndexTableCache =
-    new graft.AppScopedCache[String](Similarity.deleteLocalDir, cleanupOnAppEnd = true)
-
   def posIndexTablePath(spark: SparkSession, dir: String): String =
-    posIndexTableCache.getOrCompute(spark, s"$dir#posindextable") {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_posidx_").toString
+    graft.Artifacts.scratchDir(spark, "posidx", dir, docs(dir)) { path =>
       val p = posPostings(spark, dir)
       val base = p.filter(col("doc_id") % 10 =!= 9)
       val delta = p.filter(col("doc_id") % 10 === 9)
       graft.operators.CommitLog.appendWithBloom(spark, path, base, Seq("token"))
       graft.operators.CommitLog.appendWithBloom(spark, path, delta, Seq("token"))
-      path
     }
 
   /** Phrase search served from the PERSISTED positional index: one
@@ -181,12 +167,12 @@ object Search {
     // left is the document COUNT (N2 = N1 - |docs| mirrors the
     // oracle's per-doc bigram total): a count-star scan that reads
     // zero data columns, never the text.
-    // memoized per corpus (postingsCache discipline): an unmemoized
+    // memoized per corpus (like the postings): an unmemoized
     // per-call localCheckpoint of the whole positional index would pin
     // one corpus-sized block-manager copy PER CALL until app end, with
     // no release path — the exact leak the other build-once frames in
     // this family guard against
-    val p = postingsCache.getOrCompute(spark, s"$dir#posckpt") {
+    val p = graft.Artifacts.frame(spark, "positions", dir, docs(dir)) {
       graft.operators.CommitLog.read(spark, posIndexTablePath(spark, dir))
         .localCheckpoint(false)
     }
@@ -234,19 +220,13 @@ object Search {
     * compact() merges small ones like any other graft table. The
     * fixture build writes two segments: the base corpus (doc_id%10!=9)
     * then the delta (doc_id%10==9). */
-  private val indexTableCache =
-    new graft.AppScopedCache[String](Similarity.deleteLocalDir, cleanupOnAppEnd = true)
-
   def indexTablePath(spark: SparkSession, dir: String): String =
-    indexTableCache.getOrCompute(spark, s"$dir#indextable") {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_searchidx_").toString
+    graft.Artifacts.scratchDir(spark, "searchidx", dir, docs(dir)) { path =>
       val p = postings(spark, dir)
       val base = p.filter(col("doc_id") % 10 =!= 9)
       val delta = p.filter(col("doc_id") % 10 === 9)
       graft.operators.CommitLog.appendWithBloom(spark, path, base, Seq("token"))
       graft.operators.CommitLog.appendWithBloom(spark, path, delta, Seq("token"))
-      path
     }
 
   /** Conjunctive search served from the PERSISTED index across all
@@ -287,13 +267,8 @@ object Search {
     * not require touching every token's postings at query time. Same
     * base/delta two-segment split, zone stats on doc_id; time-travels
     * in step with the index (version 0 = base corpus norms). */
-  private val normsTableCache =
-    new graft.AppScopedCache[String](Similarity.deleteLocalDir, cleanupOnAppEnd = true)
-
   def normsTablePath(spark: SparkSession, dir: String): String =
-    normsTableCache.getOrCompute(spark, s"$dir#normstable") {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_norms_").toString
+    graft.Artifacts.scratchDir(spark, "norms", dir, docs(dir)) { path =>
       val dl = postings(spark, dir).groupBy(col("doc_id"))
         .agg(sum(col("tf")).as("dl"))
       val base = dl.filter(col("doc_id") % 10 =!= 9)
@@ -302,7 +277,6 @@ object Search {
         Seq.empty, Seq("doc_id"))
       graft.operators.CommitLog.appendWithBloom(spark, path, delta,
         Seq.empty, Seq("doc_id"))
-      path
     }
 
   /** BM25 served ENTIRELY from persisted artifacts: Bloom-pruned

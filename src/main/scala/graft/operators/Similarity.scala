@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.{AppScopedCache, Tables}
+import graft.{Artifacts, Tables}
 
 /** Approximate-nearest-neighbor surface over the embeddings table
   * (north-star extension). Three paths:
@@ -380,7 +380,8 @@ object Similarity {
     * 8 DISTRIBUTED Lloyd's rounds over the FULL corpus (fixed seed,
     * first-max assignment, empty cell keeps its center —
     * deterministic given the corpus and partition-sum order, and
-    * memoized per app so every consumer serves the same artifact).
+    * memoized per corpus version so every consumer serves the same
+    * artifact).
     * Returns NumCells centroid vectors. */
   private[operators] def kmeansCentroids(emb: DataFrame): Seq[Array[Double]] = {
     val init = seedParallel(emb.select(col("vec_id").as("id"), col("v")),
@@ -412,12 +413,16 @@ object Similarity {
   /** Trained-once coarse quantizer per corpus: an IVF index is built at
     * ingest time and amortized over every probe batch — retraining
     * KMeans per query would charge index construction to each lookup. */
-  private val centroidCache = new AppScopedCache[Seq[Array[Double]]]()
+  private def centroids(spark: SparkSession, dir: String, base: DataFrame): Seq[Array[Double]] =
+    Artifacts.value(spark, "ivf_centroids", dir, vectors(dir))(kmeansCentroids(base))
+
+  /** Every Similarity artifact is built from the corpus's embeddings. */
+  private def vectors(dir: String): Seq[String] = Seq(Tables.path(dir, "embeddings"))
 
   def knnIvf(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
     val base = Tables.embeddings(spark, dir)
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    val cents = centroidCache.getOrCompute(spark, dir)(kmeansCentroids(base))
+    val cents = centroids(spark, dir, base)
     val emb = base
       .withColumn("scores", cellScores(col("v"), cents))
       .withColumn("cell", expr("array_position(scores, array_max(scores))").cast("int"))
@@ -457,7 +462,7 @@ object Similarity {
   def writeIvfIndex(spark: SparkSession, dir: String, indexPath: String): Unit = {
     val base = Tables.embeddings(spark, dir)
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    val cents = centroidCache.getOrCompute(spark, dir)(kmeansCentroids(base))
+    val cents = centroids(spark, dir, base)
     val assigned = assignCells(base, cents)
     assigned.write.mode("overwrite").partitionBy("cell").parquet(indexPath)
     // The quantizer IS part of the index: probes must score against the
@@ -702,27 +707,8 @@ object Similarity {
     * scratch directory that is deleted when the app ends. This is the
     * serving path: probes never retrain the quantizer and read only
     * their nprobe cells' files. */
-  private val indexCache = new AppScopedCache[String](deleteLocalDir, cleanupOnAppEnd = true)
-
-  private[operators] def deleteLocalDir(path: String): Unit = {
-    import java.nio.file.{Files, Path}
-    import scala.jdk.CollectionConverters._
-    val root = Path.of(path)
-    if (Files.exists(root)) {
-      // Files.walk holds directory handles until closed — leaked
-      // streams exhaust fds in a session that evicts many indexes
-      val s = Files.walk(root)
-      val all = try s.iterator().asScala.toList finally s.close()
-      all.reverse.foreach(Files.deleteIfExists(_))
-    }
-  }
-
   def ivfIndexPath(spark: SparkSession, dir: String): String =
-    indexCache.getOrCompute(spark, dir) {
-      val path = java.nio.file.Files.createTempDirectory("graft_ivf_").toString
-      writeIvfIndex(spark, dir, path)
-      path
-    }
+    Artifacts.scratchDir(spark, "ivf", dir, vectors(dir))(writeIvfIndex(spark, dir, _))
 
   /** The registered knn_ivf query: serve from the materialized index.
     * Index construction (quantizer training + partitioned write) happens
@@ -774,24 +760,6 @@ object Similarity {
       .select(col("cell"), col("vec_id"), col("pick").cast("int").as("pick"),
         round(col("u"), 6).as("u"))
       .orderBy(col("cell"), col("pick"))
-  }
-
-  /** Release one corpus's ANN state now — the trained quantizer and the
-    * materialized index's scratch directory — mirroring
-    * Dedup.evictCorpus for long-lived sessions. (App shutdown evicts
-    * everything automatically.) */
-  def evictCorpus(spark: SparkSession, dir: String): Unit = {
-    centroidCache.evict(spark, dir)
-    indexCache.evict(spark, dir)
-    servedCentroids.remove(dir)
-    codebookCache.evict(spark, s"$dir#pq")
-    servedCodebooks.remove(dir)
-    residualCodebookCache.evict(spark, s"$dir#ivfpq")
-    servedIvfCodebooks.remove(dir)
-    sqGridCache.evict(spark, s"$dir#sqgrid")
-    sqCodesCache.evict(spark, s"$dir#sqcodes")
-    pcaCache.evict(spark, s"$dir#pca$PcaK")
-    servedPca.remove(dir)
   }
 
   /** Top-k against a materialized index: probes (vec_id < 5 from the
@@ -1047,16 +1015,12 @@ object Similarity {
     * stored representation; here they're derived in-plan from the same
     * exploded aggregation `quantizeEmbeddings` uses. */
   /** Per-dimension SQ grid, trained once per corpus and served as a
-    * driver artifact (the [[centroidCache]]/[[codebookCache]]
-    * discipline): ONE exploded aggregation computes global [lo, hi]
-    * per dimension; the collect is `dims` rows — bounded by the
-    * embedding dimensionality, never by corpus size. */
-  private val sqGridCache = new AppScopedCache[Seq[(Double, Double)]]()
-  private val sqCodesCache =
-    new AppScopedCache[DataFrame](AppScopedCache.unpersistPlanRDDs)
-
+    * driver artifact (like the IVF centroids and PQ codebooks): ONE
+    * exploded aggregation computes global [lo, hi] per dimension; the
+    * collect is `dims` rows — bounded by the embedding
+    * dimensionality, never by corpus size. */
   private[operators] def sqGrid(spark: SparkSession, dir: String): Seq[(Double, Double)] =
-    sqGridCache.getOrCompute(spark, s"$dir#sqgrid") {
+    Artifacts.value(spark, "sq_grid", dir, vectors(dir)) {
       Tables.embeddings(spark, dir)
         .select(asDouble(col("embedding")).as("v"))
         .select(posexplode(col("v")))
@@ -1094,7 +1058,7 @@ object Similarity {
     // the codes frame is MEMOIZED per corpus like every other serving
     // artifact: an unmemoized per-call localCheckpoint would pin one
     // corpus-sized block-manager copy per invocation until app end
-    val codes = sqCodesCache.getOrCompute(spark, s"$dir#sqcodes") {
+    val codes = Artifacts.frame(spark, "sq_codes", dir, vectors(dir)) {
       emb.select(col("vec_id"),
           zip_with(col("v"), st, (x, s) => codeOf(x, s)).as("codes"))
         .localCheckpoint(false)
@@ -1200,8 +1164,6 @@ object Similarity {
   val PqCodes = 16
   private[graft] val PqDim = 8
 
-  private val codebookCache = new AppScopedCache[Seq[Seq[Array[Double]]]]()
-
   /** Codebooks used to SERVE queries, per corpus dir — same post-run
     * oracle contract as [[servedCentroids]]. */
   private[graft] val servedCodebooks =
@@ -1214,7 +1176,7 @@ object Similarity {
     * DISTRIBUTED Lloyd's rounds, also one scan per round across all
     * subspaces ([[lloydRounds]]). Memoized build-once-serve-many. */
   private[graft] def pqCodebooks(spark: SparkSession, dir: String): Seq[Seq[Array[Double]]] =
-    codebookCache.getOrCompute(spark, s"$dir#pq") {
+    Artifacts.value(spark, "pq_codebooks", dir, vectors(dir)) {
       val emb = Tables.embeddings(spark, dir)
         .select(col("vec_id").as("id"), asDouble(col("embedding")).as("v"))
       val init = seedParallel(emb, PqSubspaces, PqCodes,
@@ -1225,8 +1187,6 @@ object Similarity {
     }
 
   // ---- residual codebooks (IVF-PQ / true IVFADC) --------------------
-  private val residualCodebookCache = new AppScopedCache[Seq[Seq[Array[Double]]]]()
-
   /** Residual codebooks used to SERVE knn_ivf_pq, per corpus dir —
     * distinct from [[servedCodebooks]] (the flat-PQ raw-vector books):
     * the two quantizer families feed different post-run oracles. */
@@ -1255,7 +1215,7 @@ object Similarity {
     * corpus row reaches the driver. Memoized build-once-serve-many. */
   private[graft] def ivfResidualCodebooks(spark: SparkSession, dir: String,
       indexPath: String, cents: Seq[Array[Double]]): Seq[Seq[Array[Double]]] =
-    residualCodebookCache.getOrCompute(spark, s"$dir#ivfpq") {
+    Artifacts.value(spark, "ivfpq_codebooks", dir, vectors(dir)) {
       val res = Tables.artifactParquet(spark, indexPath)
         .select(col("vec_id").as("id"),
           residualOf(col("v"), col("cell").cast("int"), cents).as("v"))
@@ -1458,8 +1418,6 @@ object Similarity {
     * PCA the standard pre-index compression (and whitening) stage. */
   val PcaK = 8
 
-  private val pcaCache = new AppScopedCache[Seq[Array[Double]]]()
-
   /** Components used to SERVE [[pcaProject]], per corpus dir — same
     * post-run oracle contract as [[servedCodebooks]]. */
   private[graft] val servedPca =
@@ -1474,7 +1432,7 @@ object Similarity {
     * PQ codebooks. Returned as k column vectors of length d. */
   private[graft] def pcaComponents(spark: SparkSession, dir: String,
       k: Int = PcaK): Seq[Array[Double]] =
-    pcaCache.getOrCompute(spark, s"$dir#pca$k") {
+    Artifacts.value(spark, "pca_components", dir, vectors(dir), k) {
       val rows = Tables.embeddings(spark, dir).select(col("embedding")).rdd
         .map(r => org.apache.spark.mllib.linalg.Vectors.dense(
           r.getSeq[Float](0).map(_.toDouble).toArray))

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{Artifacts, Tables}
 import graft.functions.TextFunctions._
 
 /** Text-analysis operators over the documents table (north-star
@@ -295,9 +295,8 @@ object TextAnalysis {
       .limit(k)
   }
 
-  private val gramCache =
-    new graft.AppScopedCache[org.apache.spark.sql.DataFrame](
-      graft.AppScopedCache.unpersistPlanRDDs)
+  /** Every TextAnalysis artifact is built from the corpus's documents. */
+  private def docs(dir: String): Seq[String] = Seq(Tables.path(dir, "documents"))
 
   /** The exploded distinct-(doc_id, gram) table, checkpointed once per
     * (corpus, n): the tokenize→window expression is expensive and its
@@ -306,10 +305,10 @@ object TextAnalysis {
     * additionally duplicates the generator input into size>0/isnotnull
     * pre-filters, so without a barrier the expression evaluates ~3x
     * per row per scan. Memoizing the materialized rows makes it once
-    * per corpus (eviction via the app-scoped listener, same lifecycle
-    * as the dedup pair sets). */
+    * per corpus, an [[Artifacts.frame]] like the dedup pair
+    * sets. */
   private def gramTable(spark: SparkSession, dir: String, n: Int): DataFrame =
-    gramCache.getOrCompute(spark, s"$dir#ngrams$n") {
+    Artifacts.frame(spark, "text_ngrams", dir, docs(dir), n) {
       val t = tokens(col("text"))
       // grams hashed to longs AT BIRTH (same discipline as the dedup
       // shingles) via the native one-pass window hasher — bit-identical
@@ -356,13 +355,6 @@ object TextAnalysis {
       .select(col("doc_id"), col("source"), col("seq_id"), col("n_tokens"))
       .orderBy(col("doc_id"))
   }
-
-  /** Release one corpus's memoized gram tables (the checkpointed
-    * frames gramTable pins) — the same lifecycle contract as
-    * Dedup.evictCorpus, so a long-lived session serving many corpora
-    * doesn't accumulate block-manager storage per corpus served. */
-  def evictCorpus(spark: SparkSession, dir: String, ns: Seq[Int] = Seq(4)): Unit =
-    ns.foreach(n => gramCache.evict(spark, s"$dir#ngrams$n"))
 
   /** Word n-gram windows as a zip_with chain over n shifted slices —
     * O(n·len) per row. NEVER element_at(tokens, i) inside a
@@ -711,8 +703,6 @@ object TextAnalysis {
   private[graft] val servedBpeMerges =
     new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, String, Long)]]()
 
-  private val bpeCache = new graft.AppScopedCache[Seq[(String, String, Long)]]()
-
   /** The largest batch of top-ranked pairs provably identical to
     * applying them one greedy round at a time — what lets a
     * realistic-budget training run learn several merges per
@@ -784,7 +774,7 @@ object TextAnalysis {
     * (build-once-serve-many). */
   def bpeMergeList(spark: SparkSession, dir: String,
       rounds: Int = 50): Seq[(String, String, Long)] =
-    bpeCache.getOrCompute(spark, s"$dir#bpe$rounds") {
+    Artifacts.value(spark, "bpe_merges", dir, docs(dir), rounds) {
       var vocab = wordFreqs(spark, dir)
         .select(col("freq"), charSyms(col("word")).as("syms"))
         .localCheckpoint()
@@ -828,12 +818,12 @@ object TextAnalysis {
             next = next.select(col("freq"), mergeOnce(col("syms"), a, b).as("syms"))
           }
           next = next.localCheckpoint()
-          graft.AppScopedCache.unpersistPlanRDDs(vocab)
+          Artifacts.unpersistPlanRDDs(vocab)
           vocab = next
           learned += batch.length
         }
       }
-      graft.AppScopedCache.unpersistPlanRDDs(vocab)
+      Artifacts.unpersistPlanRDDs(vocab)
       out.result()
     }
 
@@ -897,8 +887,6 @@ object TextAnalysis {
   private[graft] val servedQualityLr =
     new java.util.concurrent.ConcurrentHashMap[String, Array[Double]]()
 
-  private val lrCache = new graft.AppScopedCache[Array[Double]]()
-
   /** The classifier's feature columns — every one has an exact DuckDB
     * twin (the quality/lang-guess fragments), so the scoring pass is
     * cross-engine reproducible to the bit:
@@ -937,7 +925,7 @@ object TextAnalysis {
     * oracle certifies bit-exactly. */
   def qualityLrWeights(spark: SparkSession, dir: String,
       iters: Int = LrIters, ridge: Double = LrRidge): Array[Double] =
-    lrCache.getOrCompute(spark, s"$dir#qualityLr") {
+    Artifacts.value(spark, "quality_lr", dir, docs(dir)) {
       val feats = lrFeatures(Tables.documents(spark, dir))
         .localCheckpoint(false)
       try {
@@ -969,7 +957,7 @@ object TextAnalysis {
           it += 1
         }
         w
-      } finally graft.AppScopedCache.unpersistPlanRDDs(feats)
+      } finally Artifacts.unpersistPlanRDDs(feats)
     }
 
   /** In-place 4×4 linear solve (partial pivoting); the matrices here

@@ -1,6 +1,8 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
 
 /** Catalog surface: every engine table registered as an EXTERNAL
   * parquet table in the session catalog, so users address data the way
@@ -13,8 +15,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * evolution, statistics for the CBO via ANALYZE TABLE, bucketed table
   * specs for exchange-free joins — see operators/Bucketing). Locally it
   * is backed by the per-JVM Derby metastore; registration is
-  * idempotent (drop-if-exists first, metadata-only for external
-  * tables).
+  * idempotent and metadata-only for external tables.
   */
 object GraftCatalog {
 
@@ -27,55 +28,33 @@ object GraftCatalog {
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings")
 
-  /** Register-once bookkeeping: metastore DDL (drop + create x 10
-    * tables) is fixed-cost setup, not per-query work. The memo holds
-    * the dir the session's tables CURRENTLY point at — table names are
-    * session-global, so registering a different dir re-runs the DDL
-    * (and switching back re-runs it again); only a same-dir repeat is
-    * a no-op. */
-  private val registeredDir = new graft.AppScopedCache[String]()
-
-  /** Idempotently register every table over `dir` and return the names. */
+  /** Register every table over `dir` and return the names. A table
+    * is (re-)created only when the session catalog lacks it or it
+    * points at another file, so a repeat call issues no DDL and a
+    * table dropped behind the session's back comes back. Table names
+    * are session-global: a concurrent `register(otherDir)` can repoint
+    * them at any time, so concurrent multi-corpus use needs external
+    * coordination (or per-dir table names); the engine's own drivers
+    * register one corpus per session. */
   def register(spark: SparkSession, dir: String): Seq[String] = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    def ddl(): String = {
-      TableNames.foreach { name =>
+    val catalog = spark.sessionState.catalog
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    def qualified(p: Path): java.net.URI = p.getFileSystem(hadoopConf).makeQualified(p).toUri
+    TableNames.foreach { name =>
+      val path = graft.Tables.path(dir, name)
+      val id = TableIdentifier(name)
+      val current = if (catalog.tableExists(id))
+        catalog.getTableMetadata(id).storage.locationUri.map(u => qualified(new Path(u)))
+      else None
+      if (!current.contains(qualified(new Path(path)))) {
         spark.sql(s"DROP TABLE IF EXISTS $name")
-        spark.catalog.createTable(name, "parquet",
-          Map("path" -> s"$dir/$name.parquet"))
+        spark.catalog.createTable(name, "parquet", Map("path" -> path))
       }
-      dir
     }
-    // check-then-act is racy on the single contended memo key: another
-    // thread's register(otherDir) can win the re-registration, so loop
-    // until the memo agrees with OUR dir and fail loudly if it never
-    // does. SCOPE of the guarantee: agreement at RETURN time — the
-    // session's table names are a single global namespace, so a
-    // concurrent register(otherDir) AFTER this returns can still
-    // repoint them before this caller's queries run. Concurrent
-    // multi-corpus use needs external coordination (or per-dir table
-    // names); the engine's own drivers register one corpus per session.
-    var attempts = 0
-    var got = registeredDir.getOrCompute(spark, "dir")(ddl())
-    while (got != dir && attempts < 5) {
-      registeredDir.evict(spark, "dir")
-      got = registeredDir.getOrCompute(spark, "dir")(ddl())
-      attempts += 1
-    }
-    if (got != dir)
-      throw new IllegalStateException(
-        s"catalog registration raced: wanted $dir but the session registered $got")
     TableNames
   }
-
-  /** Forget the register-once memo (e.g. after external DDL dropped
-    * one of the tables behind the session's back), so the next
-    * [[register]] call redoes the DDL. Session-global — there is ONE
-    * memo, not one per dir (a dir parameter here would misleadingly
-    * suggest dir-scoped resets). */
-  def reset(spark: SparkSession): Unit =
-    registeredDir.evict(spark, "dir")
 
   /** Table + column statistics for the cost-based optimizer: row
     * counts, sizes, per-column NDV/min/max/null counts. At 100 TB this

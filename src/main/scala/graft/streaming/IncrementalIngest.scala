@@ -386,7 +386,7 @@ object IncrementalIngest {
           // synchronous, so the blocks are consumed once the commits
           // land — leaving them to driver GC grows block storage for
           // the stream's whole lifetime
-          graft.AppScopedCache.unpersistPlanRDDs(positions)
+          graft.Artifacts.unpersistPlanRDDs(positions)
         }
         ()
       }
@@ -427,7 +427,7 @@ object IncrementalIngest {
               batchId, app = Some(appId("quarantine", quarantinePath)))
           // per-batch checkpoint released once both sides landed (see
           // searchIndexFullWriter) — not left to driver GC
-          graft.AppScopedCache.unpersistPlanRDDs(marked)
+          graft.Artifacts.unpersistPlanRDDs(marked)
         }
         ()
       }

@@ -21,16 +21,16 @@ class CacheLifecycleSpec extends SparkSpec {
     Dedup.simhashPairs(spark, sf).count()
     val before = persistentCount
     assert(before > 0, "expected checkpointed blocks after the cluster build")
-    Dedup.evictCorpus(spark, sf)
+    Artifacts.evict(spark, sf)
     val after = persistentCount
     assert(after < before, s"eviction released nothing ($before -> $after)")
     // post-eviction use rebuilds fresh rather than serving a dead frame
     assert(Dedup.dedupClusters(spark, sf).count() > 0)
-    Dedup.evictCorpus(spark, sf)
+    Artifacts.evict(spark, sf)
   }
 
   test("repeated memoized dedup calls serve one checkpoint, not one per call") {
-    Dedup.evictCorpus(spark, sf)
+    Artifacts.evict(spark, sf)
     Dedup.simhashPairs(spark, sf).count()
     Dedup.paragraphFlags(spark, sf).count()
     val afterFirst = persistentCount
@@ -44,16 +44,16 @@ class CacheLifecycleSpec extends SparkSpec {
     }
     assert(persistentCount === afterFirst,
       s"repeat calls accumulated blocks ($afterFirst -> $persistentCount)")
-    Dedup.evictCorpus(spark, sf)
+    Artifacts.evict(spark, sf)
   }
 
   test("a second corpus does not accumulate the first corpus's blocks") {
     val sf2 = "/root/testdata/sf0.01"
     Dedup.dedupClusters(spark, sf).count()
-    Dedup.evictCorpus(spark, sf)
+    Artifacts.evict(spark, sf)
     val baseline = persistentCount
     Dedup.dedupClusters(spark, sf2).count()
-    Dedup.evictCorpus(spark, sf2)
+    Artifacts.evict(spark, sf2)
     assert(persistentCount <= baseline,
       s"second corpus leaked blocks past eviction ($baseline -> $persistentCount)")
   }
@@ -63,12 +63,12 @@ class CacheLifecycleSpec extends SparkSpec {
     TextAnalysis.contamination(spark, sf).count()
     val before = persistentCount
     assert(before > 0, "expected a checkpointed gram table after contamination")
-    TextAnalysis.evictCorpus(spark, sf)
+    Artifacts.evict(spark, sf)
     assert(persistentCount < before,
       s"gram eviction released nothing ($before -> $persistentCount)")
     // post-eviction use rebuilds fresh
     assert(TextAnalysis.contamination(spark, sf).count() >= 0)
-    TextAnalysis.evictCorpus(spark, sf)
+    Artifacts.evict(spark, sf)
   }
 
   test("knn_ivf serving reuses one materialized index per corpus") {
@@ -83,7 +83,7 @@ class CacheLifecycleSpec extends SparkSpec {
   test("evicting a corpus's ANN state deletes its index scratch dir") {
     val p = Similarity.ivfIndexPath(spark, sf)
     assert(java.nio.file.Files.exists(java.nio.file.Path.of(p)))
-    Similarity.evictCorpus(spark, sf)
+    Artifacts.evict(spark, sf)
     assert(!java.nio.file.Files.exists(java.nio.file.Path.of(p)),
       "evicted index directory still on disk")
     // next serve rebuilds a fresh index and works end to end
@@ -95,7 +95,7 @@ class CacheLifecycleSpec extends SparkSpec {
   test("evicting a corpus's html fixture deletes its scratch dir and link memo") {
     val p = graft.operators.Html.htmlFixturePath(spark, sf)
     assert(java.nio.file.Files.exists(java.nio.file.Path.of(p)))
-    graft.operators.Html.evictCorpus(spark, sf)
+    Artifacts.evict(spark, sf)
     assert(!java.nio.file.Files.exists(java.nio.file.Path.of(p)),
       "evicted html fixture still on disk")
     val p2 = graft.operators.Html.htmlFixturePath(spark, sf)
@@ -106,7 +106,7 @@ class CacheLifecycleSpec extends SparkSpec {
   test("evicting a corpus's media fixture deletes its scratch dir") {
     val p = Multimodal.mediaFixturePath(spark, sf)
     assert(java.nio.file.Files.exists(java.nio.file.Path.of(p)))
-    Multimodal.evictCorpus(spark, sf)
+    Artifacts.evict(spark, sf)
     assert(!java.nio.file.Files.exists(java.nio.file.Path.of(p)),
       "evicted media fixture still on disk")
     // next decode rebuilds a fresh fixture and works end to end

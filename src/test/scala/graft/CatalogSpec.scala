@@ -53,10 +53,15 @@ class CatalogSpec extends SparkSpec {
     GraftCatalog.register(spark, sf)
     spark.sql("DROP TABLE region")
     assert(Tables.region(spark, sf).count() === 5) // files untouched
-    // register() memoizes per (app, dir): after out-of-band DDL the
-    // memo must be reset for the re-registration to actually run
-    GraftCatalog.reset(spark)
     GraftCatalog.register(spark, sf) // restore for other tests
+    assert(spark.table("region").count() === 5)
+  }
+
+  test("register re-creates a table dropped behind the session's back") {
+    GraftCatalog.register(spark, sf)
+    spark.sql("DROP TABLE region")
+    assert(!spark.catalog.tableExists("region"))
+    GraftCatalog.register(spark, sf)
     assert(spark.table("region").count() === 5)
   }
 
