@@ -21,6 +21,10 @@ import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, Sh
   *   table/
   *     _graft_log/00000000.json   {"version":0,"adds":[...],"removes":[]}
   *     _graft_log/00000001.json   ...
+  *     _graft_log/cp-00000020.parquet/   the table state at v20:
+  *         part-*.parquet   one row per live file (stats, blooms, dv)
+  *         _state.json      schema, constraints, physical names, pins,
+  *                          then one batch-ledger line per entry
   *     data/<uuid>-<i>.parquet    immutable once committed
   * }}}
   *
@@ -43,6 +47,7 @@ import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, Sh
 object CommitLog {
 
   private[graft] val LogDir = "_graft_log"
+  private val logger = org.slf4j.LoggerFactory.getLogger("graft.operators.CommitLog")
   private[graft] val DataDir = "data"
 
   private def fsOf(spark: SparkSession, p: Path) =
@@ -116,6 +121,10 @@ object CommitLog {
     * the mask) materializes the deletes and drops the DVs. */
   type FileDvs = Map[String, String]
 
+  private def jpins(pins: Map[String, Long]): String =
+    pins.toSeq.sortBy(_._1).map { case (k, ver) => s""""${esc(k)}":$ver""" }
+      .mkString("{", ",", "}")
+
   private def jdvs(dvs: FileDvs): String =
     dvs.toSeq.sortBy(_._1).map { case (f, enc) =>
       "\"" + esc(f) + "\":\"" + enc + "\""
@@ -183,11 +192,8 @@ object CommitLog {
     // a snapshot-based commit claims V+1 directly and lets the
     // put-if-absent decide the race: only a blind append lists the log
     var v = expectedVersion.getOrElse(latestVersion(spark, tablePath)) + 1
-    val batchField = batchId.fold("")(b => s""","batchId":$b""") +
-      batchApp.fold("")(a => s""","batchApp":"${esc(a)}"""")
-    val pinsField = if (pins.isEmpty) "" else
-      pins.toSeq.sortBy(_._1).map { case (k, ver) => s""""${esc(k)}":$ver""" }
-        .mkString(""","pins":{""", ",", "}")
+    val batchField = batchId.fold("")(batchFields(_, batchApp))
+    val pinsField = if (pins.isEmpty) "" else s""","pins":${jpins(pins)}"""
     val statsField = if (stats.isEmpty) "" else s""","stats":${jstats(stats)}"""
     val bloomField = if (blooms.isEmpty) "" else s""","blooms":${jblooms(blooms)}"""
     val schemaField = schemaB64.fold("")(s => s""","schemaB64":"$s"""")
@@ -271,113 +277,55 @@ object CommitLog {
     }
   }
 
-  /** Incremental per-table ledger memo: commit files are immutable
-    * and the log append-only above the vacuum horizon, so only NEW
-    * versions need reading per call. Keyed by the FIRST retained
-    * version's (number, mtime): vacuum's horizon rewrite and a table
-    * dropped-and-recreated at the same path both change that identity
-    * and force a clean rescan of the (then small) retained log. This is
-    * not table state at one version, so it is not a [[Snapshot]]: the
-    * ledger spans every retained version and grows with each new one. */
-  private case class LedgerState(firstV: Long, firstMtime: Long,
-      through: Long, ids: Set[(Option[String], Long, Long)],
-      floorQual: Option[Long])
-  private val ledgerCache =
-    new java.util.concurrent.ConcurrentHashMap[String, LedgerState]()
+  /** One batch-ledger entry: the writer identity (None for writers
+    * that declared none), the batchId and the version that committed
+    * it. */
+  private[graft] final case class LedgerEntry(app: Option[String],
+      batchId: Long, version: Long)
 
   private val batchAppRe = """"batchApp":"((?:[^"\\]|\\.)*)"""".r
-  // vacuum's horizon rewrite carries the pre-truncation "first
-  // app-qualified entry" evidence forward under this field, so the
-  // legacy-bare-entry rule ([[replayedBatch]]) stays vacuum-stable
-  private val firstQualVRe = """"firstQualV":(\d+)""".r
-  // a vacuum-rewritten ledger entry's ORIGINAL commit version — the
-  // legacy-vs-live classification in [[replayedBatch]] compares entry
-  // versions against the first app-qualified version, so a rewrite
-  // inheriting the checkpoint's own version could reclassify a
-  // pre-upgrade bare entry as a live co-writer (ADVICE r14 #3)
-  private val batchVRe = """"batchV":(-?\d+)""".r
+
+  private def batchFields(batchId: Long, app: Option[String]): String =
+    s""","batchId":$batchId""" + app.fold("")(a => s""","batchApp":"${esc(a)}"""")
+
+  /** The integer after `"key":` — the first occurrence in the line. */
+  private def longField(line: String, key: String): Option[Long] = {
+    val k = "\"" + key + "\":"
+    val i = line.indexOf(k)
+    if (i < 0) None
+    else {
+      var e = i + k.length
+      while (e < line.length && (line.charAt(e).isDigit || line.charAt(e) == '-')) e += 1
+      line.substring(i + k.length, e).toLongOption
+    }
+  }
+
+  /** The ledger entry a commit line carries, if any. A checkpoint's
+    * ledger lines have the same `version`/`batchId`/`batchApp` shape,
+    * so this is the ONE parse of the ledger, shared by [[Snapshot]]
+    * and [[history]]. */
+  private def ledgerEntryOf(line: String): Option[LedgerEntry] =
+    longField(line, "batchId").map(id => LedgerEntry(
+      batchAppRe.findFirstMatchIn(line).map(m => unescKey(m.group(1))), id,
+      longField(line, "version").getOrElse(-1L)))
 
   /** (writer identity, batchId) pairs already committed — the
     * streaming sink's replay ledger, APP-QUALIFIED (Delta's txnAppId
     * shape): two different streaming queries both restart their
     * epochs at 0, so a bare-epoch ledger would silently discard the
     * second query's batches as replays of the first's. Entries from
-    * writers that declared no identity carry None. O(new commits) per
-    * call, not O(log): commit files are immutable and the log
-    * append-only above the vacuum horizon, so only versions past the
-    * cached watermark are read; the cache keys on the FIRST retained
-    * version's (number, mtime) — vacuum's horizon rewrite and a table
-    * dropped-and-recreated at the same path both change that identity
-    * and force a clean rescan of the (then small) retained log. */
+    * writers that declared no identity carry None. Read from the
+    * latest [[Snapshot]]: its checkpoint's ledger plus the tail. */
   private[graft] def committedBatches(spark: SparkSession,
       tablePath: String): Set[(Option[String], Long)] =
-    committedBatchesVersioned(spark, tablePath).map(e => (e._1, e._2))
-
-  /** [[committedBatches]] with each entry's commit VERSION attached —
-    * (writer identity, batchId, version). The version is what lets
-    * [[replayedBatch]] tell a pre-upgrade legacy bare entry (older
-    * than the table's first app-qualified entry, still honored) from
-    * a LIVE identity-free writer's entry (which must not suppress a
-    * qualified writer's same-numbered epochs — ADVICE r13 #3). */
-  private[graft] def committedBatchesVersioned(spark: SparkSession,
-      tablePath: String): Set[(Option[String], Long, Long)] =
-    ledgerState(spark, tablePath)._1
-
-  /** The full ledger view: versioned (app, batchId, version) entries
-    * plus the vacuum-carried "first qualified version" floor (see
-    * [[replayedBatch]]). Incremental per-table memo as before. */
-  private def ledgerState(spark: SparkSession,
-      tablePath: String): (Set[(Option[String], Long, Long)], Option[Long]) = {
-    val log = new Path(tablePath, LogDir)
-    val fs = fsOf(spark, log)
-    val vs = versions(spark, tablePath)
-    if (vs.isEmpty) return (Set.empty, None)
-    def lineOf(v: Long): String = {
-      val in = fs.open(new Path(log, f"$v%08d.json"))
-      try new String(
-        org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8") finally in.close()
-    }
-    def idOf(line: String, v: Long): Option[(Option[String], Long, Long)] = {
-      val i = line.indexOf("\"batchId\":")
-      if (i < 0) None
-      else scala.util.Try(
-        line.substring(i + 10).takeWhile(c => c.isDigit || c == '-').toLong)
-        .toOption.map { id =>
-          // a checkpoint line carries the entry's original version —
-          // classification must see THAT, not the rewrite's version
-          val entryV = batchVRe.findFirstMatchIn(line)
-            .map(_.group(1).toLong).getOrElse(v)
-          (batchAppRe.findFirstMatchIn(line).map(m => unescKey(m.group(1))), id, entryV)
-        }
-    }
-    val firstV = vs.head
-    val firstMtime = scala.util.Try(
-      fs.getFileStatus(new Path(log, f"$firstV%08d.json")).getModificationTime)
-      .getOrElse(0L)
-    val cached = Option(ledgerCache.get(tablePath)).filter(s =>
-      s.firstV == firstV && s.firstMtime == firstMtime && s.through <= vs.last)
-    val base = cached.getOrElse(
-      LedgerState(firstV, firstMtime, firstV - 1, Set.empty, None))
-    var floor = base.floorQual
-    val fresh = vs.filter(_ > base.through).flatMap { v =>
-      val line = lineOf(v)
-      firstQualVRe.findFirstMatchIn(line).foreach { m =>
-        val fq = m.group(1).toLong
-        floor = Some(floor.fold(fq)(math.min(_, fq)))
-      }
-      idOf(line, v)
-    }
-    val ids = base.ids ++ fresh
-    ledgerCache.put(tablePath, LedgerState(firstV, firstMtime, vs.last, ids, floor))
-    (ids, floor)
-  }
+    resolve(spark, tablePath).ledger.map(e => (e.app, e.batchId)).toSet
 
   /** batchIds already committed, identity-blind — the foreachBatch
     * writers' ledger view (one single-writer stream per table by
     * construction, so any carrier of the id is that stream's own
     * earlier publish). */
   def committedBatchIds(spark: SparkSession, tablePath: String): Set[Long] =
-    committedBatches(spark, tablePath).map(_._2)
+    resolve(spark, tablePath).ledger.map(_.batchId).toSet
 
   /** Replay check for an APP-QUALIFIED streaming writer: true when
     * `batchId` was already committed by THIS writer. An entry carrying
@@ -387,23 +335,12 @@ object CommitLog {
     * qualified writing began belongs to a live identity-free writer
     * (e.g. a foreachBatch job sharing the table) whose epoch numbering
     * is unrelated; matching it would permanently discard this writer's
-    * same-numbered epochs (ADVICE r13 #3). */
+    * same-numbered epochs. The ledger keeps every
+    * entry's original version, vacuum included, so the rule holds
+    * across retention. */
   def replayedBatch(spark: SparkSession, tablePath: String,
-      app: String, batchId: Long): Boolean = {
-    val (entries, floorQual) = ledgerState(spark, tablePath)
-    if (entries.exists(e => e._1.contains(app) && e._2 == batchId)) true
-    else {
-      // the floor carried by vacuum's horizon rewrite keeps the rule
-      // stable when the qualified entries themselves were truncated —
-      // without it a surviving LIVE bare co-writer entry would be
-      // reclassified as pre-upgrade legacy and suppress a qualified
-      // writer's brand-new epoch
-      val firstQualifiedV =
-        (entries.filter(_._1.isDefined).map(_._3) ++ floorQual).minOption
-      entries.exists(e => e._1.isEmpty && e._2 == batchId &&
-        firstQualifiedV.forall(e._3 < _))
-    }
-  }
+      app: String, batchId: Long): Boolean =
+    resolve(spark, tablePath).replayed(Some(app), batchId)
 
   /** Exactly-once streaming append: the TRANSACTIONAL form of the
     * per-batch file-naming trick ([[Similarity.appendIvfIndexBatch]])
@@ -420,11 +357,7 @@ object CommitLog {
     // identity-qualified writers use the legacy-aware replay rule
     // ([[replayedBatch]]); identity-free callers keep the blind check
     // (their contract remains one single-writer stream per table)
-    val replayed = app match {
-      case Some(a) => replayedBatch(spark, tablePath, a, batchId)
-      case None    => committedBatchIds(spark, tablePath).contains(batchId)
-    }
-    if (replayed) None
+    if (resolve(spark, tablePath).replayed(app, batchId)) None
     else if (bloomCols.isEmpty && statsCols.isEmpty)
       Some(commit(spark, tablePath, stage(spark, tablePath, df),
         Seq.empty, Some(batchId), batchApp = app))
@@ -458,7 +391,7 @@ object CommitLog {
     * [[versionForBatchId]] recovers a replayed child's version. */
   def txnCommit(spark: SparkSession, manifestDir: String, batchId: Long,
       pins: Map[String, Long]): Option[Long] =
-    if (committedBatchIds(spark, manifestDir).contains(batchId)) None
+    if (resolve(spark, manifestDir).replayed(None, batchId)) None
     else Some(commit(spark, manifestDir, Seq.empty, Seq.empty,
       Some(batchId), dataChange = false, pins = pins))
 
@@ -474,13 +407,7 @@ object CommitLog {
   def txnPins(spark: SparkSession, manifestDir: String,
       asOf: Option[Long] = None): Map[String, Long] = {
     txnResolves.incrementAndGet()
-    versions(spark, manifestDir).filter(v => asOf.forall(v <= _))
-      .reverseIterator
-      .map(v => extractSection(commitLine(spark, manifestDir, v), "pins"))
-      .collectFirst { case Some(body) =>
-        pinColRe.findAllMatchIn(body).map(m =>
-          unescKey(m.group(1)) -> m.group(2).toLong).toMap }
-      .getOrElse(Map.empty)
+    resolve(spark, manifestDir, asOf).pins
   }
 
   // pin keys pass through esc()/the JSON scanner unescaped-safe for
@@ -495,13 +422,8 @@ object CommitLog {
     * most once per table by the [[appendStream]] contract. */
   def versionForBatchId(spark: SparkSession, tablePath: String,
       batchId: Long): Option[Long] =
-    versions(spark, tablePath).reverseIterator.find { v =>
-      val line = commitLine(spark, tablePath, v)
-      val i = line.indexOf("\"batchId\":")
-      i >= 0 && scala.util.Try(line.substring(i + 10)
-        .takeWhile(c => c.isDigit || c == '-').toLong)
-        .toOption.contains(batchId)
-    }
+    resolve(spark, tablePath).ledger.reverseIterator
+      .find(_.batchId == batchId).map(_.version)
 
   def latestVersion(spark: SparkSession, tablePath: String): Long = {
     val log = new Path(tablePath, LogDir)
@@ -584,24 +506,29 @@ object CommitLog {
   /** The table at one committed version, resolved once and shared by
     * every metadata question about that version (Delta's Snapshot,
     * scaled down). A resolve reads only the pin, the newest checkpoint
-    * id at or below it and the JSON tail after that checkpoint; every
-    * other field is lazy, computed at most once and only when asked —
-    * the commit path asks for `declared` and `constraints` and never
-    * pays the checkpoint reads a scan needs:
+    * id at or below it and the JSON tail after that checkpoint; no
+    * reader looks below the checkpoint. Every other field is lazy,
+    * computed at most once and only when asked — the commit path asks
+    * for `declared` and `constraints` and never pays the checkpoint
+    * reads a scan needs:
     *  - `live`: the live data files, paths relative to the root;
     *  - `stats`, `blooms`, `dvRefs`: checkpoint rows plus the tail;
-    *  - `declared`, `constraints`: the latest such field at or before
-    *    the version;
+    *  - `declared`, `constraints`, `pins`: the newest such field in the
+    *    tail, else the checkpoint's state file;
+    *  - `usedPhys`: every physical column name any declaration at or
+    *    before the version used;
+    *  - `ledger`: every batch-ledger entry at or before the version, in
+    *    version order;
     *  - `footerSchema`: the newest live file's footer — an undeclared
     *    table's schema (uniform by contract: evolution requires a
     *    declaration).
     *
-    * Commits are published by put-if-absent and never rewritten, so the
-    * state at a version is immutable, and pinned and "latest" reads of
-    * it share one Snapshot. [[resolve]] caches it under (table path,
-    * version, the pinned commit file's mtime and length): a table
-    * dropped and re-created at the same path, or the horizon line
-    * vacuum rewrites in place, resolves afresh. The cache keeps the
+    * Commits are published by put-if-absent and never rewritten (vacuum
+    * included), so the state at a version is immutable, and pinned and
+    * "latest" reads of it share one Snapshot. [[resolve]] caches it
+    * under (table path, version, the pinned commit file's mtime and
+    * length); that identity only guards a table dropped and re-created
+    * at the same path, which resolves afresh. The cache keeps the
     * [[SnapshotKeepPins]] + 1 most recently used versions per table. */
   private[graft] final class Snapshot private[CommitLog] (
       spark: SparkSession, val tablePath: String, val version: Long,
@@ -614,21 +541,34 @@ object CommitLog {
     lazy val blooms: FileBlooms = replayable.replay(
       cpMeta(_, "blooms", parseBloomCols), extractBlooms)
     lazy val dvRefs: FileDvs = replayable.replay(cpDvs, extractDvs)
-    lazy val declared: Option[StructType] = replayable.newest(line =>
-      schemaFieldRe.findFirstMatchIn(line).map(m =>
-        DataType.fromJson(unb64(m.group(1))).asInstanceOf[StructType]))
-    lazy val constraints: Constraints = replayable.newest(line =>
-      extractSection(line, "constraints").map(body =>
-        bloomColRe.findAllMatchIn(body).map(m =>
-          m.group(1) -> unb64(m.group(2))).toMap: Constraints))
-      .getOrElse(Map.empty)
+    lazy val declared: Option[StructType] = replayable.newest(parseSchema)
+    lazy val constraints: Constraints =
+      replayable.newest(parseConstraints).getOrElse(Map.empty)
+    lazy val pins: Map[String, Long] = replayable.newest(parsePins).getOrElse(Map.empty)
+    lazy val usedPhys: Set[String] =
+      replayable.cpHeader.toSet.flatMap(parsePhysicalNames) ++
+        tail.flatMap(l => parseSchema(l._2)).flatMap(_.fields.map(ColumnMapping.physical))
+    lazy val ledger: Vector[LedgerEntry] =
+      replayable.cpLedger ++ tail.flatMap(l => ledgerEntryOf(l._2))
     lazy val footerSchema: Option[StructType] =
       live.lastOption.map(f => spark.read.parquet(s"$tablePath/$f").schema)
 
+    /** Whether `batchId` is already in the ledger for writer `app`: any
+      * entry for an identity-free writer (None), else the legacy-aware
+      * rule of [[replayedBatch]]. */
+    def replayed(app: Option[String], batchId: Long): Boolean = app match {
+      case None => ledger.exists(_.batchId == batchId)
+      case Some(a) =>
+        ledger.exists(e => e.app.contains(a) && e.batchId == batchId) || {
+          val firstQualified = ledger.find(_.app.isDefined).map(_.version)
+          ledger.exists(e => e.app.isEmpty && e.batchId == batchId &&
+            firstQualified.forall(e.version < _))
+        }
+    }
+
     /** This snapshot, or a fresh resolve of the same version when a
       * vacuum has since deleted its checkpoint (vacuum leaves one at its
-      * horizon, at or below this version, and rewrites the horizon
-      * line to carry the schema and constraints). */
+      * horizon, at or below this version). */
     private[CommitLog] def replayable: Snapshot =
       if (cp.forall(c => fsOf(spark, cpPath(c)).exists(cpPath(c)))) this
       else resolveAt(spark, tablePath, version, identity)
@@ -637,6 +577,19 @@ object CommitLog {
       spark.read.parquet(cpPath(c).toString)
 
     private def cpPath(c: Long) = new Path(new Path(tablePath, LogDir), cpDirName(c))
+
+    /** The checkpoint's state file, line by line (see [[writeCheckpoint]]). */
+    private def stateLines[T](read: Iterator[String] => T): Option[T] = cp.map { c =>
+      val p = new Path(cpPath(c), StateFile)
+      val in = new java.io.BufferedReader(
+        new java.io.InputStreamReader(fsOf(spark, p).open(p), "UTF-8"))
+      try read(Iterator.continually(in.readLine()).takeWhile(_ != null))
+      finally in.close()
+    }
+
+    private lazy val cpHeader: Option[String] = stateLines(_.next())
+    private lazy val cpLedger: Vector[LedgerEntry] =
+      stateLines(_.drop(1).flatMap(ledgerEntryOf).toVector).getOrElse(Vector.empty)
 
     /** Order-aware: per version adds then removes, so a remove cancels
       * only earlier adds and a later re-add (restore) wins. */
@@ -660,13 +613,11 @@ object CommitLog {
       acc.toMap
     }
 
-    /** The newest value `field` finds in the commit lines at or below
-      * this version: the tail in hand first, then (only when the tail
-      * has none) the lines at or below the checkpoint. */
+    /** The newest value `field` finds at or below this version: in the
+      * tail first, then in the checkpoint's state header, which holds
+      * every such field's value at the checkpoint. */
     private def newest[T](field: String => Option[T]): Option[T] =
-      (tail.reverseIterator.map(_._2) ++ cp.iterator.flatMap(c =>
-        versions(spark, tablePath).filter(_ <= c).reverseIterator
-          .map(commitLine(spark, tablePath, _))))
+      (tail.reverseIterator.map(_._2) ++ cpHeader.iterator)
         .map(field).collectFirst { case Some(t) => t }
   }
 
@@ -720,12 +671,22 @@ object CommitLog {
     }
   }
 
+  /** Versions are claimed by put-if-absent, so the tail runs without a
+    * gap from the checkpoint (or v0) up to the pin; a gap means a lost
+    * commit file, and the state past it is refused, not served. */
   private def resolveAt(spark: SparkSession, tablePath: String, pin: Long,
       identity: (Long, Long)): Snapshot = {
     val cp = bestCheckpoint(spark, tablePath, Some(pin))
-    val tail = versions(spark, tablePath).filter(v => cp.forall(v > _) && v <= pin)
-      .map(v => v -> commitLine(spark, tablePath, v))
-    new Snapshot(spark, tablePath, pin, identity, cp, tail)
+    val from = cp.fold(0L)(_ + 1)
+    val tailVs = versions(spark, tablePath).filter(v => v >= from && v <= pin)
+    val torn = tailVs.indices.find(i => tailVs(i) != from + i)
+      .orElse(Option.when(tailVs.length != pin - from + 1)(tailVs.length))
+    torn.foreach(i => throw new IllegalStateException(
+      s"version ${from + i} is missing from $tablePath's log: v$pin resolves " +
+      s"from ${cp.fold("v0")(c => s"the checkpoint at v$c")} through every " +
+      "later commit, and a lost commit would serve a partial table"))
+    new Snapshot(spark, tablePath, pin, identity, cp,
+      tailVs.map(v => v -> commitLine(spark, tablePath, v)))
   }
 
   /** The live file set at `asOf` (default: latest): the newest parquet
@@ -879,6 +840,9 @@ object CommitLog {
       .map(_.toInt).getOrElse(20)
 
   private def cpDirName(v: Long) = f"cp-$v%08d.parquet"
+  /** The table-level state file inside a checkpoint dir; the `_` prefix
+    * keeps Spark's parquet read of the dir from listing it. */
+  private val StateFile = "_state.json"
   private val cpNameRe = """cp-(\d+)\.parquet""".r
 
   /** Parquet checkpoint versions present, ascending. Discovery is by
@@ -950,21 +914,26 @@ object CommitLog {
     cols.map { case (c, enc) => "\"" + esc(c) + "\":\"" + enc + "\"" }.mkString(",")
 
   /** Persist the resolved state at version `v` as a parquet
-    * checkpoint. Incremental: previous checkpoint rows stay in the
-    * parquet domain (anti-joined against the tail's removes); only the
-    * tail commits — bounded by the checkpoint interval, except after a
+    * checkpoint: the whole table state, so no reader ever looks below
+    * it. Incremental: previous checkpoint rows stay in the parquet
+    * domain (anti-joined against the tail's removes); only the tail
+    * commits — bounded by the checkpoint interval, except after a
     * full-table overwrite whose removes are naturally file-count-sized
-    * name lists — are parsed on the driver. Crash-safe: written to a
-    * temp dir, renamed into place (readers discover only complete
+    * name lists — are parsed on the driver. The table-level state rides
+    * in [[StateFile]] beside the rows: one header line (declared schema,
+    * constraints, every physical column name any declaration used, the
+    * newest transaction pins), then one line per batch-ledger entry,
+    * shaped like the commit line that carried it. Crash-safe: written
+    * to a temp dir, renamed into place (readers discover only complete
     * checkpoints), pointer updated last. */
   def writeCheckpoint(spark: SparkSession, tablePath: String, v: Long): Unit = {
     import spark.implicits._
     val log = new Path(tablePath, LogDir)
     val fs = fsOf(spark, log)
-    val prev = bestCheckpoint(spark, tablePath, Some(v)).filter(_ < v)
-    val tailVs = versions(spark, tablePath)
-      .filter(x => prev.forall(x > _) && x <= v)
-    val tailLines = tailVs.map(x => commitLine(spark, tablePath, x))
+    val snap = resolve(spark, tablePath, Some(v)).replayable
+    if (snap.cp.contains(v)) return
+    val prev = snap.cp
+    val tailLines = snap.tail.map(_._2)
     // ORDER-AWARE tail replay (mirrors Snapshot.live: per version,
     // adds then removes): a remove cancels only EARLIER adds, and a
     // later re-add of the same name — restore() republishes
@@ -1037,6 +1006,18 @@ object CommitLog {
       }
     val tmp = new Path(log, s".cptmp-${java.util.UUID.randomUUID().toString.take(8)}")
     out.write.mode("overwrite").parquet(tmp.toString)
+    val header = s"""{"version":$v""" +
+      snap.declared.fold("")(d => s""","schemaB64":"${b64(d.json)}"""") +
+      s""","constraints":${jconstraints(snap.constraints)}""" +
+      s""","physicalNames":${jarr(snap.usedPhys.toSeq.sorted)}""" +
+      s""","pins":${jpins(snap.pins)}}"""
+    val state = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
+      fs.create(new Path(tmp, StateFile), true), "UTF-8"))
+    try {
+      state.write(header)
+      snap.ledger.foreach(e =>
+        state.write(s"""\n{"version":${e.version}${batchFields(e.batchId, e.app)}}"""))
+    } finally state.close()
     val dst = new Path(log, cpDirName(v))
     if (!fs.exists(dst) && fs.rename(tmp, dst)) {
       val lp = fs.create(new Path(log, "_last_checkpoint"), true)
@@ -1049,18 +1030,38 @@ object CommitLog {
 
   /** Post-commit hook: checkpoint on the cadence. Best-effort — a
     * failed checkpoint only means a longer JSON replay, never a failed
-    * commit (the commit entry is already durable). */
+    * commit (the commit entry is already durable) — but logged. */
   private def maybeCheckpoint(spark: SparkSession, tablePath: String,
       v: Long): Unit = {
     val n = checkpointInterval(spark)
     if (n > 0 && v > 0 && v % n == 0)
-      scala.util.Try(writeCheckpoint(spark, tablePath, v))
-    ()
+      try writeCheckpoint(spark, tablePath, v) catch {
+        case scala.util.control.NonFatal(e) =>
+          logger.warn(s"checkpoint of $tablePath at v$v failed; the commit " +
+            s"stands and readers replay the JSON tail instead: $e")
+      }
   }
 
   // ---- declared schema + CHECK constraints (table-boundary gate) ----
 
   private val schemaFieldRe = """"schemaB64":"([^"]*)"""".r
+  private val physicalNamesRe = """"physicalNames":\[((?:"(?:[^"\\]|\\.)*",?)*)\]""".r
+  private val jsonStrRe = """"((?:[^"\\]|\\.)*)"""".r
+
+  // the table-level fields of a commit line or a checkpoint's state
+  // header: None when the line does not carry the field
+  private def parseSchema(line: String): Option[StructType] =
+    schemaFieldRe.findFirstMatchIn(line).map(m =>
+      DataType.fromJson(unb64(m.group(1))).asInstanceOf[StructType])
+  private def parseConstraints(line: String): Option[Constraints] =
+    extractSection(line, "constraints").map(body =>
+      bloomColRe.findAllMatchIn(body).map(m => m.group(1) -> unb64(m.group(2))).toMap)
+  private def parsePins(line: String): Option[Map[String, Long]] =
+    extractSection(line, "pins").map(body =>
+      pinColRe.findAllMatchIn(body).map(m => unescKey(m.group(1)) -> m.group(2).toLong).toMap)
+  private def parsePhysicalNames(line: String): Seq[String] =
+    physicalNamesRe.findFirstMatchIn(line).toSeq.flatMap(m =>
+      jsonStrRe.findAllMatchIn(m.group(1)).map(x => unescKey(x.group(1))))
 
   /** The declared schema in force at `asOf` (latest declaration at or
     * before it), replayed from the log. None = never declared: the
@@ -1141,24 +1142,11 @@ object CommitLog {
     * ever used — the resurrection guard's domain: a column ADDED with
     * a logical name matching one of these must mint a fresh physical
     * name ([[addColumnField]]), or files written under the retired
-    * column would serve their old data through the new one. Bounded:
-    * one regex probe per retained log entry, DDL-time only. */
-  private val usedPhysRe = """"usedPhys":\[([^\]]*)\]""".r
-  private val jsonStrRe = """"((?:[^"\\]|\\.)*)"""".r
-
+    * column would serve their old data through the new one. The
+    * checkpoint carries the names its truncated declarations used. */
   private[graft] def usedPhysicalNames(spark: SparkSession,
       tablePath: String): Set[String] =
-    versions(spark, tablePath).flatMap { v =>
-      val line = commitLine(spark, tablePath, v)
-      val declared = schemaFieldRe.findFirstMatchIn(line).toSeq.flatMap(m =>
-        DataType.fromJson(unb64(m.group(1))).asInstanceOf[StructType]
-          .fields.map(ColumnMapping.physical))
-      // names carried forward by vacuum's horizon rewrite — the
-      // truncated declarations may have been their only carriers
-      val carried = usedPhysRe.findFirstMatchIn(line).toSeq.flatMap(m =>
-        jsonStrRe.findAllMatchIn(m.group(1)).map(x => unescKey(x.group(1))))
-      declared ++ carried
-    }.toSet
+    resolve(spark, tablePath).usedPhys
 
   /** Refuse column DDL on a CHECK-constrained column: the stored
     * expression references the LOGICAL name, and a rename/drop would
@@ -1891,19 +1879,15 @@ object CommitLog {
 
   /** DESCRIBE HISTORY — one row per commit still in the log: version,
     * add/remove counts, the streaming batchId when present, the
-    * dataChange flag, whether the entry is a vacuum checkpoint, and
-    * how many deletion-vector entries rode it. Driver-built from the
-    * (vacuum-bounded) log — an admin surface, not a data-plane scan. */
+    * dataChange flag, whether a parquet checkpoint holds the table
+    * state at that version, and how many deletion-vector entries rode
+    * it. Driver-built from the (vacuum-bounded) log — an admin
+    * surface, not a data-plane scan. */
   def history(spark: SparkSession, tablePath: String): DataFrame = {
     import spark.implicits._
+    val checkpointed = checkpointVersions(spark, tablePath).toSet
     versions(spark, tablePath).map { v =>
       val line = commitLine(spark, tablePath, v)
-      val batchId: Option[Long] = {
-        val i = line.indexOf("\"batchId\":")
-        if (i < 0) None
-        else scala.util.Try(
-          line.drop(i + 10).takeWhile(c => c.isDigit || c == '-').toLong).toOption
-      }
       // the wall-clock column an auditor reads first. Take tsMillis
       // from the line ALREADY in hand (commitTimestampMillis would
       // re-open the same file — 2N GETs on object storage); only the
@@ -1916,8 +1900,8 @@ object CommitLog {
         }
         .map(m => new java.sql.Timestamp(m)).orNull
       (v, ts, extractArr(line, "adds").size, extractArr(line, "removes").size,
-        batchId, !line.contains("\"dataChange\":false"),
-        line.contains("\"checkpoint\":true"), extractDvs(line).size)
+        ledgerEntryOf(line).map(_.batchId), !line.contains("\"dataChange\":false"),
+        checkpointed(v), extractDvs(line).size)
     }.toDF("version", "timestamp", "n_adds", "n_removes", "batch_id",
       "data_change", "checkpoint", "n_dvs")
   }
@@ -1946,10 +1930,11 @@ object CommitLog {
       column: String, lo: Double, hi: Double,
       batchId: Option[Long] = None): Option[Long] = {
     import org.apache.spark.sql.functions.{col, lit}
-    if (batchId.exists(committedBatchIds(spark, tablePath).contains)) return None
-    // pinned snapshot: removes and straddling-survivor reads below are
-    // computed against THIS version; interleaved commits conflict
+    // pinned snapshot: the ledger, the removes and the straddling-
+    // survivor reads below are computed against THIS version;
+    // interleaved commits conflict
     val s0 = resolve(spark, tablePath)
+    if (batchId.exists(s0.replayed(None, _))) return None
     val v0 = s0.version
     val live = s0.live
     // zones + staged-file stats are keyed by PHYSICAL names
@@ -2020,10 +2005,10 @@ object CommitLog {
       predicate: org.apache.spark.sql.Column,
       batchId: Option[Long] = None): Option[Long] = {
     import org.apache.spark.sql.functions.col
-    if (batchId.exists(committedBatchIds(spark, tablePath).contains)) return None
-    // pin the snapshot: the vectors below are unions against THIS
-    // version's state, so an interleaved commit must conflict
+    // pin the snapshot: the ledger and the vectors below are read at
+    // THIS version's state, so an interleaved commit must conflict
     val s0 = resolve(spark, tablePath)
+    if (batchId.exists(s0.replayed(None, _))) return None
     val v0 = s0.version
     val files = s0.live
     if (files.isEmpty) return None
@@ -2419,8 +2404,7 @@ object CommitLog {
     * surface as inserts and its `removes` as deletes — removed files
     * stay on disk until vacuum, so the pre-image is readable straight
     * from the log's own file lists. Skipped: dataChange=false commits
-    * (compaction — a rearrangement is not churn) and vacuum's
-    * checkpoint entry (a replay artifact, not a change). Copy-on-write
+    * (compaction — a rearrangement is not churn). Copy-on-write
     * granularity note: [[merge]] rewrites only the TOUCHED files, so
     * its feed entry is those files' delete images plus the rewritten
     * inserts — churn proportional to the merge's blast radius, like a
@@ -2434,30 +2418,27 @@ object CommitLog {
   private[graft] final case class ChangeSlice(file: String, kind: String,
       version: Long, dvDiff: Option[Array[Byte]])
 
-  /** Completeness gate (Delta CDF behavior): once vacuum has rewritten
-    * the retention horizon as a checkpoint, the changes BEFORE it are
-    * gone — its line summarizes cumulative state, not churn. A
-    * consumer asking to start below that horizon (including a fresh
-    * syncIncremental/maintainAggregate consumer, from = -1) would get
-    * a silently-incomplete feed and then permanently record the gap in
-    * its batchId ledger. Fail loudly instead. */
+  /** Completeness gate (Delta CDF behavior): once vacuum has truncated
+    * the log below its horizon, the changes BEFORE the oldest retained
+    * version are gone. A consumer asking to start below it (including a
+    * fresh syncIncremental/maintainAggregate consumer, from = -1) would
+    * get a silently-incomplete feed and then permanently record the gap
+    * in its batchId ledger. Fail loudly instead. */
   private[graft] def assertChangesAvailable(spark: SparkSession,
       tablePath: String, sinceVersion: Long): Unit =
     versions(spark, tablePath).headOption.foreach { oldest =>
-      if (sinceVersion < oldest &&
-          commitLine(spark, tablePath, oldest).contains("\"checkpoint\":true"))
+      if (sinceVersion < oldest && oldest > 0)
         throw new IllegalStateException(
           s"change feed from version $sinceVersion is no longer available: " +
-          s"$tablePath was vacuumed and version $oldest is now a checkpoint " +
-          "(cumulative state, not churn). Re-seed the consumer from a full " +
-          s"snapshot (read at version $oldest) and continue from there.")
+          s"$tablePath was vacuumed and its oldest retained version is $oldest. " +
+          "Re-seed the consumer from a full snapshot (read at version " +
+          s"$oldest) and continue from there.")
     }
 
   /** Change slices for versions (sinceVersion, untilVersion]. Skipped:
     * dataChange=false commits (compaction — a rearrangement is not
-    * churn) and vacuum's checkpoint entry (a replay artifact). Work is
-    * metadata-sized: commit lines plus DV bytes for the files those
-    * commits touched — never a base-table scan. */
+    * churn). Work is metadata-sized: commit lines plus DV bytes for the
+    * files those commits touched — never a base-table scan. */
   private[graft] def changeSlices(spark: SparkSession, tablePath: String,
       sinceVersion: Long, untilVersion: Long): Seq[ChangeSlice] = {
     assertChangesAvailable(spark, tablePath, sinceVersion)
@@ -2465,8 +2446,7 @@ object CommitLog {
       .filter(v => v > sinceVersion && v <= untilVersion)
       .flatMap { v =>
         val line = commitLine(spark, tablePath, v)
-        if (line.contains("\"checkpoint\":true") ||
-            line.contains("\"dataChange\":false")) Seq.empty
+        if (line.contains("\"dataChange\":false")) Seq.empty
         else {
           val fileSlices =
             extractArr(line, "adds").map(f => ChangeSlice(f, "insert", v, None)) ++
@@ -2563,14 +2543,12 @@ object CommitLog {
     * content — the publish primitive incremental view maintenance
     * needs (its state table is replaced, not appended, each advance). */
   def overwriteStream(spark: SparkSession, tablePath: String, df: DataFrame,
-      batchId: Long): Option[Long] =
-    if (committedBatchIds(spark, tablePath).contains(batchId)) None
-    else {
-      val v0 = latestVersion(spark, tablePath)
-      val old = if (v0 < 0) Seq.empty[String] else snapshot(spark, tablePath, Some(v0))
-      Some(commit(spark, tablePath, stage(spark, tablePath, df), old,
-        batchId = Some(batchId), expectedVersion = Some(v0)))
-    }
+      batchId: Long): Option[Long] = {
+    val s0 = resolve(spark, tablePath)
+    if (s0.replayed(None, batchId)) None
+    else Some(commit(spark, tablePath, stage(spark, tablePath, df), s0.live,
+      batchId = Some(batchId), expectedVersion = Some(s0.version)))
+  }
 
   /** Incremental view maintenance: keep `dstPath` equal to
     * `SELECT key, count(*), sum(value) FROM src GROUP BY key` by
@@ -2617,17 +2595,17 @@ object CommitLog {
 
   /** Retention pass bounding time-travel storage: physically delete
     * files no retained version references and drop the log entries
-    * before the horizon. Because replay starts from the oldest
-    * RETAINED entry, that entry is first REWRITTEN as a CHECKPOINT
-    * carrying the full cumulative snapshot at its version — without
-    * this, files added before the horizon (and never removed since)
-    * would survive on disk yet vanish from every replay. The same
-    * reason Delta pairs log truncation with checkpoint files.
+    * before the horizon. The horizon version is first CHECKPOINTED:
+    * the parquet checkpoint at `keepFrom` holds the whole table state
+    * there (live files with their metadata, schema, constraints,
+    * physical column names, pins and the batch ledger), so every
+    * retained version resolves from it plus retained commits, and no
+    * commit line is ever rewritten — the same reason Delta pairs log
+    * truncation with checkpoint files.
     *
-    * Vacuum is a single-writer maintenance op (it rewrites one log
-    * entry in place). Checkpointing drops the truncated commits'
-    * batchIds, so the retention horizon must exceed the streaming
-    * engine's replay horizon — as in any lakehouse format. */
+    * Vacuum is a single-writer maintenance op. The checkpoint's ledger
+    * keeps the batchIds of truncated commits, so a replay of a batch
+    * committed below the horizon is still refused. */
   def vacuum(spark: SparkSession, tablePath: String, keepFrom: Long): Unit = {
     val latest = latestVersion(spark, tablePath)
     require(keepFrom >= 0 && keepFrom <= latest,
@@ -2635,107 +2613,22 @@ object CommitLog {
     val fs = fsOf(spark, new Path(tablePath))
     val retained = versions(spark, tablePath).filter(_ >= keepFrom)
     val keep = retained.flatMap(v => snapshot(spark, tablePath, Some(v))).toSet
-    // checkpoint the horizon entry BEFORE truncating anything: its
-    // replay-visible state must equal the cumulative snapshot
-    val horizonState = snapshot(spark, tablePath, Some(keepFrom))
-    // surviving files' skipping metadata and deletion vectors ride a
-    // PARQUET checkpoint at the horizon, not the JSON line: truncated
-    // commits were their only carriers, but jamming 100k files'
-    // stats + 8 KiB blooms into one driver-built JSON string is
-    // exactly the scale wrongness the parquet checkpoints exist to
-    // avoid. The checkpoint build stays in the parquet domain
-    // (previous checkpoint anti-joined against the tail); the slim
-    // JSON below keeps only names + table metadata. Pre-checkpoint
-    // tables vacuumed by older builds still resolve (JSON fallback).
+    // checkpoint the horizon BEFORE truncating anything: the truncated
+    // commits may be the only carriers of its state
     writeCheckpoint(spark, tablePath, keepFrom)
     if (!checkpointVersions(spark, tablePath).contains(keepFrom))
       throw new IllegalStateException(
         s"vacuum: horizon checkpoint at $keepFrom failed to publish; " +
-        "aborting before any truncation (stats/blooms/DVs would be lost)")
-    // schema/constraints declared at or before the horizon ride the
-    // checkpoint too — truncated commits may have been their only
-    // carriers, and the table's gate must survive retention
-    val schemaField = tableSchema(spark, tablePath, Some(keepFrom))
-      .fold("")(s => s""","schemaB64":"${b64(s.json)}"""")
-    val horizonCons = constraints(spark, tablePath, Some(keepFrom))
-    val consField =
-      if (horizonCons.isEmpty) "" else s""","constraints":${jconstraints(horizonCons)}"""
-    // the keepFrom commit is the ONE retained entry being rewritten:
-    // if it was a streaming batch, its batchId must survive into the
-    // checkpoint line or a replay inside the engine's horizon would no
-    // longer be recognized by committedBatchIds and land twice. (The
-    // TRUNCATED commits' batchIds are still dropped — that is the
-    // documented retention-vs-replay-horizon contract above.)
-    val keepFromLine = commitLine(spark, tablePath, keepFrom)
-    val batchField = {
-      val i = keepFromLine.indexOf("\"batchId\":")
-      if (i < 0) ""
-      else {
-        val rest = keepFromLine.drop(i + 10).takeWhile(c => c.isDigit || c == '-')
-        // the writer identity qualifying the batchId survives too —
-        // the app-scoped ledger must recognize the replay after vacuum
-        val app = batchAppRe.findFirstMatchIn(keepFromLine)
-          .map(m => s""","batchApp":"${m.group(1)}"""").getOrElse("")
-        // the entry's ORIGINAL commit version rides every rewrite
-        // (including re-vacuums of an already-rewritten line), so the
-        // bare-entry legacy rule stays version-faithful after
-        // retention — without it a carried pre-upgrade bare entry
-        // would inherit keepFrom (>= the firstQualV floor) and be
-        // reclassified as a live co-writer, un-suppressing a
-        // qualified writer's replay of that legacy batchId
-        val origV = batchVRe.findFirstMatchIn(keepFromLine)
-          .map(_.group(1).toLong).getOrElse(keepFrom)
-        s""","batchId":$rest$app,"batchV":$origV"""
-      }
-    }
-    // the ORIGINAL commit's wall time survives the rewrite, so
-    // TIMESTAMP AS OF stays monotone across the horizon
-    val tsField = tsMillisRe.findFirstMatchIn(keepFromLine)
-      .map(m => s""""tsMillis":${m.group(1)},""").getOrElse("")
-    // COLUMN-MAPPING + LEDGER evidence the truncated commits may have
-    // been the only carriers of (computed BEFORE truncation):
-    //  - every physical column name any declaration ever used — the
-    //    ADD-after-DROP resurrection guard's domain must survive
-    //    retention, or a re-added name could serve retired data;
-    //  - the first app-qualified ledger version — the bare-entry
-    //    legacy rule must not reclassify a live co-writer's surviving
-    //    entry as pre-upgrade history once the qualified entries
-    //    below it are truncated.
-    val usedPhysField = {
-      val used = usedPhysicalNames(spark, tablePath)
-      if (used.isEmpty) ""
-      else s""","usedPhys":[${used.toSeq.sorted
-        .map(n => "\"" + esc(n) + "\"").mkString(",")}]"""
-    }
-    val firstQualField = {
-      val (entries, floor) = ledgerState(spark, tablePath)
-      (entries.filter(_._1.isDefined).map(_._3) ++ floor).minOption
-        .fold("")(v => s""","firstQualV":$v""")
-    }
-    // the newest pinned TRANSACTION at-or-before the horizon must
-    // survive the rewrite too: a truncated manifest commit may have
-    // been its only carrier, and txnPins() scanning a pins-free log
-    // would silently serve UNPINNED state to transaction-pinned
-    // readers — the mixed-visibility failure the manifest exists to
-    // prevent
-    val horizonPins = versions(spark, tablePath).filter(_ <= keepFrom)
-      .reverseIterator
-      .map(v => extractSection(commitLine(spark, tablePath, v), "pins"))
-      .collectFirst { case Some(body) => s""","pins":{$body}""" }
-      .getOrElse("")
+        "aborting before any truncation (the table state would be lost)")
     val log = new Path(tablePath, LogDir)
-    val cp = new Path(log, f"$keepFrom%08d.json")
-    val out = fs.create(cp, true)
-    try out.write(
-      s"""{"version":$keepFrom,$tsField"adds":${jarr(horizonState)},"removes":[]$schemaField$consField$batchField$horizonPins$usedPhysField$firstQualField,"checkpoint":true}"""
-        .getBytes("UTF-8"))
-    finally out.close()
     val dataDir = new Path(tablePath, DataDir)
     if (fs.exists(dataDir)) fs.listStatus(dataDir).foreach { f =>
       if (!keep.contains(s"$DataDir/${f.getPath.getName}"))
         fs.delete(f.getPath, false)
     }
-    versions(spark, tablePath).filter(_ < keepFrom).foreach { v =>
+    // newest first: a crash mid-truncation leaves a gap-free prefix,
+    // which still resolves (see [[resolveAt]])
+    versions(spark, tablePath).filter(_ < keepFrom).reverse.foreach { v =>
       fs.delete(new Path(log, f"$v%08d.json"), false)
     }
     // parquet checkpoints below the horizon are stale: a snapshot

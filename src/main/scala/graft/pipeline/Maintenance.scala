@@ -153,7 +153,7 @@ object Maintenance {
               .ofEpochMilli(r.getTimestamp(1).getTime).toString
           val batch = if (r.isNullAt(4)) "" else s" batchId=${r.getLong(4)}"
           val flags = (if (!r.getBoolean(5)) " dataChange=false" else "") +
-            (if (r.getBoolean(6)) " checkpoint" else "") +
+            (if (r.getBoolean(6)) " checkpointed" else "") +
             (if (r.getInt(7) > 0) s" dvs=${r.getInt(7)}" else "")
           s"v${r.getLong(0)}$when: +${r.getInt(2)}/-${r.getInt(3)}$batch$flags"
         }.mkString("\n"))

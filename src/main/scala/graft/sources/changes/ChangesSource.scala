@@ -37,8 +37,8 @@ import graft.sources.ParquetRead
   * definition the batch feed uses, so the two cannot drift. Work per
   * trigger is proportional to the CHANGED files (commit lines + their
   * data), never a rescan of the base table; dataChange=false commits
-  * (compaction) and vacuum checkpoint entries are invisible; a
-  * consumer whose start falls below the vacuum horizon fails loudly
+  * (compaction) are invisible; a consumer whose start falls below the
+  * vacuum horizon fails loudly
   * (the [[CommitLog.assertChangesAvailable]] gate) instead of
   * silently skipping history. Exactly-once to a commit-log sink
   * composes with [[CommitLog.appendStream]]'s batchId ledger: a

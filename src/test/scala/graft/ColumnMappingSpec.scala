@@ -220,7 +220,7 @@ class ColumnMappingSpec extends SparkSpec {
       CommitLog.append(spark, t, Seq(2L).toDF("id")) // v3
       CommitLog.vacuum(spark, t, keepFrom = 3L)
       // every declaration mentioning 'tag' was truncated; the horizon
-      // rewrite must have carried the physical-name history
+      // checkpoint must carry the physical-name history
       assert(CommitLog.usedPhysicalNames(spark, t).contains("tag"),
         "vacuum forgot the retired physical names")
       val f = CommitLog.addColumnField(spark, t, "tag", StringType)
@@ -244,10 +244,10 @@ class ColumnMappingSpec extends SparkSpec {
       // a live identity-free co-writer lands batchId 3
       CommitLog.appendStream(spark, t, Seq((100L, "bare")).toDF("id", "s"), 3L)
       // vacuum ABOVE every qualified entry: only the bare entry's
-      // commit (v3) survives with the horizon rewrite
+      // commit (v3) survives the truncation
       CommitLog.vacuum(spark, t, keepFrom = 3L)
-      // appA's brand-new epoch 3 must still land — the floor carried
-      // by the rewrite keeps the bare entry classified as LIVE
+      // appA's brand-new epoch 3 must still land — the checkpoint's
+      // ledger keeps appA's entries, so the bare entry stays LIVE
       assert(CommitLog.appendStream(spark, t,
         Seq((3L, "a3")).toDF("id", "s"), 3L, app = Some("appA")).isDefined,
         "vacuum reclassified a live co-writer's entry as legacy")
@@ -259,10 +259,10 @@ class ColumnMappingSpec extends SparkSpec {
   }
 
   test("vacuum keeps a pre-upgrade bare ledger entry classified as legacy") {
-    // ADVICE r14 #3: the horizon rewrite carries the entry's ORIGINAL
-    // version (batchV), so a carried pre-upgrade bare entry can never
-    // be reclassified as a live co-writer by comparing against the
-    // firstQualV floor — a qualified writer's replay of that legacy
+    // the checkpoint's ledger keeps each entry's
+    // ORIGINAL version, so a pre-upgrade bare entry can never be
+    // reclassified as a live co-writer by comparing against the first
+    // qualified entry — a qualified writer's replay of that legacy
     // batchId must stay suppressed after any number of vacuums
     val t = tempTable()
     try {
@@ -277,8 +277,8 @@ class ColumnMappingSpec extends SparkSpec {
       CommitLog.vacuum(spark, t, keepFrom = 0L)
       assert(CommitLog.replayedBatch(spark, t, "appA", 5L),
         "vacuum rewrite reclassified the legacy bare entry as live")
-      // idempotent under repeated vacuums (the rewrite re-reads its
-      // own carried batchV, never inherits the checkpoint's version)
+      // idempotent under repeated vacuums (the ledger keeps the entry's
+      // own version, never the checkpoint's)
       CommitLog.vacuum(spark, t, keepFrom = 0L)
       assert(CommitLog.replayedBatch(spark, t, "appA", 5L))
       // and the replay itself lands nothing

@@ -524,7 +524,7 @@ class CommitLogSpec extends SparkSpec {
       CommitLog.append(spark, t, Seq((2L, "b")).toDF("id", "s")) // v1: fileB
       CommitLog.append(spark, t, Seq((3L, "c")).toDF("id", "s")) // v2: fileC
       // truncate below v1: v0's file is still LIVE (never removed) and
-      // must survive replay via the checkpointed horizon entry
+      // must survive replay via the horizon checkpoint
       CommitLog.vacuum(spark, t, keepFrom = 1L)
       assert(CommitLog.versions(spark, t) === Seq(1L, 2L))
       assert(CommitLog.read(spark, t).orderBy("id").collect()
@@ -576,9 +576,9 @@ class CommitLogSpec extends SparkSpec {
       val v = CommitLog.appendStream(spark, t,
         Seq((2L, "b")).toDF("id", "s"), batchId = 7L).get // v1, batch 7
       CommitLog.vacuum(spark, t, keepFrom = v)
-      // the rewritten horizon entry is the ONE retained commit: its
-      // batchId must survive so an engine replay inside the horizon
-      // still lands nothing (pre-fix the ledger forgot batch 7 here)
+      // the horizon commit is the ONE retained commit: its batchId must
+      // stay in the ledger so an engine replay inside the horizon still
+      // lands nothing (pre-fix the ledger forgot batch 7 here)
       assert(CommitLog.committedBatchIds(spark, t).contains(7L),
         "checkpoint rewrite dropped the keepFrom commit's batchId")
       assert(CommitLog.appendStream(spark, t,
@@ -634,8 +634,8 @@ class CommitLogSpec extends SparkSpec {
       CommitLog.append(spark, t, Seq((2L, "b")).toDF("id", "s")) // v1
       CommitLog.append(spark, t, Seq((3L, "c")).toDF("id", "s")) // v2
       CommitLog.vacuum(spark, t, keepFrom = 1L)
-      // a consumer starting below the checkpointed horizon would lose
-      // every row the checkpoint carries — Delta CDF errors here; so do we
+      // a consumer starting below the vacuum horizon would miss every
+      // truncated change — Delta CDF errors here; so do we
       intercept[IllegalStateException] {
         CommitLog.readChanges(spark, t, sinceVersion = -1L).count()
       }
@@ -694,6 +694,144 @@ class CommitLogSpec extends SparkSpec {
         assert(CommitLog.read(spark, t, asOf = Some(101L)).count() === 102)
       } finally spark.conf.unset("spark.graft.commitlog.checkpointInterval")
     } finally cleanup(t)
+  }
+
+  test("a checkpoint holds the whole table state: commits below it are never read") {
+    val t = tempTable()
+    val m = tempTable()
+    val copies = Seq.fill(2)(tempTable())
+    spark.conf.set("spark.graft.commitlog.checkpointInterval", "10")
+    try {
+      import spark.implicits._
+      import org.apache.spark.sql.types.StructType
+      CommitLog.declareSchema(spark, t,
+        StructType.fromDDL("id BIGINT, s STRING, tag STRING"))               // v0
+      CommitLog.appendStream(spark, t,
+        Seq((1L, "a", "x")).toDF("id", "s", "tag"), 0L)                      // v1: bare, legacy
+      CommitLog.addConstraint(spark, t, "id_nonneg", "id >= 0")              // v2
+      CommitLog.appendStream(spark, t, Seq((2L, "b")).toDF("id", "s"), 1L,
+        app = Some("appA"))                                                  // v3: qualified
+      CommitLog.appendStream(spark, t, Seq((3L, "c")).toDF("id", "s"), 7L)   // v4: bare, live
+      CommitLog.dropColumn(spark, t, "tag")                                  // v5
+      (6 to 22).foreach(i =>
+        CommitLog.append(spark, t, Seq((i.toLong, s"r$i")).toDF("id", "s"))) // v6..v22
+      assert(CommitLog.latestVersion(spark, t) === 22L)
+      assert(CommitLog.checkpointVersions(spark, t) === Seq(10L, 20L))
+      // a manifest whose newest pins sit below its checkpoint
+      (0 to 15).foreach(i => CommitLog.txnCommit(spark, m, i.toLong, Map("index" -> i.toLong)))
+      (16 to 22).foreach(_ =>
+        CommitLog.commit(spark, m, Seq.empty, Seq.empty, dataChange = false))
+      assert(CommitLog.checkpointVersions(spark, m) === Seq(10L, 20L))
+      def answers(p: String) = (
+        CommitLog.tableSchema(spark, p), CommitLog.constraints(spark, p),
+        CommitLog.usedPhysicalNames(spark, p), CommitLog.committedBatchIds(spark, p),
+        Seq(0L, 1L, 7L).map(CommitLog.replayedBatch(spark, p, "appA", _)),
+        Seq(0L, 1L, 7L).map(CommitLog.versionForBatchId(spark, p, _)),
+        CommitLog.read(spark, p).count())
+      val before = answers(t)
+      assert(before._2 === Map("id_nonneg" -> "id >= 0"))
+      assert(before._3.contains("tag") && !before._1.get.fieldNames.contains("tag"))
+      assert(before._4 === Set(0L, 1L, 7L))
+      // legacy bare entry matches; the live co-writer's does not
+      assert(before._5 === Seq(true, true, false))
+      assert(before._6 === Seq(Some(1L), Some(3L), Some(4L)))
+      val pinsBefore = CommitLog.txnPins(spark, m)
+      assert(pinsBefore === Map("index" -> 15L))
+      // delete every commit below the checkpoint, then read fresh copies
+      // (a new path resolves afresh, with nothing served from memory)
+      Seq(t, m).zip(copies).foreach { case (src, dst) =>
+        (0L until 20L).foreach { v =>
+          val f = new java.io.File(s"$src/_graft_log", f"$v%08d.json")
+          assert(f.delete(), s"fixture: could not delete $f")
+        }
+        org.apache.commons.io.FileUtils.copyDirectory(
+          new java.io.File(src), new java.io.File(dst))
+      }
+      assert(answers(copies(0)) === before)
+      assert(CommitLog.txnPins(spark, copies(1)) === pinsBefore)
+    } finally {
+      spark.conf.unset("spark.graft.commitlog.checkpointInterval")
+      (Seq(t, m) ++ copies).foreach(cleanup)
+    }
+  }
+
+  test("vacuum rewrites no retained commit and keeps the ledger below the horizon") {
+    val t = tempTable()
+    try {
+      import spark.implicits._
+      CommitLog.append(spark, t, Seq((1L, "a")).toDF("id", "s"))                 // v0
+      CommitLog.appendStream(spark, t, Seq((2L, "b")).toDF("id", "s"), 3L,
+        app = Some("appA"))                                                      // v1
+      CommitLog.appendStream(spark, t, Seq((3L, "c")).toDF("id", "s"), 4L)      // v2
+      CommitLog.append(spark, t, Seq((4L, "d")).toDF("id", "s"))                 // v3
+      val log = new java.io.File(s"$t/_graft_log")
+      def commits = log.listFiles.filter(_.getName.endsWith(".json"))
+        .map(f => f.getName -> new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
+        .toMap
+      val before = commits
+      CommitLog.vacuum(spark, t, keepFrom = 2L)
+      val after = commits
+      assert(after.keySet === Set("00000002.json", "00000003.json"))
+      after.foreach { case (n, bytes) =>
+        assert(bytes === before(n), s"vacuum rewrote the retained commit $n")
+      }
+      // batches committed below the horizon are still refused as replays
+      assert(CommitLog.appendStream(spark, t, Seq((2L, "b")).toDF("id", "s"), 3L,
+        app = Some("appA")).isEmpty, "a replay of a truncated batch landed twice")
+      assert(CommitLog.appendStream(spark, t, Seq((2L, "b")).toDF("id", "s"), 3L).isEmpty)
+      assert(CommitLog.read(spark, t).count() === 4)
+    } finally cleanup(t)
+  }
+
+  test("a log with a missing commit is refused, not served as a partial table") {
+    val t = tempTable()
+    try {
+      import spark.implicits._
+      (0 until 3).foreach(i =>
+        CommitLog.append(spark, t, Seq((i.toLong, s"r$i")).toDF("id", "s")))
+      assert(new java.io.File(s"$t/_graft_log/00000001.json").delete())
+      val e = intercept[IllegalStateException](CommitLog.read(spark, t).count())
+      assert(e.getMessage.contains("version 1 is missing"), e.getMessage)
+    } finally cleanup(t)
+  }
+
+  test("a failed periodic checkpoint logs a warning and the commit stands") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{Configurator, Property}
+    val warned = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("graft-checkpoint-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == Level.WARN && e.getLoggerName == "graft.operators.CommitLog")
+          warned.add(e.getMessage.getFormattedMessage)
+    }
+    Configurator.setLevel("graft.operators.CommitLog", Level.WARN)
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    capture.start()
+    ctx.getConfiguration.getRootLogger.addAppender(capture, null, null)
+    ctx.updateLoggers()
+    val t = tempTable()
+    spark.conf.set("spark.graft.commitlog.checkpointInterval", "2")
+    try {
+      import spark.implicits._
+      CommitLog.append(spark, t, Seq((0L, "a")).toDF("id", "s"))             // v0
+      CommitLog.append(spark, t, Seq((1L, "b")).toDF("id", "s"))             // v1
+      // the pointer write fails: its path is taken by a directory
+      assert(new java.io.File(s"$t/_graft_log/_last_checkpoint").mkdir())
+      assert(warned.isEmpty, warned.toArray.mkString("\n"))
+      assert(CommitLog.append(spark, t, Seq((2L, "c")).toDF("id", "s")) === 2L)
+      assert(warned.size === 1, warned.toArray.mkString("\n"))
+      assert(warned.peek.contains(t) && warned.peek.contains("v2"), warned.peek)
+      assert(CommitLog.read(spark, t).count() === 3)
+    } finally {
+      spark.conf.unset("spark.graft.commitlog.checkpointInterval")
+      ctx.getConfiguration.getRootLogger.removeAppender("graft-checkpoint-capture")
+      ctx.updateLoggers()
+      capture.stop()
+      cleanup(t)
+    }
   }
 
   test("checkpointed scan pruning stays in the parquet domain: survivor names only reach the driver") {
@@ -942,7 +1080,7 @@ class CommitLogSpec extends SparkSpec {
         assert(CommitLog.read(spark, t).count() === 10)
         assert(CommitLog.read(spark, t).filter("id IN (3, 6)").count() === 0,
           "deletes resurrected after checkpoint-seeded resolution")
-        // vacuum rewrites the horizon as a JSON checkpoint: vectors ride it
+        // vacuum checkpoints the horizon: vectors ride the checkpoint
         CommitLog.vacuum(spark, t, keepFrom = 12L)
         assert(CommitLog.read(spark, t).count() === 10)
         assert(CommitLog.read(spark, t).filter("id IN (3, 6)").count() === 0,
@@ -1005,6 +1143,10 @@ class CommitLogSpec extends SparkSpec {
       assert(stamps.forall(_ != null))
       assert(stamps.sliding(2).forall(p => p(0).before(p(1))),
         "commit timestamps must be strictly monotone")
+      // the checkpoint column marks the versions a parquet checkpoint holds
+      CommitLog.writeCheckpoint(spark, t, 3L)
+      assert(CommitLog.history(spark, t).filter(col("checkpoint"))
+        .collect().map(_.getLong(0)).toSeq === Seq(3L))
       // below the vacuum horizon the snapshot is gone: restore refuses
       CommitLog.vacuum(spark, t, keepFrom = 5L)
       val e = intercept[IllegalArgumentException] { CommitLog.restore(spark, t, 2L) }
@@ -1044,7 +1186,7 @@ class CommitLogSpec extends SparkSpec {
         val latest = CommitLog.latestVersion(spark, t)
         CommitLog.writeCheckpoint(spark, t, latest)
         assert(CommitLog.read(spark, t).count() === 3333)
-        // vacuum: the horizon rewrite keeps the ref (no byte transit),
+        // vacuum: the horizon checkpoint keeps the ref (no byte transit),
         // the orphan sweep drops the REPLACED sidecar, keeps the live one
         // (grace window zeroed so the just-written orphan is sweepable)
         spark.conf.set("spark.graft.commitlog.dvSweepGraceMs", "0")
@@ -1086,7 +1228,7 @@ class CommitLogSpec extends SparkSpec {
         CommitLog.versionAtTimestamp(spark, t, ts(0) - 1)
       }
       assert(e.getMessage.contains("vacuum horizon"), e.getMessage)
-      // vacuum rewrites the horizon line but keeps its original stamp
+      // vacuum leaves the horizon line, and so its stamp, untouched
       CommitLog.vacuum(spark, t, keepFrom = 1L)
       assert(CommitLog.commitTimestampMillis(spark, t, 1L) === Some(ts(1)))
       assert(CommitLog.versionAtTimestamp(spark, t, ts(2)) === 2L)
@@ -1547,9 +1689,9 @@ class CommitLogSpec extends SparkSpec {
   }
 
   test("vacuum preserves the newest transaction pins (r13 regression)") {
-    // the horizon rewrite kept schema/constraints/batchId but dropped
-    // the pins field — vacuuming a manifest silently unpinned every
-    // transaction-pinned reader
+    // vacuum once rewrote the horizon line and dropped its pins field,
+    // silently unpinning every transaction-pinned reader; the horizon
+    // checkpoint now carries the pins
     val m = tempTable()
     try {
       CommitLog.txnCommit(spark, m, 1L, Map("index" -> 3L, "norms" -> 4L))
